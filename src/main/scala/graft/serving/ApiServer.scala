@@ -3,13 +3,18 @@ package graft.serving
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
-import scala.util.Try
+import scala.jdk.CollectionConverters._
+import scala.util.{Failure, Success, Try}
 
+import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.ml.PipelineModel
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lower}
+import org.apache.spark.sql.types.{DoubleType, StringType}
 
-import graft.ml.{Serve, Trainer}
+import graft.ml.{FoodSchema, Serve, Trainer}
+import graft.operators.GatedBroadcast
 
 /** The reference's serving API (api_server/api.py:172-269), minus
   * Flask: `POST /predict/<model_id>` routes by model type over the
@@ -19,13 +24,24 @@ import graft.ml.{Serve, Trainer}
   * (README.md:116-132) — `GET /find_allergen/model<k>?allergy=x`,
   * `GET /food_details/model<k>/<id>`, `GET /stats/model<k>` — serve
   * model k's cumulative data slice from the food_data artifact. Built
-  * on the JDK HTTP server — no extra dependencies — with the engine's
-  * distributed recommend path instead of the reference's driver-side
-  * sklearn KNN.
+  * on the JDK HTTP server — no extra dependencies.
+  *
+  * No route submits a Spark job while the artifacts are driver-resident:
+  * models 1, 2, 4 and 5 always score driver-locally (Serve.local*), and
+  * while food_data's measured row count is within
+  * `GatedBroadcast.rowLimit / 10` (the gate of a broadcast rebuilt per
+  * use: holding a copy on the driver is the first half of a broadcast),
+  * the constructor also collects model 3's recommendation snapshot and
+  * food_data's columns, and `/predict/3`, `/find_allergen` and
+  * `/food_details` answer from those. Above the gate they run as Spark
+  * jobs (Serve.recommend, pruned parquet scans): that distributed path
+  * is the scale path and the parity oracle ApiServerSpec holds the
+  * driver-resident one to, byte for byte.
   *
   * Request payloads are the reference's flat JSON objects
   * (feature name -> number); absent features default to 0.0
-  * (api.py:164).
+  * (api.py:164), and a malformed body or a non-numeric feature value is
+  * a 400, where the reference's `float(...)` raises.
   */
 class ApiServer(spark: SparkSession, modelDir: String, port: Int = 0) {
 
@@ -34,7 +50,25 @@ class ApiServer(spark: SparkSession, modelDir: String, port: Int = 0) {
       Try(Trainer.loadModel(modelDir, k)).toOption.map(k -> _)
     }.toMap
 
-  private val server = HttpServer.create(new InetSocketAddress(port), 0)
+  private val foods: Option[DataFrame] =
+    Try(spark.read.parquet(s"$modelDir/food_data")).toOption
+  private val foodCount: Long = foods.map(_.count()).getOrElse(0L)
+
+  /** Driver-resident copies of the data routes' artifacts, held while
+    * food_data's measured row count is within the gate; None above it,
+    * where those routes run distributed. */
+  private val resident: Option[DataFrame] = foods.filter(df =>
+    foodCount <= GatedBroadcast.rowLimit(df) / 10)
+  private val foodColumns: Option[ApiServer.FoodColumns] =
+    resident.filter(ApiServer.FoodColumns.fits)
+      .map(ApiServer.FoodColumns.load(_, foodCount.toInt))
+  // a missing snapshot keeps the distributed path, which reports it per
+  // request as it always has
+  private val recoSnapshot: Option[Serve.RecoSnapshot] =
+    if (resident.isEmpty || !models.contains(3)) None
+    else Try(Serve.loadRecoSnapshot(spark, s"$modelDir/reco_snapshot")).toOption
+
+  private val server = ApiServer.createServer(port)
   // the JDK server's default executor is the caller thread — serialize
   // -free concurrent request handling needs a real pool (the driver-side
   // scoring in Serve.local* is stateless, so handlers are thread-safe).
@@ -45,11 +79,19 @@ class ApiServer(spark: SparkSession, modelDir: String, port: Int = 0) {
 
   def boundPort: Int = server.getAddress.getPort
 
-  /** Parse the reference's flat {"name": number, ...} payload. */
+  /** Parse the reference's flat {"name": number, ...} payload. Throws
+    * IllegalArgumentException on a body that is not a JSON object or a
+    * feature whose value is not a number; other keys' non-numeric
+    * values are ignored, as the reference reads only its features. */
   private[serving] def parseFlatJson(body: String): Map[String, Double] = {
-    val entry = """"((?:[^"\\]|\\.)*)"\s*:\s*(-?[0-9]+(?:\.[0-9]+)?([eE][+-]?[0-9]+)?)""".r
-    entry.findAllMatchIn(body).map { m =>
-      m.group(1).replace("\\\"", "\"") -> m.group(2).toDouble
+    val root = Try(ApiServer.Json.readTree(body)).toOption.filter(_.isObject)
+      .getOrElse(throw new IllegalArgumentException(
+        "request body must be a JSON object"))
+    root.properties().asScala.flatMap { e =>
+      if (e.getValue.isNumber) Some(e.getKey -> e.getValue.asDouble)
+      else if (FoodSchema.numericCols.contains(e.getKey))
+        throw new IllegalArgumentException(s"${e.getKey} must be a number")
+      else None
     }.toMap
   }
 
@@ -69,21 +111,33 @@ class ApiServer(spark: SparkSession, modelDir: String, port: Int = 0) {
     ex.close()
   }
 
-  /** Single-probe requests score driver-locally (Serve.local*) — no
-    * Spark job per HTTP request; the reference instead had to disable
-    * whole-stage codegen to make per-request Spark plans tolerable
-    * (api.py:58). Model 3 stays distributed: it scans the snapshot
-    * table, which is a data-plane operation. */
+  private def errorJson(e: Throwable): String =
+    s"""{"error":"${jsonEscape(String.valueOf(e.getMessage))}"}"""
+
+  /** One JSON value of a food_data field: strings quoted, NULL and the
+    * non-JSON NaN/Infinity as null, other values as their toString. */
+  private def jsonValue(v: Any): String = v match {
+    case null => "null"
+    case s: String => s""""${jsonEscape(s)}""""
+    case d: Double if d.isNaN || d.isInfinite => "null"
+    case f: Float if f.isNaN || f.isInfinite => "null"
+    case x => x.toString
+  }
+
   private def predict(modelId: Int, payload: Map[String, Double]): String =
     modelId match {
       case 1 | 2 =>
         val cluster = Serve.localCluster(models(modelId), payload)
         s"""{"model_id":$modelId,"model_type":"clustering","prediction":$cluster}"""
       case 3 =>
-        val recs = Serve.recommend(spark, models(3),
-          s"$modelDir/reco_snapshot", payload).collect()
-        val items = recs.map { r =>
-          s"""{"description":"${jsonEscape(r.getString(0))}","cosine_distance":${"%.4f".format(r.getDouble(1))}}"""
+        val recs = recoSnapshot match {
+          case Some(snap) => Serve.localRecommend(models(3), snap, payload)
+          case None =>
+            Serve.recommend(spark, models(3), s"$modelDir/reco_snapshot",
+              payload).collect().toSeq.map(r => r.getString(0) -> r.getDouble(1))
+        }
+        val items = recs.map { case (desc, dist) =>
+          s"""{"description":"${jsonEscape(desc)}","cosine_distance":${"%.4f".format(dist)}}"""
         }.mkString("[", ",", "]")
         s"""{"model_id":3,"model_type":"recommendation","recommendations":$items}"""
       case 4 =>
@@ -103,11 +157,12 @@ class ApiServer(spark: SparkSession, modelDir: String, port: Int = 0) {
         if (!models.contains(k))
           // known-but-unloaded is 404, matching api.py:192,203,216,224
           respond(ex, 404, s"""{"error":"model $k not loaded"}""")
-        else
-          Try(predict(k, parseFlatJson(body))).fold(
-            e => respond(ex, 500,
-              s"""{"error":"${jsonEscape(String.valueOf(e.getMessage))}"}"""),
+        else Try(parseFlatJson(body)) match {
+          case Failure(e) => respond(ex, 400, errorJson(e))
+          case Success(payload) => Try(predict(k, payload)).fold(
+            e => respond(ex, 500, errorJson(e)),
             json => respond(ex, 200, json))
+        }
       case ("POST", _) =>
         respond(ex, 400,
           s"""{"error":"model_id must be 1..${Trainer.NumModels}"}""")
@@ -119,14 +174,11 @@ class ApiServer(spark: SparkSession, modelDir: String, port: Int = 0) {
   // ------------------------------------------------------------------
   // README data-surface routes (reference README.md:116-132): each
   // serves model k's cumulative training slice (rn < n*k/NumModels)
-  // from the food_data artifact trainAll wrote. These are data-plane
-  // operations, so they run as (tiny, pruned) Spark jobs — the scan
-  // pushes both the slice bound and the route predicate into parquet.
+  // from the food_data artifact trainAll wrote — from its
+  // driver-resident columns within the gate, otherwise as (tiny,
+  // pruned) Spark jobs whose scan pushes both the slice bound and the
+  // route predicate into parquet.
   // ------------------------------------------------------------------
-
-  private val foods: Option[org.apache.spark.sql.DataFrame] =
-    Try(spark.read.parquet(s"$modelDir/food_data")).toOption
-  private val foodCount: Long = foods.map(_.count()).getOrElse(0L)
 
   /** Parse the `model<k>` path segment; None for malformed/unknown. */
   private def modelSeg(seg: String): Option[Int] =
@@ -137,8 +189,11 @@ class ApiServer(spark: SparkSession, modelDir: String, port: Int = 0) {
 
   private def sliceBound(k: Int): Long = foodCount * k / Trainer.NumModels
 
-  private def withSlice(ex: HttpExchange, seg: String)(
-      f: (Int, org.apache.spark.sql.DataFrame) => Unit): Unit =
+  /** Model k's slice of food_data, for the distributed path. */
+  private def slice(k: Int): DataFrame =
+    foods.get.filter(col(Trainer.RnCol) < sliceBound(k))
+
+  private def withSlice(ex: HttpExchange, seg: String)(f: Int => Unit): Unit =
     (modelSeg(seg), foods) match {
       case (None, _) =>
         respond(ex, 404, """{"error":"unknown model"}""")
@@ -149,16 +204,14 @@ class ApiServer(spark: SparkSession, modelDir: String, port: Int = 0) {
         // describing its data would report on a model that was never
         // trained — 404, matching the reference's per-model load flags
         respond(ex, 404, s"""{"error":"model $k not loaded"}""")
-      case (Some(k), Some(df)) =>
-        f(k, df.filter(org.apache.spark.sql.functions.col(Trainer.RnCol) <
-          sliceBound(k)))
+      case (Some(k), _) => f(k)
     }
 
   /** GET /stats/model<k> — record count of the model's data slice
     * (README.md:128-132). */
   server.createContext("/stats/", (ex: HttpExchange) => {
     val seg = ex.getRequestURI.getPath.stripPrefix("/stats/")
-    withSlice(ex, seg) { (k, _) =>
+    withSlice(ex, seg) { k =>
       // contiguous index => the slice size is n*k/NumModels by
       // construction; no job needed for a count
       respond(ex, 200,
@@ -168,9 +221,8 @@ class ApiServer(spark: SparkSession, modelDir: String, port: Int = 0) {
 
   /** GET /find_allergen/model<k>?allergy=<name> — case-insensitive
     * substring search over the slice's descriptions
-    * (README.md:116-120). */
+    * (README.md:116-120): the first 100 matches by id. */
   server.createContext("/find_allergen/", (ex: HttpExchange) => {
-    import org.apache.spark.sql.functions.{col, lower}
     val seg = ex.getRequestURI.getPath.stripPrefix("/find_allergen/")
     // parse the RAW query: getQuery already percent-decodes, so using it
     // would both double-decode (throwing on literal '%') and let an
@@ -185,18 +237,22 @@ class ApiServer(spark: SparkSession, modelDir: String, port: Int = 0) {
     (allergy, seg) match {
       case (None, _) =>
         respond(ex, 400, """{"error":"allergy query parameter required"}""")
-      case (Some(a), _) => withSlice(ex, seg) { (k, slice) =>
-        val hits = slice
-          // Locale.ROOT to match Spark's locale-independent lower():
-          // default-locale toLowerCase maps 'I' to dotless-i under a
-          // Turkish JVM locale and the match silently fails
-          .filter(lower(col(graft.ml.FoodSchema.descriptionCol))
-            .contains(a.toLowerCase(java.util.Locale.ROOT)))
-          .select(col(Trainer.RnCol), col(graft.ml.FoodSchema.descriptionCol))
-          .orderBy(col(Trainer.RnCol))
-          .limit(100).collect()
-        val items = hits.map { r =>
-          s"""{"id":${r.getLong(0)},"description":"${jsonEscape(r.getString(1))}"}"""
+      case (Some(a), _) => withSlice(ex, seg) { k =>
+        // Locale.ROOT to match Spark's locale-independent lower():
+        // default-locale toLowerCase maps 'I' to dotless-i under a
+        // Turkish JVM locale and the match silently fails
+        val term = a.toLowerCase(java.util.Locale.ROOT)
+        val hits = foodColumns match {
+          case Some(c) => c.matching(term, sliceBound(k), ApiServer.MaxMatches)
+          case None => slice(k)
+            .filter(lower(col(FoodSchema.descriptionCol)).contains(term))
+            .select(col(Trainer.RnCol), col(FoodSchema.descriptionCol))
+            .orderBy(col(Trainer.RnCol))
+            .limit(ApiServer.MaxMatches).collect().toSeq
+            .map(r => r.getLong(0) -> r.getString(1))
+        }
+        val items = hits.map { case (id, desc) =>
+          s"""{"id":$id,"description":"${jsonEscape(desc)}"}"""
         }.mkString("[", ",", "]")
         respond(ex, 200,
           s"""{"model":"model$k","allergy":"${jsonEscape(a)}",""" +
@@ -208,32 +264,28 @@ class ApiServer(spark: SparkSession, modelDir: String, port: Int = 0) {
   /** GET /food_details/model<k>/<id> — point lookup by the stable row
     * id within the model's slice (README.md:122-126). */
   server.createContext("/food_details/", (ex: HttpExchange) => {
-    import org.apache.spark.sql.functions.col
     val parts = ex.getRequestURI.getPath
       .stripPrefix("/food_details/").split("/")
     (parts.lift(0), parts.lift(1).flatMap(s => Try(s.toLong).toOption)) match {
-      case (Some(seg), Some(id)) => withSlice(ex, seg) { (k, slice) =>
-        slice.filter(col(Trainer.RnCol) === id).collect().headOption match {
+      case (Some(seg), Some(id)) => withSlice(ex, seg) { k =>
+        val fields = foodColumns match {
+          case Some(c) =>
+            if (id >= 0 && id < sliceBound(k)) Some(c.row(id.toInt)) else None
+          case None =>
+            slice(k).filter(col(Trainer.RnCol) === id).collect().headOption
+              .map(r => r.schema.fieldNames.toSeq.zip(r.toSeq)
+                .filter(_._1 != Trainer.RnCol))
+        }
+        fields match {
           case None =>
             respond(ex, 404,
               s"""{"error":"id $id not in model$k's slice"}""")
-          case Some(row) =>
-            val fields = row.schema.fields.zipWithIndex
-              .filter { case (f, _) => f.name != Trainer.RnCol }
-              .map { case (f, i) =>
-                val v =
-                  if (row.isNullAt(i)) "null"
-                  else row.get(i) match {
-                    case s: String => s""""${jsonEscape(s)}""""
-                    // NaN/Infinity are not legal JSON number literals
-                    case d: Double if d.isNaN || d.isInfinite => "null"
-                    case f: Float if f.isNaN || f.isInfinite => "null"
-                    case x => x.toString
-                  }
-                s""""${jsonEscape(f.name)}":$v"""
-              }.mkString("{", ",", "}")
+          case Some(fs) =>
+            val details = fs.map { case (name, v) =>
+              s""""${jsonEscape(name)}":${jsonValue(v)}"""
+            }.mkString("{", ",", "}")
             respond(ex, 200,
-              s"""{"model":"model$k","id":$id,"details":$fields}""")
+              s"""{"model":"model$k","id":$id,"details":$details}""")
         }
       }
       case _ =>
@@ -262,4 +314,95 @@ class ApiServer(spark: SparkSession, modelDir: String, port: Int = 0) {
 
   def start(): ApiServer = { server.start(); this }
   def stop(): Unit = { server.stop(0); pool.shutdown() }
+}
+
+object ApiServer {
+  // The JDK server reads this once per JVM, when it creates its first
+  // server. Off (its default), Nagle's algorithm holds a response's
+  // second segment for the client's delayed ACK: a ~40 ms floor under
+  // every request on a keep-alive connection.
+  System.setProperty("sun.net.httpserver.nodelay", "true")
+
+  /** Every server is created here, so the property above is set first. */
+  private def createServer(port: Int): HttpServer =
+    HttpServer.create(new InetSocketAddress(port), 0)
+
+  private val Json = new ObjectMapper()
+    .enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+
+  /** /find_allergen's cap on returned matches. */
+  private val MaxMatches = 100
+
+  /** food_data on the driver, one array per column, indexed by its
+    * contiguous `__graft_rn`: `Array[Double]` per double column (NULL
+    * held as NaN, which renders as the same JSON null), `Array[String]`
+    * per string column. Spark's `lower()` maps an all-ASCII string as
+    * `toLowerCase(Locale.ROOT)` does; for the other descriptions, whose
+    * mapping depends on Spark's case rules, `lowered` keeps what Spark
+    * returned (null for ASCII ones, to hold no second copy). */
+  private final class FoodColumns(
+      names: Array[String], columns: Array[AnyRef],
+      descriptions: Array[String], lowered: Array[String]) {
+
+    /** The first `limit` (id, description) with id < `bound` whose
+      * lowered description contains `term`. */
+    def matching(term: String, bound: Long, limit: Int): Seq[(Long, String)] = {
+      val out = Seq.newBuilder[(Long, String)]
+      var n = 0
+      var i = 0
+      while (i < bound && n < limit) {
+        val d = descriptions(i)
+        val l = if (lowered(i) != null) lowered(i)
+          else if (d != null) d.toLowerCase(java.util.Locale.ROOT) else null
+        if (l != null && l.contains(term)) {
+          out += (i.toLong -> d); n += 1
+        }
+        i += 1
+      }
+      out.result()
+    }
+
+    /** Row `id`'s fields in food_data's column order. */
+    def row(id: Int): Seq[(String, Any)] =
+      names.indices.map(c => names(c) -> scala.runtime.ScalaRunTime.array_apply(columns(c), id))
+  }
+
+  private object FoodColumns {
+    /** Whether every column but the id is a double or a string, with a
+      * string description: the shapes FoodColumns holds. */
+    def fits(df: DataFrame): Boolean =
+      df.schema.forall(f => f.name == Trainer.RnCol ||
+        f.dataType == DoubleType || f.dataType == StringType) &&
+        df.schema.exists(f => f.name == FoodSchema.descriptionCol &&
+          f.dataType == StringType)
+
+    /** Collects `df`'s `n` rows: one job, and one more to lowercase the
+      * non-ASCII descriptions only if there are any, since Spark's first
+      * `lower()` of such a string starts its case-mapping library (over
+      * a second on a 4-core box). */
+    def load(df: DataFrame, n: Int): FoodColumns = {
+      val fields = df.schema.fields.filter(_.name != Trainer.RnCol)
+      val columns = fields.map[AnyRef](f =>
+        if (f.dataType == DoubleType) new Array[Double](n) else new Array[String](n))
+      df.select(col(Trainer.RnCol) +: fields.toSeq.map(f => col(f.name)): _*)
+        .collect().foreach { r =>
+          val id = r.getLong(0).toInt
+          fields.indices.foreach { c =>
+            columns(c) match {
+              case d: Array[Double] =>
+                d(id) = if (r.isNullAt(c + 1)) Double.NaN else r.getDouble(c + 1)
+              case s: Array[String] => s(id) = r.getString(c + 1)
+            }
+          }
+        }
+      val desc = columns(fields.indexWhere(_.name == FoodSchema.descriptionCol))
+        .asInstanceOf[Array[String]]
+      val lowered = new Array[String](n)
+      if (desc.exists(d => d != null && d.exists(_ >= 0x80)))
+        df.where(col(FoodSchema.descriptionCol).rlike("[^\\x00-\\x7F]"))
+          .select(col(Trainer.RnCol), lower(col(FoodSchema.descriptionCol)))
+          .collect().foreach(r => lowered(r.getLong(0).toInt) = r.getString(1))
+      new FoodColumns(fields.map(_.name), columns, desc, lowered)
+    }
+  }
 }

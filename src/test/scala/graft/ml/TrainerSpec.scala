@@ -184,11 +184,47 @@ class TrainerSpec extends AnyFunSuite {
       Map.empty[String, Double],
       Map("Protein-G" -> 45.0, "Energy-KCAL" -> 900.0,
         "Carbohydrate, by difference-G" -> 80.0))
+    val m3 = Trainer.loadModel(out, 3)
+    val snap = Serve.loadRecoSnapshot(spark, s"$out/reco_snapshot")
+    assert(snap.size == 120)
     payloads.foreach { p =>
       val input = Serve.inputRow(spark, p)
       assert(Serve.localCluster(m1, p) == Serve.predictCluster(m1, input))
       assert(Serve.localEnergy(m4, p) == Serve.predictEnergy(m4, input))
       assert(Serve.localProtein(m5, p) == Serve.classifyProtein(m5, input))
+      // exact, distances included: same rows, same bits, same order
+      val distributed = Serve.recommend(spark, m3, s"$out/reco_snapshot", p)
+        .collect().toSeq.map(r => r.getString(0) -> r.getDouble(1))
+      assert(Serve.localRecommend(m3, snap, p) == distributed)
+    }
+  }
+
+  test("zscale equals the fitted scaler's transform element for element") {
+    import org.apache.spark.ml.feature.StandardScalerModel
+    import org.apache.spark.ml.linalg.{Vector => MlVector, Vectors}
+    val out = java.nio.file.Files.createTempDirectory("graft_z_").toString
+    Trainer.trainAll(syntheticFood(200), Seq("description"), out)
+    val m3 = Trainer.loadModel(out, 3)
+    val scaler = m3.stages.collectFirst { case s: StandardScalerModel => s }.get
+    val g = new scala.util.Random(17)
+    val payloads = Map.empty[String, Double] +: (1 to 24).map(_ =>
+      FoodSchema.numericCols.take(6).map(_ -> g.nextDouble() * 500).toMap)
+    val quotientDiffers = payloads.exists { p =>
+      val x = FoodSchema.numericCols.map(p.getOrElse(_, 0.0))
+      x.indices.exists(i => scaler.std(i) != 0.0 &&
+        (x(i) - scaler.mean(i)) / scaler.std(i) !=
+          (x(i) - scaler.mean(i)) * (1.0 / scaler.std(i)))
+    }
+    // the payloads can tell a quotient from the scaler's product
+    assert(quotientDiffers)
+    payloads.foreach { p =>
+      val fitted = m3.transform(Serve.inputRow(spark, p))
+        .select("scaled_features").head().getAs[MlVector](0).toArray
+      val local = Serve.zscale(scaler,
+        Vectors.dense(FoodSchema.numericCols.map(p.getOrElse(_, 0.0)).toArray))
+        .toArray
+      assert(local.length == fitted.length)
+      local.indices.foreach(i => assert(local(i) == fitted(i), s"feature $i of $p"))
     }
   }
 }

@@ -3,10 +3,12 @@ package graft.serving
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ml.Trainer
+import graft.operators.GatedBroadcast
 
 class ApiServerSpec extends AnyFunSuite {
 
@@ -42,6 +44,104 @@ class ApiServerSpec extends AnyFunSuite {
     client.send(HttpRequest.newBuilder()
       .uri(URI.create(s"http://localhost:${server.boundPort}$path"))
       .GET().build(), HttpResponse.BodyHandlers.ofString())
+
+  /** (status, body) of one request to `s`: a POST when `body` is given. */
+  private def call(s: ApiServer, path: String,
+      body: Option[String] = None): (Int, String) = {
+    val b = HttpRequest.newBuilder()
+      .uri(URI.create(s"http://localhost:${s.boundPort}$path"))
+    val r = client.send(body.fold(b.GET())(x =>
+      b.POST(HttpRequest.BodyPublishers.ofString(x))).build(),
+      HttpResponse.BodyHandlers.ofString())
+    (r.statusCode(), r.body())
+  }
+
+  /** A server over `dir` built with the gate at 0 rows: every data
+    * route takes the distributed path. */
+  private def gatedOff(dir: String): ApiServer = {
+    val prev = spark.conf.getOption(GatedBroadcast.ConfKey)
+    spark.conf.set(GatedBroadcast.ConfKey, "0")
+    try new ApiServer(spark, dir).start()
+    finally prev.fold(spark.conf.unset(GatedBroadcast.ConfKey))(
+      spark.conf.set(GatedBroadcast.ConfKey, _))
+  }
+
+  /** Spark jobs started while `body` runs. The listener bus delivers in
+    * order, so once a marked job of our own is seen, every earlier job
+    * has been counted. */
+  private def jobsDuring(body: => Unit): Int = {
+    val marker = "graft.spec.marker"
+    val seen = new java.util.concurrent.LinkedBlockingQueue[java.lang.Boolean]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.put(Option(e.properties).exists(_.getProperty(marker) != null))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty(marker, "end")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(marker, null)
+      Iterator.continually(Option(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .getOrElse(fail("listener bus did not drain")).booleanValue)
+        .takeWhile(!_).size
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Milliseconds per request for `n` sequential GETs of `path` on one
+    * keep-alive connection. */
+  private def keepAliveMs(port: Int, path: String, n: Int): Seq[Double] = {
+    val sock = new java.net.Socket("localhost", port)
+    try {
+      sock.setTcpNoDelay(true)
+      val out = sock.getOutputStream
+      val in = new java.io.BufferedInputStream(sock.getInputStream)
+      val request = s"GET $path HTTP/1.1\r\nHost: localhost\r\n\r\n"
+        .getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+      (1 to n).map { _ =>
+        val t0 = System.nanoTime()
+        out.write(request)
+        out.flush()
+        val head = new StringBuilder
+        while (!head.endsWith("\r\n\r\n")) {
+          val c = in.read()
+          assert(c >= 0, s"connection closed after: $head")
+          head += c.toChar
+        }
+        assert(head.startsWith("HTTP/1.1 200"), head.toString)
+        val len = """(?i)content-length:\s*(\d+)""".r
+          .findFirstMatchIn(head).get.group(1).toInt
+        assert(in.readNBytes(len).length == len)
+        (System.nanoTime() - t0) / 1e6
+      }
+    } finally sock.close()
+  }
+
+  /** Trained on rows that tie and on descriptions ASCII and not: 20
+    * feature rows, each under 12 descriptions (equal distances, broken
+    * by description). Of the non-ASCII descriptions, half lead with
+    * U+FF21 and half with U+1F359, which order one way as UTF-8 bytes
+    * (Spark's string order) and the other as UTF-16 units (String's);
+    * model 3's slice holds both kinds in some tied groups. The words
+    * differ between lowercasing rules. */
+  private lazy val parityDir: String = {
+    import spark.implicits._
+    val leads = Seq("Ａ", "\uD83C\uDF59")
+    val words = Seq("İSTANBUL kebap", "ΣΟΦΙΑ σαλάτα ΟΔΟΣ", "Straße Brot",
+      "Crème BRÛLÉE")
+    val ascii = Seq("ISTANBUL Kebap", "Sesame BAR", "plain rice", "KEFIR")
+    val out = java.nio.file.Files.createTempDirectory("graft_api_parity_").toString
+    val data = Trainer.prepare((0 until 240).map { i =>
+      val g = i % 20
+      (g % 8 * 4.0 + 1.0, g * 35.0, g % 5 * 3.0, g % 3 * 7.0 + g,
+        if (i >= 200) s"Plain ${ascii(i % 4)} #$i"
+        else s"${leads(i / 20 % 2)} ${words(i % 4)} #$i")
+    }.toDF("Protein-G", "Energy-KCAL", "Total lipid (fat)-G",
+      "Carbohydrate, by difference-G", "description"))
+    Trainer.trainAll(data, Seq("description"), out)
+    out
+  }
 
   test("health reports all five models loaded in the reference shape") {
     val r = get("/health")
@@ -157,5 +257,92 @@ class ApiServerSpec extends AnyFunSuite {
     assert(m == Map("Protein-G" -> 20.5,
       "Vitamin D (D2 + D3)-UG" -> -100.0, "n" -> 3.0))
     s.stop()
+  }
+
+  test("malformed JSON and non-numeric feature values are rejected with 400") {
+    val bad = Seq("", "not json", "{", """{"Protein-G": 1.0,}""",
+      """{"Protein-G": 1.0} trailing""", "[1, 2]", "42",
+      """{"Protein-G": "abc"}""", """{"Protein-G": "30"}""",
+      """{"Energy-KCAL": null}""", """{"Protein-G": true}""",
+      """{"Protein-G": [1]}""", """{"Protein-G": NaN}""")
+    bad.foreach { body =>
+      val r = post("/predict/1", body)
+      assert(r.statusCode() == 400, s"$body -> ${r.statusCode()} ${r.body()}")
+      assert(r.body().startsWith("""{"error":"""))
+    }
+    assert(post("/predict/3", """{"Zinc, Zn-MG": "x"}""").statusCode() == 400)
+    // keys the models do not read are not validated, as in the reference
+    assert(post("/predict/1", """{"note": "x", "Protein-G": 3}""")
+      .statusCode() == 200)
+    assert(post("/predict/1", "{}").statusCode() == 200)
+  }
+
+  test("driver-resident and distributed paths answer byte for byte") {
+    val resident = new ApiServer(spark, parityDir).start()
+    val distributed = gatedOff(parityDir)
+    try {
+      val g = new scala.util.Random(7)
+      def payload(values: Seq[Double]): String =
+        Seq("Protein-G", "Energy-KCAL", "Total lipid (fat)-G",
+          "Carbohydrate, by difference-G").zip(values)
+          .map { case (c, v) => s""""$c": $v""" }.mkString("{", ",", "}")
+      // every training row's features (each tied 10 ways), random
+      // probes, and the all-default probe
+      val predicts = (0 until 20).map(gr => payload(Seq(gr % 8 * 4.0 + 1.0,
+          gr * 35.0, gr % 5 * 3.0, gr % 3 * 7.0 + gr))) ++
+        (1 to 10).map(_ => payload(Seq.fill(4)(g.nextDouble() * 600))) :+ "{}"
+      val terms = Seq("İSTANBUL", "istanbul", "i̇stanbul", "ΣΟΦΙΑ", "σοφια",
+        "οδος", "ΟΔΟΣ", "STRASSE", "straße", "CRÈME", "brûlée",
+        "KEBAP", "plain", "\uD83C\uDF59", "#1", "zzz-no-match", "")
+      val requests =
+        predicts.map(b => ("/predict/3", Some(b))) ++
+        (1 to 5).flatMap(k => terms.map(t => (s"/find_allergen/model$k?allergy=" +
+          java.net.URLEncoder.encode(t, "UTF-8"), None))) ++
+        (1 to 5).flatMap(k => (Seq(-1L, 0L, 47L, 48L, 143L, 150L, 239L, 240L,
+          999999L) ++ Seq.fill(5)(g.nextInt(240).toLong))
+          .map(id => (s"/food_details/model$k/$id", None)))
+      val answers = g.shuffle(requests).map { case (path, body) =>
+        val a = call(resident, path, body)
+        val b = call(distributed, path, body)
+        assert(a == b, s"$path ${body.getOrElse("")}")
+        a
+      }
+      // the cases the parity has to hold on actually occur
+      val ok = answers.filter(_._1 == 200).map(_._2)
+      assert(answers.count(_._1 == 404) >= 5) // ids outside the slice
+      assert(ok.exists(_.contains(""""count":0""")))
+      assert(ok.exists(b => b.contains(""""allergy":"ΣΟΦΙΑ"""") &&
+        !b.contains(""""count":0""")))
+      // a probe on a tied group whose top 5 a UTF-16 order would change
+      assert(ok.exists(b => b.startsWith("""{"model_id":3""") &&
+        b.contains("Ａ Crème") && !b.contains("\uD83C\uDF59")))
+    } finally { resident.stop(); distributed.stop() }
+  }
+
+  test("no route submits a Spark job within the gate; above it, data routes do") {
+    val payload = """{"Protein-G": 30.0, "Energy-KCAL": 400.0}"""
+    val routes: Seq[(String, Option[String])] =
+      (1 to 5).map(k => (s"/predict/$k", Some(payload))) ++ Seq(
+        ("/find_allergen/model5?allergy=food_13", None),
+        ("/food_details/model5/3", None), ("/stats/model5", None),
+        ("/health", None))
+    assert(server.boundPort > 0) // built, artifacts loaded, before counting
+    val jobs = jobsDuring(routes.foreach { case (path, body) =>
+      assert(call(server, path, body)._1 == 200, path)
+    })
+    assert(jobs == 0)
+    val distributed = gatedOff(modelDir)
+    try Seq(("/predict/3", Some(payload)), routes(5), routes(6)).foreach {
+      case (path, body) =>
+        val n = jobsDuring(assert(call(distributed, path, body)._1 == 200, path))
+        assert(n >= 1, s"$path ran no job above the gate")
+    } finally distributed.stop()
+  }
+
+  test("TCP nodelay: keep-alive requests are not held to the delayed-ACK floor") {
+    // without nodelay every response after the first waits ~40 ms for
+    // the client's delayed ACK
+    val ms = keepAliveMs(server.boundPort, "/health", 20).sorted
+    assert(ms(ms.size / 2) < 20.0, s"p50 ${ms(ms.size / 2)} ms of $ms")
   }
 }
