@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.streaming.SnapshotManifest
+import graft.streaming.{MarkerProtocol, SnapshotManifest}
 
 /** ONE consistent snapshot across the four maintained batch-artifact
   * families (round-19 verdict #1, the q294 audit surface): the LSH
@@ -60,14 +60,10 @@ object ArtifactSnapshot {
         s"${LshIndexQueries.artifactPath(s, dir, "lexmerged")}/df",
       "lex_meta" ->
         s"${LshIndexQueries.artifactPath(s, dir, "lexmerged")}/meta")
-    val hconf = s.sparkContext.hadoopConfiguration
-    def published(p: String): Boolean = {
-      val parent = new org.apache.hadoop.fs.Path(p).getParent
-      new org.apache.hadoop.fs.Path(parent, "_GRAFT_OK")
-        .getFileSystem(hconf)
-        .exists(new org.apache.hadoop.fs.Path(parent, "_GRAFT_OK"))
+    val pinnable = paths.filter { case (_, p) =>
+      MarkerProtocol.isComplete(new org.apache.hadoop.fs.Path(p).getParent
+        .toString, s.sparkContext.hadoopConfiguration)
     }
-    val pinnable = paths.filter { case (_, p) => published(p) }
     val entries = pinnable.map { case (k, p) => s"art.$k" -> p } +
       ("art.ivf_fp" -> fp)
     val fallback: Map[String, () => DataFrame] = Map(

@@ -132,19 +132,19 @@ object BpeQueries {
   // unchanged (BpeSpec pins the round-trip).
   // -------------------------------------------------------------------
 
-  /** Memo value: the driver-resident merge table plus a THUNK that
-    * yields the vocab frame. Artifact-backed entries return a fresh
-    * parquet read per call — a localCheckpoint'd frame would be a
-    * dangling reference after the harness's between-query
-    * `getPersistentRDDs.unpersist` cleanup (Verify/ScaleBench both do
-    * it), whereas a parquet scan plan survives any storage cleanup. */
-  private val memo = scala.collection.concurrent.TrieMap
-    .empty[String, (Seq[(String, String, Long)], () => DataFrame)]
+  /** Memo of the driver-resident merge table, so a session collects
+    * it once; the artifact itself (and its vocab thunk) is memoized by
+    * [[LshIndexQueries.loadOrBuildParts]]. */
+  private val mergesMemo = scala.collection.concurrent.TrieMap
+    .empty[String, Seq[(String, String, Long)]]
 
-  /** Test hook (BpeSpec): drop the in-JVM memo so the next
+  /** Test hook (BpeSpec): drop the in-JVM memos so the next
     * [[trainedTokenizer]] call exercises the artifact LOAD path the
     * way a fresh JVM would. */
-  private[graft] def resetMemoForTest(): Unit = memo.clear()
+  private[graft] def resetMemoForTest(): Unit = {
+    mergesMemo.clear()
+    LshIndexQueries.resetMemoForTest()
+  }
 
   /** Training-pass counter, observable by BpeSpec: proves the memo and
     * the artifact load path actually short-circuit training. */
@@ -210,61 +210,31 @@ object BpeQueries {
   }
 
   /** The session's trained tokenizer for `dir`'s documents corpus:
-    * loads the parquet artifact when present, else trains and
-    * publishes it (write-to-tmp + rename, so a half-written artifact
-    * is never loaded). Falls back silently to the in-memory training
-    * result if the artifact cannot be written — persistence is an
-    * optimization, never a correctness dependency. */
+    * the ranked merge table plus the final vocab frame, published and
+    * loaded through [[LshIndexQueries.loadOrBuildParts]] (the
+    * [[graft.streaming.MarkerProtocol]] publish). */
   private[graft] def trainedTokenizer(s: SparkSession, dir: String)
       : (Seq[(String, String, Long)], DataFrame) = {
+    import s.implicits._
     val base = artifactPath(s, dir)
-    val (merges, vocab) =
-      memo.getOrElseUpdate(s"${s.sparkContext.applicationId}|$base", {
-        val basePath = new org.apache.hadoop.fs.Path(base)
-        val fs = basePath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        val ok = new org.apache.hadoop.fs.Path(basePath, "_GRAFT_OK")
-        if (fs.exists(ok)) {
-          val merges = s.read.parquet(s"$base/merges").orderBy(col("rank"))
-            .collect().toSeq
-            .map(r => (r.getAs[String]("left"), r.getAs[String]("right"),
-              r.getAs[Long]("freq")))
-          (merges, () => s.read.parquet(s"$base/vocab"))
-        } else {
-          import s.implicits._
-          trainCount.incrementAndGet()
-          val (merges, vf) =
-            bpeTrain(Tables.load(Tables.tuned(s), dir, "documents"),
-              NumMerges)
-          val published = try {
-            val tmp = new org.apache.hadoop.fs.Path(
-              s"$base.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-            merges.zipWithIndex
-              .map { case ((l, r, c), i) => (i + 1L, l, r, c) }
-              .toDF("rank", "left", "right", "freq")
-              .coalesce(1).write.parquet(s"$tmp/merges")
-            vf.write.parquet(s"$tmp/vocab")
-            fs.create(new org.apache.hadoop.fs.Path(tmp, "_GRAFT_OK"), true)
-              .close()
-            // publish atomically; if another writer won the race, keep
-            // theirs and drop ours — both hold identical content.
-            // Hadoop rename reports many failures via `false` rather
-            // than an exception, so `published` must rest on evidence
-            // the marker actually exists at the final path — not on
-            // having attempted the rename.
-            if (fs.exists(basePath) || !fs.rename(tmp, basePath))
-              fs.delete(tmp, true)
-            fs.exists(ok)
-          } catch { case scala.util.control.NonFatal(_) => false }
-          // prefer the artifact-backed frame: the localCheckpoint'd vf
-          // dies at the next harness storage cleanup, a parquet read
-          // doesn't. vf survives as the fallback only when the
-          // warehouse is unwritable.
-          (merges,
-            if (published) () => s.read.parquet(s"$base/vocab")
-            else () => vf)
-        }
-      })
-    (merges, vocab())
+    var trained: Option[Seq[(String, String, Long)]] = None
+    val parts = LshIndexQueries.loadOrBuildParts(s, base,
+      Seq("merges", "vocab"), () => {
+        val (merges, vf) =
+          bpeTrain(Tables.load(Tables.tuned(s), dir, "documents"),
+            NumMerges)
+        trained = Some(merges)
+        Map("merges" -> merges.zipWithIndex
+            .map { case ((l, r, c), i) => (i + 1L, l, r, c) }
+            .toDF("rank", "left", "right", "freq").coalesce(1),
+          "vocab" -> vf)
+      }, trainCount)
+    val merges = mergesMemo.getOrElseUpdate(
+      s"${s.sparkContext.applicationId}|$base",
+      trained.getOrElse(parts("merges")().orderBy(col("rank")).collect()
+        .toSeq.map(r => (r.getAs[String]("left"),
+          r.getAs[String]("right"), r.getAs[Long]("freq")))))
+    (merges, parts("vocab")())
   }
 
   /** The same words CTE both oracles start from. */

@@ -63,8 +63,9 @@ import graft.functions.TextOps
   * the touched frontier, not the standing graph. At 100 TB: history
   * is hashed once, ever.
   *
-  * Artifact layout (the q276 lifecycle: fingerprint-keyed path,
-  * tmp+rename publish, _GRAFT_OK, in-JVM memo, counted builds):
+  * Artifact layout (fingerprint-keyed path, published through
+  * [[LshIndexQueries.loadOrBuildParts]], i.e. through
+  * [[graft.streaming.MarkerProtocol]]):
   *   {warehouse}/graft_clustidx/{tag}_{corpus-fingerprint}/{sigs,labels}
   * sigs = (h, band_idx, bh) content-grain band rows; labels =
   * (h, lbl) for every content in ≥1 verified edge. The merged

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.{Q, Tables}
 import graft.functions.TextOps
+import graft.streaming.MarkerProtocol
 
 /** q276 — the MAINTAINED banded-MinHash dedup index (round-15 advice
   * #5). q51/q133 rebuild their LSH state per run; a production corpus
@@ -21,9 +22,9 @@ import graft.functions.TextOps
   * FULL corpus from scratch (the artifact path and the from-scratch
   * path must agree exactly or the hash check fails).
   *
-  * Artifact layout (the q242/q272 tokenizer-artifact pattern:
-  * fingerprint-keyed path, tmp+rename publish, _GRAFT_OK marker,
-  * in-JVM memo, counted builds for the spec):
+  * Artifact layout (fingerprint-keyed path, published through
+  * [[loadOrBuildParts]] — the [[graft.streaming.MarkerProtocol]]
+  * publish, in-JVM memo, counted builds for the spec):
   *   {warehouse}/graft_lshidx/{tag}_{corpus-fingerprint}/rows/
   * holding narrow (doc_id, h, band_idx, bh) rows — signatures only,
   * never shingles: at 100 TB the index is ~4 small rows per document
@@ -94,13 +95,13 @@ object LshIndexQueries {
   }
 
   // -------------------------------------------------------------------
-  // Artifact machinery (the BpeQueries pattern)
+  // Artifact machinery, shared by every warehouse artifact
   // -------------------------------------------------------------------
 
   /** Thunks, not frames: artifact-backed entries re-read parquet per
     * call so the harness's between-query storage cleanup can't leave a
-    * dangling checkpoint reference. Shared by the LSH index (q276) and
-    * the BM25 lexical index (q280) — keys carry the artifact path. */
+    * dangling checkpoint reference. Shared by every
+    * [[loadOrBuildParts]] caller — keys carry the artifact path. */
   private val memo = scala.collection.concurrent.TrieMap
     .empty[String, Map[String, () => DataFrame]]
 
@@ -109,6 +110,8 @@ object LshIndexQueries {
   private[graft] val buildCount =
     new java.util.concurrent.atomic.AtomicLong
 
+  /** Test hook: drop the in-JVM memo so the next call exercises the
+    * artifact LOAD path the way a fresh JVM would. */
   private[graft] def resetMemoForTest(): Unit = memo.clear()
 
   private[graft] def artifactPath(
@@ -118,40 +121,32 @@ object LshIndexQueries {
   }
 
   /** Load the multi-part artifact at `base` if published, else build
-    * the parts with `mk`, publish (write-to-tmp + atomic rename,
-    * losers of a publish race keep the winner's identical content),
-    * and return artifact-backed readers — falling back to the
-    * in-memory frames only if the warehouse is unwritable. */
+    * the parts with `mk` (counted on `builds`, the caller family's
+    * counter), publish them through [[MarkerProtocol]] and return
+    * artifact-backed readers — falling back to the in-memory frames
+    * only if the warehouse is unwritable. Write-once without debris
+    * deletion: the warehouse can have racing publishers, whose losers
+    * read the winner's identical content. A marker-less dir at `base`
+    * is crash debris and is replaced. */
   private[operators] def loadOrBuildParts(s: SparkSession, base: String,
-      partNames: Seq[String], mk: () => Map[String, DataFrame])
+      partNames: Seq[String], mk: () => Map[String, DataFrame],
+      builds: java.util.concurrent.atomic.AtomicLong = buildCount)
       : Map[String, () => DataFrame] =
     memo.getOrElseUpdate(s"${s.sparkContext.applicationId}|$base", {
-      val basePath = new org.apache.hadoop.fs.Path(base)
-      val fs = basePath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val ok = new org.apache.hadoop.fs.Path(basePath, "_GRAFT_OK")
+      val conf = s.sparkContext.hadoopConfiguration
       def readers: Map[String, () => DataFrame] =
         partNames.map(p => p -> (() => s.read.parquet(s"$base/$p"))).toMap
-      if (fs.exists(ok)) readers
+      if (MarkerProtocol.isComplete(base, conf)) readers
       else {
-        buildCount.incrementAndGet()
+        builds.incrementAndGet()
         val parts = mk()
         val published = try {
-          val tmp = new org.apache.hadoop.fs.Path(
-            s"$base.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-          partNames.foreach(p => parts(p).write.parquet(s"$tmp/$p"))
-          fs.create(new org.apache.hadoop.fs.Path(tmp, "_GRAFT_OK"), true)
-            .close()
-          // A basePath WITHOUT the OK marker can only be a crashed
-          // partial publish (the marker is written into tmp BEFORE the
-          // atomic rename, so a successful publish always carries it):
-          // clear the debris and retry the rename instead of silently
-          // degrading to the localCheckpoint fallback forever
-          // (round-16 advice).
-          if (fs.exists(basePath) && !fs.exists(ok))
-            fs.delete(basePath, true)
-          if (fs.exists(basePath) || !fs.rename(tmp, basePath))
-            fs.delete(tmp, true)
-          fs.exists(ok)
+          MarkerProtocol.publish(s, base, overwrite = false,
+            deleteDebris = false) { tmp =>
+            partNames.foreach(p => parts(p).write.parquet(s"$tmp/$p"))
+            true
+          }
+          MarkerProtocol.isComplete(base, conf)
         } catch { case scala.util.control.NonFatal(_) => false }
         if (published) readers
         else parts.map { case (p, df) =>

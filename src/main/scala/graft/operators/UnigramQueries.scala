@@ -226,14 +226,13 @@ object UnigramQueries {
   }
 
   // -------------------------------------------------------------------
-  // Train-once / apply-many: artifact + memo, q242's pattern (see
+  // Train-once / apply-many: a warehouse artifact, q242's pattern (see
   // BpeQueries.trainedTokenizer for the full rationale).
   // -------------------------------------------------------------------
 
-  private val memo = scala.collection.concurrent.TrieMap
-    .empty[String, (() => DataFrame, () => DataFrame)]
-
-  private[graft] def resetMemoForTest(): Unit = memo.clear()
+  /** Test hook: drop the in-JVM artifact memo (a fresh-JVM load). */
+  private[graft] def resetMemoForTest(): Unit =
+    LshIndexQueries.resetMemoForTest()
 
   private[graft] val trainCount =
     new java.util.concurrent.atomic.AtomicLong
@@ -246,42 +245,19 @@ object UnigramQueries {
   }
 
   /** The session's trained unigram tokenizer for `dir`'s documents
-    * corpus: (model thunk, perWord thunk) — parquet-artifact-backed
-    * when the warehouse is writable (write-to-tmp + rename; a
-    * half-written artifact is never loaded), in-memory otherwise. */
+    * corpus: (model thunk, perWord thunk), published and loaded
+    * through [[LshIndexQueries.loadOrBuildParts]] (the
+    * [[graft.streaming.MarkerProtocol]] publish). */
   private[graft] def trainedUnigram(s: SparkSession, dir: String)
       : (() => DataFrame, () => DataFrame) = {
-    val base = artifactPath(s, dir)
-    memo.getOrElseUpdate(s"${s.sparkContext.applicationId}|$base", {
-      val basePath = new org.apache.hadoop.fs.Path(base)
-      val fs = basePath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val ok = new org.apache.hadoop.fs.Path(basePath, "_GRAFT_OK")
-      if (fs.exists(ok))
-        (() => s.read.parquet(s"$base/model"),
-          () => s.read.parquet(s"$base/wordsegs"))
-      else {
-        trainCount.incrementAndGet()
+    val parts = LshIndexQueries.loadOrBuildParts(s, artifactPath(s, dir),
+      Seq("model", "wordsegs"), () => {
         val (model, perWord) =
           unigramTrain(Tables.load(Tables.tuned(s), dir, "documents"))
-        val modelC = model.localCheckpoint()
-        val perWordC = perWord.localCheckpoint()
-        val published = try {
-          val tmp = new org.apache.hadoop.fs.Path(
-            s"$base.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-          modelC.write.parquet(s"$tmp/model")
-          perWordC.write.parquet(s"$tmp/wordsegs")
-          fs.create(new org.apache.hadoop.fs.Path(tmp, "_GRAFT_OK"), true)
-            .close()
-          if (fs.exists(basePath) || !fs.rename(tmp, basePath))
-            fs.delete(tmp, true)
-          fs.exists(ok)
-        } catch { case scala.util.control.NonFatal(_) => false }
-        if (published)
-          (() => s.read.parquet(s"$base/model"),
-            () => s.read.parquet(s"$base/wordsegs"))
-        else (() => modelC, () => perWordC)
-      }
-    })
+        Map("model" -> model.localCheckpoint(),
+          "wordsegs" -> perWord.localCheckpoint())
+      }, trainCount)
+    (parts("model"), parts("wordsegs"))
   }
 
   // -------------------------------------------------------------------

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 import graft.functions.TextOps
@@ -20,11 +20,10 @@ import graft.operators.ClusterIndexQueries
   * (LshIndexStream, where per-batch OVERWRITE publication suffices),
   * labels are a READ-MODIFY-WRITE over prior state — so the state is
   * VERSIONED BY BATCH ID: state(N) is computed from state(N−1) and
-  * published under `{stateDir}/batch=N/{sigs,labels}` through the
-  * tmp-dir + _GRAFT_OK-marker + rename lifecycle (the batch-artifact
-  * protocol, LshIndexQueries.loadOrBuildParts) — readers only ever
-  * see versions carrying the marker, so a crash between the two
-  * parquet writes can never surface a half-written state. A
+  * published under `{stateDir}/batch=N/{sigs,labels}` through
+  * [[MarkerProtocol]] — readers only ever see complete versions, so
+  * a crash between the two parquet writes can never surface a
+  * half-written state. A
   * crash-redelivery of batch N re-reads the untouched state(N−1) and
   * republishes its own version directory — idempotent with no
   * transaction log, because foreachBatch batchIds are stable and
@@ -51,21 +50,11 @@ object ClusterIndexStream {
       StructType(Seq(StructField("doc_id", LongType),
         StructField("h", StringType))))
 
-  /** A version directory counts as published ONLY with its _GRAFT_OK
-    * marker — written last, so a crash between the sigs and labels
-    * parquet writes (or mid-write) leaves a version that every reader
-    * skips (round-17 advice: the LshIndexQueries marker lifecycle,
-    * applied to the versioned stream state). */
-  private def isComplete(v: java.io.File): Boolean =
-    MarkerProtocol.isComplete(v)
-
-  private def completeVersions(stateDir: String): Array[Long] =
-    Option(new java.io.File(stateDir).listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("batch=") &&
-        isComplete(f))
-      .map(_.getName.stripPrefix("batch=").toLong)
-      .sorted
+  /** Published versions, ascending: a version dir counts ONLY once
+    * complete, so a crash between the sigs and labels parquet writes
+    * (or mid-write) leaves a version that every reader skips. */
+  private def completeVersions(stateDir: String): Seq[Long] =
+    MarkerProtocol.versions(stateDir, "batch=", completeOnly = true)
 
   private def readState(s: SparkSession, stateDir: String,
       batchId: Long): (DataFrame, DataFrame, DataFrame) =
@@ -172,14 +161,8 @@ object ClusterIndexStream {
 
   def start(spark: SparkSession, srcDir: String, stateDir: String,
       checkpoint: String): StreamingQuery =
-    spark.readStream
-      .schema("doc_id LONG, text STRING")
-      .parquet(srcDir)
-      .writeStream
-      .foreachBatch(mergeBatch(srcDir, stateDir) _)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    FoldStream.start(spark, srcDir, "doc_id LONG, text STRING",
+      checkpoint, mergeBatch(srcDir, stateDir))
 
   /** CDC variant of [[start]]: rows carry op ∈ {I, D}. 'I' rows fold
     * in through mergeCore; 'D' rows tombstone doc_ids, folding to
@@ -189,14 +172,8 @@ object ClusterIndexStream {
     * NET corpus, inserts minus deletes, across restarts). */
   def startCdc(spark: SparkSession, srcDir: String, stateDir: String,
       checkpoint: String): StreamingQuery =
-    spark.readStream
-      .schema("doc_id LONG, text STRING, op STRING")
-      .parquet(srcDir)
-      .writeStream
-      .foreachBatch(mergeBatch(srcDir, stateDir) _)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    FoldStream.start(spark, srcDir, "doc_id LONG, text STRING, op STRING",
+      checkpoint, mergeBatch(srcDir, stateDir))
 
   /** State retention (the q285 checkpoint-truncate contract, applied
     * to the versioned stream state): drop all versions older than the
@@ -211,33 +188,25 @@ object ClusterIndexStream {
   def pruneVersions(stateDir: String, keep: Int = 2,
       tmpGraceMs: Long = 10 * 60 * 1000L,
       manifestRoot: Option[String] = None): Unit = {
-    val d = new java.io.File(stateDir)
-    def rm(x: java.io.File): Unit = {
-      Option(x.listFiles()).getOrElse(Array.empty).foreach(rm)
-      x.delete(); ()
-    }
     val complete = completeVersions(stateDir)
     val pinned = SnapshotManifest.floorC(
       new org.apache.hadoop.conf.Configuration(),
       manifestRoot.getOrElse(stateDir), "cluster.version")
     val keepFloor = complete.dropRight(keep.max(2)).lastOption
       .map(f => pinned.fold(f)(p => math.min(f, p - 1)))
-    Option(d.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("batch="))
-      .foreach { f =>
-        val v = f.getName.stripPrefix("batch=").toLong
-        // Only COMPLETE versions count toward `keep`; a marker-less
-        // directory is deleted ONLY when a newer complete version
-        // exists (crash debris, already superseded) — a marker-less
-        // dir NEWER than every complete version may be a publish in
-        // flight and is never touched (prune-race safety). Note the
-        // rename publish makes this window ~zero on a local fs; this
-        // guard covers object-store style non-atomic renames.
-        val stale = keepFloor.exists(v <= _) ||
-          (!isComplete(f) && complete.nonEmpty && v <= complete.last)
-        if (stale) rm(f)
-      }
-    // crash-debris tmp dirs (.tmp-batch=N-<uuid>) for versions a
+    MarkerProtocol.deleteVersions(stateDir, "batch=") { v =>
+      // Only COMPLETE versions count toward `keep`; a marker-less
+      // directory is deleted ONLY when a newer complete version
+      // exists (crash debris, already superseded) — a marker-less
+      // dir NEWER than every complete version may be a publish in
+      // flight and is never touched (prune-race safety). Note the
+      // rename publish makes this window ~zero on a local fs; this
+      // guard covers object-store style non-atomic renames.
+      keepFloor.exists(v <= _) ||
+        (complete.nonEmpty && v <= complete.last &&
+          !MarkerProtocol.isComplete(s"$stateDir/batch=$v"))
+    }
+    // crash-debris tmp dirs (staged batch=N publishes) for versions a
     // COMPLETE version already covers are superseded by construction
     // — deletable; a tmp NEWER than every complete version may be a
     // publish in flight and is never touched (same prune-race rule as
@@ -250,14 +219,9 @@ object ClusterIndexStream {
     // well inside the grace, so only genuine crash debris ages out.
     val last = complete.lastOption
     val now = System.currentTimeMillis()
-    Option(d.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith(".tmp-batch="))
-      .foreach { f =>
-        val v = f.getName.stripPrefix(".tmp-batch=")
-          .takeWhile(_ != '-').toLong
-        if (last.exists(v <= _) && now - f.lastModified() >= tmpGraceMs)
-          rm(f)
-      }
+    MarkerProtocol.deleteStaged(stateDir, "batch=") { (v, mtime) =>
+      last.exists(v <= _) && now - mtime >= tmpGraceMs
+    }
   }
 
   /** The live labels: the HIGHEST COMPLETE batch version. */
@@ -271,6 +235,25 @@ object ClusterIndexStream {
   def pin(stateDir: String): Map[String, String] =
     Map("cluster.version" ->
       completeVersions(stateDir).lastOption.getOrElse(-1L).toString)
+
+  /** [[pin]] plus its check that the pinned version is still
+    * complete (a racing [[pruneVersions]] may reclaim it). */
+  private[streaming] def resolvePin(stateDir: String)
+      : (Map[String, String], () => Boolean) = {
+    val p = pin(stateDir)
+    val v = p("cluster.version").toLong
+    (p, () => v < 0 || MarkerProtocol.isComplete(s"$stateDir/batch=$v"))
+  }
+
+  /** Publish a snapshot manifest pinning the current version under
+    * `manifestRoot` (default: the state dir), re-resolved against a
+    * racing [[pruneVersions]] (see
+    * [[SnapshotManifest.publishVerified]]). Returns the manifest id a
+    * reader passes to [[labelsAt]]. */
+  def publishSnapshot(spark: SparkSession, stateDir: String,
+      manifestRoot: Option[String] = None): Long =
+    SnapshotManifest.publishVerified(spark,
+      manifestRoot.getOrElse(stateDir), () => resolvePin(stateDir))
 
   /** Labels AS OF manifest `id` — the versioned-state analog of
     * LshIndexStream.indexAt (versioned state makes this trivial: one

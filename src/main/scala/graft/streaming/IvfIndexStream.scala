@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Streaming maintenance of the q265 IVF shard index (round-17 advice
@@ -24,10 +24,9 @@ import org.apache.spark.sql.types._
   * Generation-0 centroids are part of the artifact: trained
   * (deterministic hash-ordered selection, q265's kernel) from the
   * FIRST delivered non-empty batch and published write-once through
-  * the tmp+_GRAFT_OK+rename lifecycle. A crash-redelivery of that
-  * batch recomputes the SAME centroid set (pure function of the
-  * batch) and the marker check makes the republish race-free; later
-  * batches only read.
+  * [[MarkerProtocol]]. A crash-redelivery of that batch recomputes
+  * the SAME centroid set (pure function of the batch) and the marker
+  * check makes the republish race-free; later batches only read.
   *
   * CDC batches (op ∈ {I, D}) retract per-row-purely through the
   * shared [[TombstoneSidecar]] — see LshIndexStream.
@@ -40,8 +39,8 @@ import org.apache.spark.sql.types._
   * deterministic kernel), re-assigns them as a BASE snapshot, and
   * publishes the whole generation write-once under the
   * underscore-hidden `{idxDir}/_gen=G+1/` (centroids + base +
-  * cover=N marker + _GRAFT_OK, one rename). Assignments carry their
-  * generation positionally: batch M folds under the NEWEST COMPLETE
+  * cover=N marker, one [[MarkerProtocol]] publish). Assignments carry
+  * their generation positionally: batch M folds under the NEWEST COMPLETE
   * generation whose cover < M, which is what makes the bump
   * idempotent — a redelivered batch N re-selects its ORIGINAL
   * generation (cover ≥ N excludes the bumped one), re-publishes its
@@ -145,8 +144,8 @@ object IvfIndexStream {
       picked.write.parquet(tmp.toString)
       true
     }
-    // _GRAFT_OK is underscore-prefixed, which Spark's file index
-    // treats as hidden — the plain read skips it
+    // the completeness marker is underscore-prefixed, which Spark's
+    // file index treats as hidden — the plain read skips it
     s.read.parquet(centroidsPath(idxDir)).select(col("cid"), col("cv"))
   }
 
@@ -154,28 +153,18 @@ object IvfIndexStream {
   // centroid generations (drift-triggered retrain)
   // ------------------------------------------------------------------
 
-  private def listDirs(path: String, prefix: String): Array[java.io.File] =
-    Option(new java.io.File(path).listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith(prefix))
-
-  private def isComplete(f: java.io.File): Boolean =
-    MarkerProtocol.isComplete(f)
-
   /** Complete generations, ascending: (gen, cover). Generation 0 (the
     * legacy layout at the idxDir root) is implicit with cover = -1
     * and is NOT listed here. */
   private[streaming] def generations(idxDir: String): Seq[(Long, Long)] =
-    listDirs(idxDir, "_gen=").filter(isComplete).toSeq
-      .map { f =>
-        val g = f.getName.stripPrefix("_gen=").toLong
-        val cover = Option(f.listFiles()).getOrElse(Array.empty)
-          .map(_.getName).find(_.startsWith("cover="))
-          .map(_.stripPrefix("cover=").toLong)
-          .getOrElse(sys.error(s"generation dir ${f.getPath} has no cover"))
+    MarkerProtocol.versions(idxDir, "_gen=", completeOnly = true)
+      .map { g =>
+        val dir = new java.io.File(s"$idxDir/_gen=$g")
+        val cover = Option(dir.list()).getOrElse(Array.empty)
+          .find(_.startsWith("cover=")).map(_.stripPrefix("cover=").toLong)
+          .getOrElse(sys.error(s"generation dir $dir has no cover"))
         (g, cover)
       }
-      .sortBy(_._1)
 
   /** The generation a given batch folds under: the newest COMPLETE
     * generation whose base covers strictly OLDER batches (cover <
@@ -194,8 +183,11 @@ object IvfIndexStream {
   private def newestGen(idxDir: String): Option[(Long, Long)] =
     generations(idxDir).lastOption
 
-  private def batchDirsUnder(root: String): Array[String] =
-    listDirs(root, "batch=").map(_.getPath)
+  private def batchesUnder(root: String): Seq[Long] =
+    MarkerProtocol.versions(root, "batch=")
+
+  private def genRoot(idxDir: String, gen: Long): String =
+    if (gen == 0L) idxDir else s"$idxDir/_gen=$gen"
 
   /** Live rows (vec_id, cell, csim, v, batch) of one generation as of
     * `maxBatch` (Long.MaxValue = now): base snapshot (batch = cover —
@@ -204,9 +196,9 @@ object IvfIndexStream {
     * `maxBatch`. */
   private def genView(spark: SparkSession, idxDir: String, gen: Long,
       cover: Long, maxBatch: Long): DataFrame = {
-    val root = if (gen == 0L) idxDir else s"$idxDir/_gen=$gen"
-    val dirs = batchDirsUnder(root)
-      .filter(_.split("batch=").last.toLong <= maxBatch)
+    val root = genRoot(idxDir, gen)
+    val dirs = batchesUnder(root).filter(_ <= maxBatch)
+      .map(v => s"$root/batch=$v")
     val batchRows =
       if (dirs.isEmpty) None
       else Some(spark.read.option("basePath", root)
@@ -325,14 +317,9 @@ object IvfIndexStream {
   def start(spark: SparkSession, srcDir: String, idxDir: String,
       checkpoint: String,
       driftThresholdU: Long = defaultDriftThresholdU): StreamingQuery =
-    spark.readStream
-      .schema("vec_id LONG, embedding ARRAY<FLOAT>, label LONG")
-      .parquet(srcDir)
-      .writeStream
-      .foreachBatch(mergeBatch(idxDir, driftThresholdU) _)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    FoldStream.start(spark, srcDir,
+      "vec_id LONG, embedding ARRAY<FLOAT>, label LONG", checkpoint,
+      mergeBatch(idxDir, driftThresholdU))
 
   /** CDC variant of [[start]]: rows carry op ∈ {I, D}. Deletes
     * tombstone vec_ids via the shared [[TombstoneSidecar]]; the live
@@ -341,14 +328,9 @@ object IvfIndexStream {
   def startCdc(spark: SparkSession, srcDir: String, idxDir: String,
       checkpoint: String,
       driftThresholdU: Long = defaultDriftThresholdU): StreamingQuery =
-    spark.readStream
-      .schema("vec_id LONG, embedding ARRAY<FLOAT>, op STRING")
-      .parquet(srcDir)
-      .writeStream
-      .foreachBatch(mergeBatch(idxDir, driftThresholdU) _)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    FoldStream.start(spark, srcDir,
+      "vec_id LONG, embedding ARRAY<FLOAT>, op STRING", checkpoint,
+      mergeBatch(idxDir, driftThresholdU))
 
   private def emptyIndex(s: SparkSession): DataFrame =
     s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -418,38 +400,45 @@ object IvfIndexStream {
         else if (keepGen == 0L) -1L
         else generations(idxDir).find(_._1 == keepGen).map(_._2)
           .getOrElse(-1L)
-      def rm(x: java.io.File): Unit = {
-        Option(x.listFiles()).getOrElse(Array.empty).foreach(rm)
-        x.delete(); ()
-      }
-      listDirs(idxDir, "_gen=")
-        .filter(_.getName.stripPrefix("_gen=").toLong < keepGen)
-        .foreach(rm)
-      listDirs(idxDir, "batch=")
-        .filter(_.getName.stripPrefix("batch=").toLong <= floorCover)
-        .foreach(rm)
-      listDirs(s"$idxDir/_tombs", "batch=")
-        .filter(_.getName.stripPrefix("batch=").toLong <= floorCover)
-        .foreach(rm)
-      listDirs(idxDir, ".tmp-_gen=")
-        .filter(f => f.getName.stripPrefix(".tmp-_gen=")
-          .takeWhile(_ != '-').toLong <= g)
-        .foreach(rm)
+      MarkerProtocol.deleteVersions(idxDir, "_gen=")(_ < keepGen)
+      MarkerProtocol.deleteVersions(idxDir, "batch=")(_ <= floorCover)
+      MarkerProtocol.deleteVersions(s"$idxDir/_tombs", "batch=")(
+        _ <= floorCover)
+      MarkerProtocol.deleteStaged(idxDir, "_gen=")((v, _) => v <= g)
   }
 
   /** This index's version tokens for a [[SnapshotManifest]] pin:
     * `ivf.gen` (live generation) and `ivf.max_batch` (the newest
     * batch published under it). */
   def pin(idxDir: String): Map[String, String] = {
-    val (g, root) = newestGen(idxDir) match {
-      case Some((gg, _)) => (gg, s"$idxDir/_gen=$gg")
-      case None => (0L, idxDir)
-    }
-    val maxBatch = batchDirsUnder(root)
-      .map(_.split("batch=").last.toLong).sorted.lastOption
+    val g = liveGeneration(idxDir)
+    val maxBatch = batchesUnder(genRoot(idxDir, g)).lastOption
       .getOrElse(-1L)
     Map("ivf.gen" -> g.toString, "ivf.max_batch" -> maxBatch.toString)
   }
+
+  /** [[pin]] plus its check that the dirs the pin needs — generation
+    * G's `_gen=G` tree (G > 0) and its batch dirs ≤ max_batch present
+    * at pin time — still exist (a racing [[gc]] may reclaim them). */
+  private[streaming] def resolvePin(idxDir: String)
+      : (Map[String, String], () => Boolean) = {
+    val p = pin(idxDir)
+    val g = p("ivf.gen").toLong
+    val root = genRoot(idxDir, g)
+    val need = batchesUnder(root).filter(_ <= p("ivf.max_batch").toLong)
+    (p, () =>
+      (g == 0L || MarkerProtocol.isComplete(root)) &&
+        need.toSet.subsetOf(batchesUnder(root).toSet))
+  }
+
+  /** Publish a snapshot manifest pinning the live generation under
+    * `manifestRoot` (default: the index dir), re-resolved against a
+    * racing [[gc]] (see [[SnapshotManifest.publishVerified]]).
+    * Returns the manifest id a reader passes to [[indexAt]]. */
+  def publishSnapshot(spark: SparkSession, idxDir: String,
+      manifestRoot: Option[String] = None): Long =
+    SnapshotManifest.publishVerified(spark,
+      manifestRoot.getOrElse(idxDir), () => resolvePin(idxDir))
 
   /** The index AS OF manifest `id` (see LshIndexStream.indexAt): the
     * pinned generation's view at the pinned batch frontier — immune

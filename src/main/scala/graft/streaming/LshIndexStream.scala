@@ -71,39 +71,23 @@ object LshIndexStream {
     * harness discipline). */
   def start(spark: SparkSession, srcDir: String, idxDir: String,
       checkpoint: String): StreamingQuery =
-    spark.readStream
-      .schema("doc_id LONG, text STRING")
-      .parquet(srcDir)
-      .writeStream
-      .foreachBatch(mergeBatch(idxDir) _)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    FoldStream.start(spark, srcDir, "doc_id LONG, text STRING",
+      checkpoint, mergeBatch(idxDir))
 
   /** CDC variant of [[start]]: rows carry op ∈ {I, D}. Deletes
     * tombstone doc_ids; the live index hides every signature row the
     * newest covering tombstone retracts (see [[index]]). */
   def startCdc(spark: SparkSession, srcDir: String, idxDir: String,
       checkpoint: String): StreamingQuery =
-    spark.readStream
-      .schema("doc_id LONG, text STRING, op STRING")
-      .parquet(srcDir)
-      .writeStream
-      .foreachBatch(mergeBatch(idxDir) _)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    FoldStream.start(spark, srcDir, "doc_id LONG, text STRING, op STRING",
+      checkpoint, mergeBatch(idxDir))
 
-  private def listDirs(path: String, prefix: String) =
-    Option(new java.io.File(path).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory && f.getName.startsWith(prefix))
+  private def batches(idxDir: String): Seq[Long] =
+    MarkerProtocol.versions(idxDir, "batch=")
 
   /** Complete compaction bases, ascending by their upTo batch id. */
   private def bases(idxDir: String): Seq[Long] =
-    listDirs(idxDir, "_base=")
-      .filter(MarkerProtocol.isComplete)
-      .map(_.getName.stripPrefix("_base=").toLong).toSeq.sorted
+    MarkerProtocol.versions(idxDir, "_base=", completeOnly = true)
 
   /** Live rows with their publication batch id: the newest complete
     * compaction base (rows carry batch = upTo — a tombstone NEWER
@@ -117,12 +101,8 @@ object LshIndexStream {
       maxBatch: Long = Long.MaxValue): DataFrame = {
     val base = pinBase.getOrElse(bases(idxDir).lastOption)
     val floor = base.getOrElse(Long.MinValue)
-    val dirs = listDirs(idxDir, "batch=")
-      .filter { f =>
-        val v = f.getName.stripPrefix("batch=").toLong
-        v > floor && v <= maxBatch
-      }
-      .map(_.getPath)
+    val dirs = batches(idxDir).filter(v => v > floor && v <= maxBatch)
+      .map(v => s"$idxDir/batch=$v")
     val batchRows =
       if (dirs.isEmpty) None
       else Some(spark.read.option("basePath", idxDir)
@@ -156,8 +136,7 @@ object LshIndexStream {
     * index with no publications at all pins only its emptiness
     * (`lsh.max_batch=-1`). */
   def pin(idxDir: String): Map[String, String] = {
-    val maxBatch = listDirs(idxDir, "batch=")
-      .map(_.getName.stripPrefix("batch=").toLong).sorted.lastOption
+    val maxBatch = batches(idxDir).lastOption
     val base = bases(idxDir).lastOption
     Map("lsh.max_batch" ->
       maxBatch.orElse(base).getOrElse(-1L).toString) ++
@@ -165,61 +144,35 @@ object LshIndexStream {
   }
 
   /** Publish a snapshot manifest pinning this index's current
-    * version under `manifestRoot` (default: the index dir itself).
-    * Returns the manifest id a reader passes to [[indexAt]].
-    *
-    * Pin-vs-GC acquisition window (round-20 ADVICE #3, closed round
-    * 22): a concurrent [[compact]] can compute its retention floor
-    * BEFORE this manifest lands and reclaim the dirs the pin resolves
-    * to — and [[liveRows]] reads missing dirs as silently absent, so
-    * the pinned view would be WRONG, not failing. The publish is
-    * therefore RE-RESOLVED: the dirs the pin needs (the base, and
-    * every batch dir in (base, max_batch] present at pin time) are
-    * recorded before publishing, and re-checked after the manifest is
-    * live. Once the manifest is visible, any compact that lists
-    * AFTER it floors at it; a verify failure means a GC raced the
-    * window, so the stale manifest is dropped and the pin re-reads
-    * the post-compaction state. Bounded retries — a pathological
-    * compact storm still returns the freshest pin rather than
-    * looping forever. */
+    * version under `manifestRoot` (default: the index dir itself),
+    * re-resolved against a racing [[compact]] (see
+    * [[SnapshotManifest.publishVerified]]). Returns the manifest id a
+    * reader passes to [[indexAt]]. */
   def publishSnapshot(spark: SparkSession, idxDir: String,
       manifestRoot: Option[String] = None): Long =
     publishSnapshotHooked(spark, idxDir, manifestRoot, _ => ())
 
-  /** [[publishSnapshot]] with a post-publish test hook: `afterPublish`
-    * runs between the manifest landing and the re-resolve check —
-    * exactly the window a concurrent GC (whose floor listing predates
-    * this manifest) could sweep the pinned dirs in. Production callers
-    * use [[publishSnapshot]]; the hook exists so the race is
-    * spec-testable deterministically. */
+  /** [[publishSnapshot]] with the post-publish test hook of
+    * [[SnapshotManifest.publishVerified]]. */
   private[streaming] def publishSnapshotHooked(spark: SparkSession,
       idxDir: String, manifestRoot: Option[String],
-      afterPublish: Long => Unit): Long = {
-    val root = manifestRoot.getOrElse(idxDir)
-    var attempt = 0
-    var id = -1L
-    var ok = false
-    while (!ok && attempt < 5) {
-      attempt += 1
-      val p = pin(idxDir)
-      val base = p.get("lsh.base").map(_.toLong)
-      val maxB = p("lsh.max_batch").toLong
-      val needBatches = listDirs(idxDir, "batch=")
-        .map(_.getName.stripPrefix("batch=").toLong)
-        .filter(b => b > base.getOrElse(-1L) && b <= maxB)
-      id = SnapshotManifest.publish(spark, root, p)
-      afterPublish(id)
-      ok = base.forall(b => MarkerProtocol.isComplete(
-          new java.io.File(s"$idxDir/_base=$b"))) &&
-        needBatches.forall(b =>
-          new java.io.File(s"$idxDir/batch=$b").isDirectory)
-      if (!ok) SnapshotManifest.drop(spark, root, id)
-    }
-    if (!ok)
-      // last attempt's manifest was dropped; publish the freshest pin
-      // un-verified rather than return a dropped id
-      id = SnapshotManifest.publish(spark, root, pin(idxDir))
-    id
+      afterPublish: Long => Unit): Long =
+    SnapshotManifest.publishVerified(spark, manifestRoot.getOrElse(idxDir),
+      () => resolvePin(idxDir), afterPublish)
+
+  /** [[pin]] plus its check that the dirs the pin needs — the base,
+    * and every batch dir in (base, max_batch] present at pin time —
+    * still exist. */
+  private[streaming] def resolvePin(idxDir: String)
+      : (Map[String, String], () => Boolean) = {
+    val p = pin(idxDir)
+    val base = p.get("lsh.base").map(_.toLong)
+    val maxB = p("lsh.max_batch").toLong
+    val need = batches(idxDir)
+      .filter(b => b > base.getOrElse(-1L) && b <= maxB)
+    (p, () =>
+      base.forall(b => MarkerProtocol.isComplete(s"$idxDir/_base=$b")) &&
+        need.toSet.subsetOf(batches(idxDir).toSet))
   }
 
   /** The index AS OF manifest `id`: resolves (base, max_batch)
@@ -244,8 +197,8 @@ object LshIndexStream {
   /** COMPACTION — the maintenance pass a deployment runs when
     * tombstones and dead batch dirs accumulate: materialize the live
     * index as of the newest published batch into a write-once
-    * `_base=<upTo>` snapshot (tmp + _GRAFT_OK + rename — the marker
-    * protocol; crash debris is marker-less and invisible), then
+    * `_base=<upTo>` snapshot through [[MarkerProtocol]] (crash
+    * debris is marker-less and invisible), then
     * garbage-collect everything the base supersedes — batch dirs and
     * tombstone dirs ≤ upTo, and older bases. Underscore-prefixed, so
     * the parent partition-discovery read never sees it. Idempotent:
@@ -259,8 +212,7 @@ object LshIndexStream {
     * keeping one cross-artifact manifest root passes it here. */
   def compact(spark: SparkSession, idxDir: String,
       manifestRoot: Option[String] = None): Option[Long] = {
-    val newest = listDirs(idxDir, "batch=")
-      .map(_.getName.stripPrefix("batch=").toLong).sorted.lastOption
+    val newest = batches(idxDir).lastOption
     val upTo = newest.orElse(bases(idxDir).lastOption)
       .getOrElse(return None)
     // write-once through the shared marker protocol: a concurrent or
@@ -290,19 +242,9 @@ object LshIndexStream {
     val delUpTo = floorB.fold(upTo)(math.min(upTo, _))
     val baseKeep = lshPins.flatMap(_.get("lsh.base").map(_.toLong))
       .minOption.fold(upTo)(math.min(upTo, _))
-    val fs = new org.apache.hadoop.fs.Path(idxDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def rmAll(fsn: java.io.File): Unit =
-      fs.delete(new org.apache.hadoop.fs.Path(fsn.getPath), true)
-    listDirs(idxDir, "batch=")
-      .filter(_.getName.stripPrefix("batch=").toLong <= delUpTo)
-      .foreach(rmAll)
-    listDirs(s"$idxDir/_tombs", "batch=")
-      .filter(_.getName.stripPrefix("batch=").toLong <= delUpTo)
-      .foreach(rmAll)
-    listDirs(idxDir, "_base=")
-      .filter(_.getName.stripPrefix("_base=").toLong < baseKeep)
-      .foreach(rmAll)
+    MarkerProtocol.deleteVersions(idxDir, "batch=")(_ <= delUpTo)
+    MarkerProtocol.deleteVersions(s"$idxDir/_tombs", "batch=")(_ <= delUpTo)
+    MarkerProtocol.deleteVersions(idxDir, "_base=")(_ < baseKeep)
     Some(upTo)
   }
 }
@@ -335,11 +277,8 @@ private[streaming] object TombstoneSidecar {
     * recomputes the same decision). */
   def newestUpTo(spark: SparkSession, idxDir: String,
       idCol: String, maxBatch: Long): DataFrame = {
-    val dirs = Option(new java.io.File(s"$idxDir/_tombs").listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("batch=") &&
-        f.getName.stripPrefix("batch=").toLong <= maxBatch)
-      .map(_.getPath)
+    val dirs = MarkerProtocol.versions(s"$idxDir/_tombs", "batch=")
+      .filter(_ <= maxBatch).map(v => s"$idxDir/_tombs/batch=$v")
     if (dirs.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -361,4 +300,21 @@ private[streaming] object TombstoneSidecar {
         col("batch").cast(LongType) > col("maxt"))
       .drop("maxt")
   }
+}
+
+/** The one starter of the maintained-index streams: a parquet
+  * directory stream of `schema` whose every micro-batch runs `fold`
+  * through foreachBatch; AvailableNow drains what exists and stops
+  * (the S3/q43 harness discipline). */
+private[streaming] object FoldStream {
+  def start(spark: SparkSession, srcDir: String, schema: String,
+      checkpoint: String, fold: (DataFrame, Long) => Unit): StreamingQuery =
+    spark.readStream
+      .schema(schema)
+      .parquet(srcDir)
+      .writeStream
+      .foreachBatch(fold)
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .start()
 }

@@ -1,25 +1,32 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** THE atomic-publish sequence shared by every maintained-artifact
-  * writer (round-19 advice #6: ClusterIndexStream.mergeBatch,
-  * LshIndexStream.compact, IvfIndexStream.centroids and
-  * .bumpGeneration each hand-rolled this ~4-step FS dance; a fix in
-  * one copy would not propagate). One implementation, exercised by
-  * the existing crash / prune-race / redelivery specs of all four
-  * callers.
+/** THE atomic-publish protocol of every maintained artifact, and the
+  * only code that knows its on-disk names: the `_GRAFT_OK`
+  * completeness marker, the `.tmp-<name>-<uuid>` staging sibling, the
+  * `<prefix><n>` version-dir listing and the recursive delete. A fix
+  * in a hand-rolled copy would not propagate, so there are none.
   *
   * Sequence: stage everything (parquet parts + any caller-side
-  * markers) in a dot-prefixed tmp sibling, drop the `_GRAFT_OK`
-  * completeness marker LAST, expose with ONE rename. A crash at any
-  * point leaves either the intact predecessor or marker-less debris
-  * readers already skip; the next publish of the same target deletes
-  * that debris (the target's only legitimate writer is this caller —
-  * foreachBatch serializes batch publishes, write-once targets have a
-  * single trainer — so same-target tmp leftovers are always crash
-  * debris, never a concurrent writer).
+  * markers) in a dot-prefixed tmp sibling, drop the marker LAST,
+  * expose with ONE rename. A crash at any point leaves either the
+  * intact predecessor or marker-less debris readers already skip.
+  *
+  * Two tiers publish through it, with opposite debris rules:
+  *  - the STREAM tier (ClusterIndexStream versions, LshIndexStream
+  *    bases, IvfIndexStream centroids and generations) has one writer
+  *    per target — foreachBatch serializes batch publishes and
+  *    write-once targets have a single trainer — so same-target tmp
+  *    leftovers are always crash debris: `deleteDebris = true`, and
+  *    sweeping them on entry is what keeps debris bounded;
+  *  - the WAREHOUSE tier (`LshIndexQueries.loadOrBuildParts`, which
+  *    the BPE, unigram, LSH, cluster and BM25 artifacts all go
+  *    through) and [[SnapshotManifest]] ids can have RACING
+  *    publishers of one target, so another publisher's tmp may be an
+  *    in-flight write: `deleteDebris = false`.
   *
   * Two modes:
   *  - `overwrite = true` (versioned-state publish, e.g.
@@ -27,39 +34,98 @@ import org.apache.spark.sql.SparkSession
   *    replaced; a redelivered batch N must supersede its own previous
   *    publication. Rename failure throws (state would be lost).
   *  - `overwrite = false` (write-once publish, e.g. `_base=`, `_gen=`,
-  *    `centroids`): an existing COMPLETE target wins and the callback
-  *    never runs (concurrent/replayed publishers collapse to one
-  *    winner; losers read the winner's copy, identical because the
-  *    content is a pure function of the inputs). An INCOMPLETE
-  *    existing target is crash debris and is replaced.
+  *    `centroids`, warehouse artifacts): an existing COMPLETE target
+  *    wins and the callback never runs (concurrent/replayed
+  *    publishers collapse to one winner; losers read the winner's
+  *    copy, identical because the content is a pure function of the
+  *    inputs). An INCOMPLETE existing target is crash debris and is
+  *    replaced.
   *
-  * The callback writes the artifact into the tmp dir and returns
-  * true to publish; returning false aborts (tmp is deleted, nothing
-  * exposed) — for callers that discover mid-write there is nothing
-  * to publish (e.g. an empty retrain frame must not bump a
-  * generation).
-  *
-  * @return true iff THIS call's write became the live target.
+  * The local-path helpers default to a shared Hadoop configuration
+  * because the stream tier's listings run without a session.
   */
-private[streaming] object MarkerProtocol {
+private[graft] object MarkerProtocol {
 
   /** Completeness marker, underscore-prefixed so Spark's file index
     * treats it as hidden — plain parquet reads of the target skip it. */
   val Marker = "_GRAFT_OK"
 
-  def isComplete(f: java.io.File): Boolean =
-    new java.io.File(f, Marker).isFile
+  /** Staging dirs are `<Staging><target name>-<uuid>` siblings. */
+  private val Staging = ".tmp-"
 
-  /** @param deleteDebris sweep same-target `.tmp-` leftovers on entry.
-    *   True for the four single-writer artifact callers (same-target
-    *   tmp leftovers are always crash debris there — scaladoc above).
-    *   MUST be false for callers that support CONCURRENT publishers
-    *   racing on the same target (SnapshotManifest's collapse-to-one-
-    *   winner id allocation): a losing publisher entering publish()
-    *   would otherwise delete the winner's in-flight tmp, and the
-    *   winner's subsequent marker create would resurrect the tmp dir
-    *   and rename a COMPLETE target containing only the marker
-    *   (round-20 ADVICE #1; SnapshotManifestSpec pins the race). */
+  private lazy val localConf = new Configuration()
+
+  private def children(fs: FileSystem, dir: Path): Array[FileStatus] =
+    try fs.listStatus(dir)
+    catch { case _: java.io.FileNotFoundException => Array.empty }
+
+  def isComplete(dir: String,
+      conf: Configuration = localConf): Boolean = {
+    val p = new Path(dir)
+    p.getFileSystem(conf).exists(new Path(p, Marker))
+  }
+
+  /** The ids `n` of the `<prefix><n>` directories under `dir`,
+    * ascending — only those carrying the marker when `completeOnly`.
+    * A missing `dir` has none. */
+  def versions(dir: String, prefix: String, completeOnly: Boolean = false,
+      conf: Configuration = localConf): Seq[Long] = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(conf)
+    children(fs, p).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
+      .filter(st => !completeOnly || fs.exists(new Path(st.getPath, Marker)))
+      .map(_.getPath.getName.stripPrefix(prefix).toLong)
+      .sorted
+  }
+
+  /** Recursively delete the `<prefix><n>` dirs under `dir` whose id
+    * `n` the predicate selects. */
+  def deleteVersions(dir: String, prefix: String)(
+      drop: Long => Boolean): Unit = {
+    val fs = new Path(dir).getFileSystem(localConf)
+    versions(dir, prefix).filter(drop)
+      .foreach(v => fs.delete(new Path(s"$dir/$prefix$v"), true))
+  }
+
+  /** Recursively delete the staging dirs of `<prefix><n>` targets
+    * under `dir` — in-flight publishes or crash debris — that
+    * `drop(n, mtime ms)` selects. */
+  def deleteStaged(dir: String, prefix: String)(
+      drop: (Long, Long) => Boolean): Unit = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(localConf)
+    val tmp = Staging + prefix
+    children(fs, p)
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith(tmp))
+      .filter(st => drop(st.getPath.getName.stripPrefix(tmp)
+        .takeWhile(_ != '-').toLong, st.getModificationTime))
+      .foreach(st => fs.delete(st.getPath, true))
+  }
+
+  /** Withdraw a published dir: the marker goes first, so concurrent
+    * completeness checks see it vanish atomically, then the dir. */
+  def unpublish(dir: String, conf: Configuration = localConf): Unit = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(conf)
+    fs.delete(new Path(p, Marker), false)
+    fs.delete(p, true)
+    ()
+  }
+
+  /** Publish `target`: the callback writes the artifact into the tmp
+    * dir and returns true to publish; returning false aborts (tmp is
+    * deleted, nothing exposed) — for callers that discover mid-write
+    * there is nothing to publish (e.g. an empty retrain frame must not
+    * bump a generation).
+    *
+    * @param deleteDebris sweep same-target `.tmp-` leftovers on entry:
+    *   the tier rule in the scaladoc above. A losing racer entering
+    *   publish() with it set would delete the winner's in-flight tmp,
+    *   and the winner's subsequent marker create would resurrect the
+    *   tmp dir and rename a COMPLETE target containing only the marker
+    *   (SnapshotManifestSpec pins the race).
+    * @return true iff THIS call's write became the live target. */
   def publish(spark: SparkSession, target: String,
       overwrite: Boolean, deleteDebris: Boolean = true)(
       write: Path => Boolean): Boolean = {
@@ -67,12 +133,9 @@ private[streaming] object MarkerProtocol {
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val ok = new Path(base, Marker)
     if (!overwrite && fs.exists(ok)) return false
-    val prefix = s".tmp-${base.getName}-"
-    // same-target crash debris (see scaladoc): deletable here, and
-    // deleting it here is what keeps debris bounded (round-18 #4)
+    val prefix = s"$Staging${base.getName}-"
     if (deleteDebris)
-      (try fs.listStatus(base.getParent)
-       catch { case _: java.io.FileNotFoundException => Array.empty[org.apache.hadoop.fs.FileStatus] })
+      children(fs, base.getParent)
         .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
         .foreach(st => fs.delete(st.getPath, true))
     val tmp = new Path(base.getParent,

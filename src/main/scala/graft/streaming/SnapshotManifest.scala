@@ -43,22 +43,13 @@ object SnapshotManifest {
   private def fsOf(conf: Configuration, p: String) =
     new Path(p).getFileSystem(conf)
 
+  private def manifestDir(root: String, id: Long) =
+    s"${manifestsDir(root)}/manifest=$id"
+
   private def listIds(conf: Configuration, root: String,
-      completeOnly: Boolean): Seq[Long] = {
-    val dir = new Path(manifestsDir(root))
-    val fs = fsOf(conf, root)
-    val sts =
-      try fs.listStatus(dir)
-      catch { case _: java.io.FileNotFoundException =>
-        Array.empty[org.apache.hadoop.fs.FileStatus] }
-    sts.toSeq
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("manifest="))
-      .filter(st => !completeOnly ||
-        fs.exists(new Path(st.getPath, MarkerProtocol.Marker)))
-      .map(_.getPath.getName.stripPrefix("manifest=").toLong)
-      .sorted
-  }
+      completeOnly: Boolean): Seq[Long] =
+    MarkerProtocol.versions(manifestsDir(root), "manifest=",
+      completeOnly, conf)
 
   /** Publish `entries` as the next snapshot; returns its id. The
     * write-once publish makes a concurrent allocation race collapse
@@ -78,7 +69,7 @@ object SnapshotManifest {
       // by their own publish() calls; true crash debris under
       // _manifests is marker-less and readers skip it.
       won = MarkerProtocol.publish(spark,
-        s"${manifestsDir(root)}/manifest=$id", overwrite = false,
+        manifestDir(root, id), overwrite = false,
         deleteDebris = false) { tmp =>
         val out = fs.create(new Path(tmp, "entries"), true)
         val text = entries.toSeq.sorted
@@ -92,6 +83,37 @@ object SnapshotManifest {
     id
   }
 
+  /** Publish one family's pin, RE-RESOLVED against a racing GC.
+    * `resolve` returns the family's current pin plus its check that
+    * the dirs the pin needs still exist (recorded at pin time).
+    *
+    * Pin-vs-GC acquisition window: a concurrent GC can compute its
+    * retention floor BEFORE this manifest lands and reclaim the dirs
+    * the pin resolves to — and the families' pinned reads take
+    * missing dirs as silently absent, so the pinned
+    * view would be WRONG, not failing. Once the manifest is visible,
+    * any GC that lists AFTER it floors at it; so the check runs after
+    * the publish, and a failure (a GC raced the window) drops the
+    * stale manifest and re-pins the post-GC state. Bounded retries —
+    * a pathological GC storm still returns the freshest pin, published
+    * unverified, rather than looping forever or returning a dropped
+    * id. `afterPublish` runs inside the window; it exists so specs can
+    * stage the race deterministically. */
+  private[streaming] def publishVerified(spark: SparkSession,
+      root: String, resolve: () => (Map[String, String], () => Boolean),
+      afterPublish: Long => Unit = _ => ()): Long = {
+    var attempt = 0
+    var verified: Option[Long] = None
+    while (verified.isEmpty && attempt < 5) {
+      attempt += 1
+      val (entries, intact) = resolve()
+      val id = publish(spark, root, entries)
+      afterPublish(id)
+      if (intact()) verified = Some(id) else drop(spark, root, id)
+    }
+    verified.getOrElse(publish(spark, root, resolve()._1))
+  }
+
   /** Pinned entries of manifest `id`, if complete. */
   def read(spark: SparkSession, root: String,
       id: Long): Option[Map[String, String]] =
@@ -100,8 +122,8 @@ object SnapshotManifest {
   def readC(conf: Configuration, root: String,
       id: Long): Option[Map[String, String]] = {
     val fs = fsOf(conf, root)
-    val dir = new Path(s"${manifestsDir(root)}/manifest=$id")
-    if (!fs.exists(new Path(dir, MarkerProtocol.Marker))) return None
+    if (!MarkerProtocol.isComplete(manifestDir(root, id), conf)) return None
+    val dir = new Path(manifestDir(root, id))
     // a marker-present dir WITHOUT an entries file is debris (e.g. a
     // partial object-store rename), not a readable manifest — treat
     // as incomplete so readers, liveC/newest and GC floors skip it
@@ -143,13 +165,8 @@ object SnapshotManifest {
     * any GC. Deleting the marker first makes the drop atomic to
     * concurrent floor computations (a marker-less manifest is not
     * live). */
-  def drop(spark: SparkSession, root: String, id: Long): Unit = {
-    val fs = fsOf(confOf(spark), root)
-    val dir = new Path(s"${manifestsDir(root)}/manifest=$id")
-    fs.delete(new Path(dir, MarkerProtocol.Marker), false)
-    fs.delete(dir, true)
-    ()
-  }
+  def drop(spark: SparkSession, root: String, id: Long): Unit =
+    MarkerProtocol.unpublish(manifestDir(root, id), confOf(spark))
 
   /** The retention floor for one pinned long-valued key: the MINIMUM
     * value any live manifest pins under `key`, or None when no live

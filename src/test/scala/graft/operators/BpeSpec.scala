@@ -257,6 +257,33 @@ class BpeSpec extends AnyFunSuite {
       "loaded vocab frame diverges from trained one")
   }
 
+  test("a marker-less dir at the tokenizer artifact path is replaced by a complete publish, then loaded") {
+    import spark.implicits._
+    val tmpDir = graft.TestTmp.dir("graft_bpe_debris_")
+    Seq((1L, "delta epsilon delta epsilon zeta", "en", "s1", 31L),
+      (2L, "epsilon zeta epsilon delta", "en", "s2", 26L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$tmpDir/documents.parquet")
+    val base = new org.apache.hadoop.fs.Path(
+      graft.TestTmp.register(BpeQueries.artifactPath(spark, tmpDir)))
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // what a crash mid-rename leaves: the target, partly written, with
+    // no completeness marker
+    fs.create(new org.apache.hadoop.fs.Path(base, "merges/part-junk"),
+      true).close()
+    BpeQueries.resetMemoForTest()
+    val before = BpeQueries.trainCount.get()
+    val (m1, _) = BpeQueries.trainedTokenizer(spark, tmpDir)
+    assert(BpeQueries.trainCount.get() == before + 1)
+    assert(fs.exists(new org.apache.hadoop.fs.Path(base, "_GRAFT_OK")),
+      s"debris at $base was not replaced by a complete artifact")
+    BpeQueries.resetMemoForTest()
+    val (m2, _) = BpeQueries.trainedTokenizer(spark, tmpDir)
+    assert(BpeQueries.trainCount.get() == before + 1,
+      "the next JVM must load the published artifact, not retrain")
+    assert(m2 == m1)
+  }
+
   test("bpe replace-encoding equals greedy scan on adversarial overlap corpus") {
     import spark.implicits._
     val docs = Seq(

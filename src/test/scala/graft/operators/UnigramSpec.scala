@@ -245,4 +245,34 @@ class UnigramSpec extends AnyFunSuite {
     assert(pwSet(p2()) == ps1,
       "loaded word segmentation diverges from trained one")
   }
+
+  test("a marker-less dir at the unigram artifact path is replaced by a complete publish, then loaded") {
+    import spark.implicits._
+    val tmpDir = graft.TestTmp.dir("graft_unigram_debris_")
+    Seq((1L, "delta epsilon delta epsilon zeta", "en", "s1", 31L),
+      (2L, "epsilon zeta epsilon delta", "en", "s2", 26L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$tmpDir/documents.parquet")
+    val base = new org.apache.hadoop.fs.Path(
+      graft.TestTmp.register(UnigramQueries.artifactPath(spark, tmpDir)))
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // what a crash mid-rename leaves: the target, partly written, with
+    // no completeness marker
+    fs.create(new org.apache.hadoop.fs.Path(base, "model/part-junk"),
+      true).close()
+    UnigramQueries.resetMemoForTest()
+    val before = UnigramQueries.trainCount.get()
+    val (m1, _) = UnigramQueries.trainedUnigram(spark, tmpDir)
+    val model1 = m1().select("piece", "cost_u").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSet
+    assert(UnigramQueries.trainCount.get() == before + 1)
+    assert(fs.exists(new org.apache.hadoop.fs.Path(base, "_GRAFT_OK")),
+      s"debris at $base was not replaced by a complete artifact")
+    UnigramQueries.resetMemoForTest()
+    val (m2, _) = UnigramQueries.trainedUnigram(spark, tmpDir)
+    assert(UnigramQueries.trainCount.get() == before + 1,
+      "the next JVM must load the published artifact, not retrain")
+    assert(m2().select("piece", "cost_u").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSet == model1)
+  }
 }

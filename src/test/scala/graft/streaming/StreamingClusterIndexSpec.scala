@@ -294,4 +294,39 @@ class StreamingClusterIndexSpec extends AnyFunSuite {
     assert(new java.io.File(stateDir, "batch=1/_GRAFT_OK").isFile &&
       new java.io.File(stateDir, "batch=2/_GRAFT_OK").isFile)
   }
+
+  test("publishSnapshot re-resolves when a racing prune reclaims the pinned version") {
+    import spark.implicits._
+    val srcDir = graft.TestTmp.dir("graft_clrace_src_")
+    val stateDir = graft.TestTmp.dir("graft_clrace_state_")
+    def runBatch(b: Seq[(Long, String)], id: Long): Unit = {
+      val df = b.toDF("doc_id", "text")
+      df.coalesce(1).write.mode("append").parquet(srcDir)
+      ClusterIndexStream.mergeBatch(srcDir, stateDir)(df, id)
+    }
+    runBatch(Seq(70L -> (base + " race family"),
+      71L -> (base + " race family variant")), 0L)
+    // inside the publish→verify window: two more versions land, then a
+    // prune whose retention-floor listing predates the in-flight
+    // manifest (simulated by a manifest root that does not contain
+    // it) reclaims version 0, the one the pin resolved to
+    var publishes = 0
+    val m = SnapshotManifest.publishVerified(spark, stateDir,
+      () => ClusterIndexStream.resolvePin(stateDir), { _ =>
+        publishes += 1
+        if (publishes == 1) {
+          runBatch(Seq(72L -> "completely unrelated content one two three"), 1L)
+          runBatch(Seq(73L -> (base + " race family third variant")), 2L)
+          ClusterIndexStream.pruneVersions(stateDir,
+            manifestRoot = Some(graft.TestTmp.dir("graft_clrace_blind_")))
+          assert(!new java.io.File(stateDir, "batch=0").exists())
+        }
+      })
+    assert(publishes == 2, s"expected a verify-failure retry, got " +
+      s"$publishes publish attempt(s)")
+    assert(SnapshotManifest.read(spark, stateDir, m).get ==
+      Map("cluster.version" -> "2"))
+    assert(labelSet(ClusterIndexStream.labelsAt(spark, stateDir, m)) ==
+      labelSet(ClusterIndexStream.labels(spark, stateDir)))
+  }
 }

@@ -291,4 +291,46 @@ class StreamingIvfSpec extends AnyFunSuite {
     assert(idxSet(IvfIndexStream.index(spark, idxDir)) == live,
       "GC changed the live index")
   }
+
+  test("publishSnapshot re-resolves a gen-0 pin when a drift bump and a racing GC sweep its dirs") {
+    val spark2 = spark
+    import spark2.implicits._
+    val srcDir = graft.TestTmp.dir("graft_ivfrace_src_")
+    val idxDir = graft.TestTmp.dir("graft_ivfrace_idx_")
+    val ckpt = graft.TestTmp.dir("graft_ivfrace_ck_")
+    def ins(ids: Seq[Long]) = ids.map(i => (i, vec(i), "I"))
+    def deliver(b: Seq[(Long, Array[Float], String)]): Unit = {
+      b.toDF("vec_id", "embedding", "op").coalesce(1)
+        .write.mode("append").parquet(srcDir)
+      IvfIndexStream.startCdc(spark, srcDir, idxDir, ckpt)
+        .awaitTermination()
+    }
+    deliver(ins(0L until 4L))
+    // inside the publish→verify window: a skewed batch bumps to
+    // generation 1, then a GC whose retention-floor listing predates
+    // the in-flight manifest (simulated by a manifest root that does
+    // not contain it) reclaims the gen-0 root batch dirs the pin needs
+    var publishes = 0
+    val m = SnapshotManifest.publishVerified(spark, idxDir,
+      () => IvfIndexStream.resolvePin(idxDir), { _ =>
+        publishes += 1
+        if (publishes == 1) {
+          deliver(ins((1L to 12L).map(_ * 8L)))
+          assert(IvfIndexStream.liveGeneration(idxDir) == 1L)
+          IvfIndexStream.gc(idxDir,
+            manifestRoot = Some(graft.TestTmp.dir("graft_ivfrace_blind_")))
+          assert(Option(new java.io.File(idxDir).listFiles()).get
+            .count(_.getName.startsWith("batch=")) == 0)
+        }
+      })
+    // the gen-0 manifest would read an EMPTY index with no error; it
+    // was dropped and the pin retried against generation 1
+    assert(publishes == 2, s"expected a verify-failure retry, got " +
+      s"$publishes publish attempt(s)")
+    assert(SnapshotManifest.read(spark, idxDir, m).get.get("ivf.gen")
+      .contains("1"))
+    val pinned = idxSet(IvfIndexStream.indexAt(spark, idxDir, m))
+    assert(pinned == idxSet(IvfIndexStream.index(spark, idxDir)))
+    assert(pinned.map(_._1) == (0L until 4L).toSet ++ (1L to 12L).map(_ * 8L))
+  }
 }

@@ -20,6 +20,9 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+# the checkout this script lives in: --run builds and runs its code
+REPO = Path(__file__).resolve().parent.parent
+
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
@@ -107,7 +110,7 @@ def main():
         p = subprocess.Popen(
             ["sbt", "-batch",
              f"runMain graft.Verify {sf_dir} {out_dir}{names}"],
-            cwd="/root/repo", stdout=subprocess.PIPE,
+            cwd=REPO, stdout=subprocess.PIPE,
             stderr=subprocess.PIPE, text=True, start_new_session=True)
         try:
             stdout, stderr = p.communicate(timeout=5400)

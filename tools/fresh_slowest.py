@@ -23,6 +23,9 @@ import re
 import subprocess
 import sys
 
+# the checkout this script lives in: it benches that checkout's code
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def bench_one(query: str, sf_dir: str) -> dict:
     env = dict(os.environ,
@@ -30,7 +33,7 @@ def bench_one(query: str, sf_dir: str) -> dict:
                SPARK_GRAFT_CPUS=os.environ.get("SPARK_GRAFT_CPUS", "32"))
     p = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Bench {query}'],
-        cwd="/root/repo", env=env, text=True,
+        cwd=REPO, env=env, text=True,
         stdout=subprocess.PIPE, stderr=subprocess.STDOUT, timeout=3600)
     for line in p.stdout.splitlines():
         m = re.search(r'\{"metric".*\}', line)
