@@ -239,25 +239,22 @@ object Trainer {
       // CrossValidator-parallelism pattern). Each fit is a chain of
       // tiny jobs whose cost is per-job scheduling latency, so
       // overlapping them collapses wall time without changing any
-      // result — every pipeline is seeded and fit in isolation.
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(NumModels)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try {
+      // result — every pipeline is seeded and fit in isolation. The
+      // scope settles every fit before releasePrepared() unpersists.
+      graft.operators.Overlap.scope { o =>
         // data-plane artifact: the indexed frame the slices are cut
         // from, persisted so the serving layer (ApiServer's README
         // routes /stats, /find_allergen, /food_details) can serve the
         // EXACT per-model cumulative slices (rn < n*k/5) after training
-        val dataWrite = Future {
+        val dataWrite = o.fork {
           indexed.write.mode("overwrite").parquet(s"$outDir/food_data")
         }
-        val futures = (1 to NumModels).flatMap { k =>
+        val fits = (1 to NumModels).flatMap { k =>
           // contiguous 0-based index => filter(rn < b) has exactly b
           // rows; no per-slice count() jobs needed
           val nRows = n * k / NumModels
           if (nRows < minRows) None
-          else Some(Future {
+          else Some(o.fork {
             val slice = indexed.filter(col(RnCol) < lit(nRows)).drop(RnCol)
             k match {
               case 1 | 2 =>
@@ -281,9 +278,9 @@ object Trainer {
             k -> nRows
           })
         }
-        Await.result(dataWrite, Duration.Inf)
-        futures.map(Await.result(_, Duration.Inf)).toMap
-      } finally pool.shutdown()
+        dataWrite.join
+        fits.map(_.join).toMap
+      }
     } finally releasePrepared()
   }
 

@@ -39,15 +39,11 @@ object ArtifactSnapshot {
     // load/build jobs back-fill another's tail; each loadOrBuild is
     // internally memoized and write-once, so concurrent resolution
     // changes nothing about what is built or read
-    val (lsh, clust, lex) = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import graft.operators.Overlap.ec
-      val lf = Future(LshIndexQueries.mergedIndex(s, dir))
-      val cf = Future(ClusterIndexQueries.mergedParts(s, dir))
-      val xf = Future(LexIndexQueries.mergedStats(s, dir))
-      (Await.result(lf, Duration.Inf), Await.result(cf, Duration.Inf),
-        Await.result(xf, Duration.Inf))
+    val (lsh, clust, lex) = Overlap.scope { o =>
+      val lf = o.fork(LshIndexQueries.mergedIndex(s, dir))
+      val cf = o.fork(ClusterIndexQueries.mergedParts(s, dir))
+      val xf = o.fork(LexIndexQueries.mergedStats(s, dir))
+      (lf.join, cf.join, xf.join)
     }
     val paths = Map(
       "lsh_rows" ->

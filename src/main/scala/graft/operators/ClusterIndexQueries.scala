@@ -513,17 +513,12 @@ object ClusterIndexQueries {
       // membership, artifact sigs, artifact labels — share nothing;
       // overlap their materialization jobs (identical frames, only
       // job submission overlaps)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import graft.operators.Overlap.ec
-      val membF = Future(membership(docs).localCheckpoint())
-      val sigsF = Future(parts("sigs")().localCheckpoint())
-      val labelsF = Future(parts("labels")().localCheckpoint())
-      // awaitAll (round 22, ADVICE #1): settle every sibling before
-      // propagating a failure, so a failed input can't leave orphan
-      // jobs running into the next query
-      val inputs = Overlap.awaitAll(membF, sigsF, labelsF)
-      val (memb, sigs, labels0) = (inputs(0), inputs(1), inputs(2))
+      val (memb, sigs, labels0) = Overlap.scope { o =>
+        val membF = o.fork(membership(docs).localCheckpoint())
+        val sigsF = o.fork(parts("sigs")().localCheckpoint())
+        val labelsF = o.fork(parts("labels")().localCheckpoint())
+        (membF.join, sigsF.join, labelsF.join)
+      }
       // content grain: deleted iff NO surviving member doc
       val delH = memb
         .groupBy(col("h"))
@@ -572,57 +567,54 @@ object ClusterIndexQueries {
       // long pole, and the other three families' count jobs back-fill
       // its idle tails under FIFO. Identical frames, identical counts;
       // only job submission overlaps.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import graft.operators.Overlap.ec
-      // --- LSH signature index (doc grain) ---
-      val lshF = Future {
-        val idx = snap("lsh_rows")()
-        val idxAfter = idx.join(
-          docs.filter(isRetracted(col("doc_id"))).select(col("doc_id")),
-          Seq("doc_id"), "left_anti")
-        ("lsh_signature_rows", cnt(idx), cnt(idxAfter))
+      val rows = Overlap.scope { o =>
+        // --- LSH signature index (doc grain) ---
+        val lshF = o.fork {
+          val idx = snap("lsh_rows")()
+          val idxAfter = idx.join(
+            docs.filter(isRetracted(col("doc_id"))).select(col("doc_id")),
+            Seq("doc_id"), "left_anti")
+          ("lsh_signature_rows", cnt(idx), cnt(idxAfter))
+        }
+        // --- cluster labels (content grain, planted corpus) ---
+        val clusterF = o.fork {
+          val memb = membership(docs).localCheckpoint()
+          val delH = memb.groupBy(col("h"))
+            .agg(max(when(!isRetracted(col("doc_id")), 1L).otherwise(0L))
+              .as("alive"))
+            .filter(col("alive") === 0).select(col("h"))
+          val (_, labelsAfter) = delCore(
+            snap("cluster_sigs")().localCheckpoint(),
+            snap("cluster_labels")().localCheckpoint(),
+            delH,
+            survH => withShingles(contentGroups(docs)
+              .join(survH, Seq("h"), "left_semi")))
+          ("cluster_label_rows", cnt(snap("cluster_labels")()),
+            cnt(labelsAfter))
+        }
+        // --- BM25 vocabulary (term grain) ---
+        val bm25F = o.fork {
+          val (dfAfter, _) = LexIndexQueries.subtractStats(
+            snap("lex_df")(), snap("lex_meta")(),
+            docs.filter(isRetracted(col("doc_id"))))
+          ("bm25_vocab_terms", cnt(snap("lex_df")()), cnt(dfAfter))
+        }
+        // --- IVF assignments (vector grain): q293's REAL artifact and
+        // repair path — the frozen-centroid assignment frame and its
+        // tombstone anti-join (shared helper ivfAssigned, so a
+        // dropped/duplicated row in the assignment path is VISIBLE to
+        // this audit; the oracle's embeddings COUNT agrees only because
+        // the assignment emits exactly one row per vector) ---
+        val ivfF = o.fork {
+          val assigned = snap("ivf_assigned")().localCheckpoint()
+          val assignedAfter = assigned.join(
+            assigned.filter(isRetracted(col("vec_id")))
+              .select(col("vec_id")),
+            Seq("vec_id"), "left_anti")
+          ("ivf_assignment_rows", cnt(assigned), cnt(assignedAfter))
+        }
+        Seq(bm25F, clusterF, ivfF, lshF).map(_.join)
       }
-      // --- cluster labels (content grain, planted corpus) ---
-      val clusterF = Future {
-        val memb = membership(docs).localCheckpoint()
-        val delH = memb.groupBy(col("h"))
-          .agg(max(when(!isRetracted(col("doc_id")), 1L).otherwise(0L))
-            .as("alive"))
-          .filter(col("alive") === 0).select(col("h"))
-        val (_, labelsAfter) = delCore(
-          snap("cluster_sigs")().localCheckpoint(),
-          snap("cluster_labels")().localCheckpoint(),
-          delH,
-          survH => withShingles(contentGroups(docs)
-            .join(survH, Seq("h"), "left_semi")))
-        ("cluster_label_rows", cnt(snap("cluster_labels")()),
-          cnt(labelsAfter))
-      }
-      // --- BM25 vocabulary (term grain) ---
-      val bm25F = Future {
-        val (dfAfter, _) = LexIndexQueries.subtractStats(
-          snap("lex_df")(), snap("lex_meta")(),
-          docs.filter(isRetracted(col("doc_id"))))
-        ("bm25_vocab_terms", cnt(snap("lex_df")()), cnt(dfAfter))
-      }
-      // --- IVF assignments (vector grain): q293's REAL artifact and
-      // repair path — the frozen-centroid assignment frame and its
-      // tombstone anti-join (shared helper ivfAssigned, so a
-      // dropped/duplicated row in the assignment path is VISIBLE to
-      // this audit; the oracle's embeddings COUNT agrees only because
-      // the assignment emits exactly one row per vector) ---
-      val ivfF = Future {
-        val assigned = snap("ivf_assigned")().localCheckpoint()
-        val assignedAfter = assigned.join(
-          assigned.filter(isRetracted(col("vec_id")))
-            .select(col("vec_id")),
-          Seq("vec_id"), "left_anti")
-        ("ivf_assignment_rows", cnt(assigned), cnt(assignedAfter))
-      }
-      // awaitAll (round 22, ADVICE #1): a failed family no longer
-      // leaves its siblings' jobs running into the next query
-      val rows = Overlap.awaitAll(bm25F, clusterF, ivfF, lshF)
       rows.toDF("artifact", "rows_before", "rows_after")
         .withColumn("rows_removed", col("rows_before") - col("rows_after"))
         .orderBy(col("artifact"))

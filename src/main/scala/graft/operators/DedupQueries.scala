@@ -2230,14 +2230,13 @@ object DedupQueries {
     * plans, identical results; only job SUBMISSION overlaps. */
   private[graft] def bothSides(train: DataFrame, evalDocs: DataFrame)
       : (ShingleParts, ShingleParts) = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import graft.operators.Overlap.ec
-    val tf = Future(decontamShingleParts(
-      train.select(col("doc_id"), col("text"))))
-    val ef = Future(decontamShingleParts(
-      evalDocs.select(col("doc_id"), col("text"))))
-    (Await.result(tf, Duration.Inf), Await.result(ef, Duration.Inf))
+    Overlap.scope { o =>
+      val tf = o.fork(decontamShingleParts(
+        train.select(col("doc_id"), col("text"))))
+      val ef = o.fork(decontamShingleParts(
+        evalDocs.select(col("doc_id"), col("text"))))
+      (tf.join, ef.join)
+    }
   }
 
   /** LSH kernel over PRE-BUILT content-grain parts (see
@@ -2279,12 +2278,9 @@ object DedupQueries {
     }
     // the two sides' signature checkpoints are independent — overlap
     // their jobs (guide §2.6)
-    val (bandsT, bandsE0) = {
-      import scala.concurrent.Future
-      import graft.operators.Overlap.ec
-      val (tf, ef) = (Future(bandsOf(tg)), Future(bandsOf(eg)))
-      val rs = Overlap.awaitAll(tf, ef)
-      (rs(0), rs(1))
+    val (bandsT, bandsE0) = Overlap.scope { o =>
+      val (tf, ef) = (o.fork(bandsOf(tg)), o.fork(bandsOf(eg)))
+      (tf.join, ef.join)
     }
     // measurement is free: |grp| rode the eval side's checkpoint job
     // (ShingleParts.nGroups, round 22 — the old form paid a separate
@@ -2437,42 +2433,39 @@ object DedupQueries {
       // over tiny frames, and sequential construction serialized ~25
       // such jobs; overlapping their SUBMISSION back-fills the idle
       // cores with identical plans and identical results
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import graft.operators.Overlap.ec
-      val trainF = Future(decontamShingleParts(
-        docs.select(col("doc_id"), col("text"))))
-      val paraF = Future {
-        base
-          .select(col("doc_id"), (col("doc_id") * -2 - 3).as("eval_id"),
-            array_join(transform(col("w"), (x, i) =>
-              when(i % 2 === 1, lit("xq")).otherwise(x)), " ").as("text"))
-          .join(t(s, dir, "embeddings").select(col("vec_id"),
-            transform(col("embedding"), x => x.cast(DoubleType)).as("v0")),
-            col("doc_id") === col("vec_id"))
-          .select(col("eval_id"), col("text"),
-            transform(col("v0"), (x, i) =>
-              when(i % 7 === 0, x + lit(0.01)).otherwise(x)).as("v"))
-          .localCheckpoint()
+      val (lsh, con, sem) = Overlap.scope { o =>
+        val trainF = o.fork(decontamShingleParts(
+          docs.select(col("doc_id"), col("text"))))
+        val para = o.fork {
+          base
+            .select(col("doc_id"), (col("doc_id") * -2 - 3).as("eval_id"),
+              array_join(transform(col("w"), (x, i) =>
+                when(i % 2 === 1, lit("xq")).otherwise(x)), " ").as("text"))
+            .join(t(s, dir, "embeddings").select(col("vec_id"),
+              transform(col("embedding"), x => x.cast(DoubleType)).as("v0")),
+              col("doc_id") === col("vec_id"))
+            .select(col("eval_id"), col("text"),
+              transform(col("v0"), (x, i) =>
+                when(i % 7 === 0, x + lit(0.01)).otherwise(x)).as("v"))
+            .localCheckpoint()
+        }.join
+        val evalDocs = nearCopy.unionByName(embedded)
+          .unionByName(para.select(col("eval_id").as("doc_id"), col("text")))
+        // shared-kernel discipline, round 15 (content-grain since round
+        // 18): each side's tokenize+shingle pass materializes ONCE — at
+        // one row per DISTINCT content — and feeds both lexical arms
+        val evalF = o.fork(decontamShingleParts(
+          evalDocs.select(col("doc_id"), col("text"))))
+        val semF = o.fork(SimilarityQueries.semanticDecontamParts(
+          t(s, dir, "embeddings").select(col("vec_id"),
+            transform(col("embedding"), x => x.cast(DoubleType)).as("v")),
+          para.select(col("eval_id"), col("v")))._2)
+        val (tp, ep) = (trainF.join, evalF.join)
+        val lsh = lshDecontamPartsOn(tp, ep,
+          bands = 8, rowsPerBand = 1, tau = 0.5)._2
+        val con = containmentDecontamPartsOn(tp, ep)._2
+        (lsh, con, semF.join)
       }
-      val para = Await.result(paraF, Duration.Inf)
-      val evalDocs = nearCopy.unionByName(embedded)
-        .unionByName(para.select(col("eval_id").as("doc_id"), col("text")))
-      // shared-kernel discipline, round 15 (content-grain since round
-      // 18): each side's tokenize+shingle pass materializes ONCE — at
-      // one row per DISTINCT content — and feeds both lexical arms
-      val evalF = Future(decontamShingleParts(
-        evalDocs.select(col("doc_id"), col("text"))))
-      val semF = Future(SimilarityQueries.semanticDecontamParts(
-        t(s, dir, "embeddings").select(col("vec_id"),
-          transform(col("embedding"), x => x.cast(DoubleType)).as("v")),
-        para.select(col("eval_id"), col("v")))._2)
-      val tp = Await.result(trainF, Duration.Inf)
-      val ep = Await.result(evalF, Duration.Inf)
-      val lsh = lshDecontamPartsOn(tp, ep,
-        bands = 8, rowsPerBand = 1, tau = 0.5)._2
-      val con = containmentDecontamPartsOn(tp, ep)._2
-      val sem = Await.result(semF, Duration.Inf)
       lsh.join(con, Seq("train_id", "eval_id"), "full_outer")
         .select(col("train_id"), col("eval_id"),
           col("jac"), col("containment"),
@@ -2628,7 +2621,7 @@ object DedupQueries {
         // LshIndexQueries.signatures IS that kernel (same banding,
         // null-text and null-bh rows dropped; a null bh never
         // equi-joined into the output here anyway). The round-18
-        // stage breakdown (tools/Q251Prof) measured the old per-DOC
+        // stage breakdown (SCALE.md) measured the old per-DOC
         // pass at 38-50 s of the query's 39-51 s total at ×100 —
         // ~100 replicas per content, ~100× redundant minhash — and
         // its multi-GB doc-grain shingle lineage was also the

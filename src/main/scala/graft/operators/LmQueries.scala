@@ -114,16 +114,13 @@ object LmQueries {
       // their checkpoint jobs overlap (each job re-runs the ref explode;
       // concurrent submission makes the wall the max, not the sum, and
       // the shared scan stages back-fill each other's tails)
-      val (uni, big) = {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import graft.operators.Overlap.ec
-        val uf = Future(ref.groupBy(col("lang"), col("w"))
+      val (uni, big) = Overlap.scope { o =>
+        val uf = o.fork(ref.groupBy(col("lang"), col("w"))
           .agg(count(lit(1)).as("c1")).localCheckpoint())
-        val bf = Future(ref.filter(col("v").isNotNull)
+        val bf = o.fork(ref.filter(col("v").isNotNull)
           .groupBy(col("lang"), col("v"), col("w"))
           .agg(count(lit(1)).as("c2")).localCheckpoint())
-        (Await.result(uf, Duration.Inf), Await.result(bf, Duration.Inf))
+        (uf.join, bf.join)
       }
       val nv = uni.groupBy(col("lang"))
         .agg(sum(col("c1")).as("n_lm"), count(lit(1)).as("v_lm"))
@@ -261,12 +258,10 @@ object LmQueries {
       // their checkpoint jobs overlap (guide §2.6, the q252 uni/big
       // pattern) so the slim memb pass back-fills the CPU-dense
       // explode/aggregate stage's tail instead of serializing after it
-      val (memb, hb) = {
-        import scala.concurrent.Future
-        import graft.operators.Overlap.ec
-        val mf = Future(base.select(col("doc_id"), col("source"), col("h"))
+      val (memb, hb) = Overlap.scope { o =>
+        val mf = o.fork(base.select(col("doc_id"), col("source"), col("h"))
           .localCheckpoint())
-        val hf = Future(graft.operators.ShufflePlan.pinnedByKey(
+        val hf = o.fork(graft.operators.ShufflePlan.pinnedByKey(
           base.select(col("h"), col("nt")), col("h"))
           .groupBy(col("h")).agg(min(col("nt")).as("nt"))
           .withColumn("ws", split(col("nt"), " "))
@@ -283,8 +278,7 @@ object LmQueries {
           .groupBy(col("h"), col("b"))
           .agg(count(lit(1)).as("cnt"))
           .localCheckpoint())
-        val r = Overlap.awaitAll(mf, hf)
-        (r(0), r(1))
+        (mf.join, hf.join)
       }
       val membCounts = memb.groupBy(col("h"))
         .agg(sum(when(col("source").isin(RefTier: _*), 1L)

@@ -73,73 +73,71 @@ object LtrHoldoutQueries {
     // share nothing until the shortlists join them — overlap their
     // eager checkpoint jobs (identical frames, identical plans; only
     // job submission overlaps)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import graft.operators.Overlap.ec
-    val scoredF = Future {
-      // ---- lexical side: ONE tokenize pass for all 9 terms ----
-      // Adaptive content grain (round 21, the q251/q253 reshape): tf
-      // and dl are pure functions of the RAW text, so on a replicated
-      // corpus the tokenize + 9 term-count projections run once per
-      // DISTINCT text and fan out through a slim (doc_id, th)
-      // membership join — at ×100 (verbatim 100× replication) that is
-      // ~replication× less regex work for byte-identical rows. The
-      // census (the dedup family's 1.5× cut, GRAFT_GRAIN_FORCE
-      // honored) keeps the direct per-doc form on low-replication
-      // corpora where the md5+join detour dedupes nothing. Per-doc
-      // stats (n, avgdl, df) aggregate the fanned-out doc-grain frame
-      // either way — identical values.
-      val rawDocs = t(s, dir, "documents").filter(col("text").isNotNull)
-      val withTf = (d: org.apache.spark.sql.DataFrame) =>
-        allTerms.zipWithIndex.foldLeft(
-          d.withColumn("dl", size(col("w")).cast(DoubleType))) {
-          case (x, (term, i)) =>
-            x.withColumn(s"tf$i",
-              size(filter(col("w"), y => y === term)).cast(DoubleType))
-        }.drop("w")
-      // round 22 (ADVICE #2): the census runs as a plain aggregate
-      // over the scan — the old checkpointed membership frame was
-      // computed on every run solely to make the grain decision and
-      // then DISCARDED on the doc-grain branch (a full md5 pass plus
-      // a checkpoint job for nothing there); the content branch, the
-      // only consumer, materializes it after the decision
-      val membIn = rawDocs
-        .select(col("doc_id"), md5(col("text")).as("h"))
-      val tf = (if (DedupQueries.contentGrainByCensus(membIn)) {
-        val memb = membIn.localCheckpoint()
-        val gtf = withTf(
-          rawDocs.select(md5(col("text")).as("h"), col("text"))
-            .groupBy(col("h")).agg(min(col("text")).as("text"))
-            .select(col("h"), TextOps.words(col("text")).as("w")))
-        memb.join(gtf, "h").drop("h")
-      } else {
-        withTf(rawDocs
-          .select(col("doc_id"), TextOps.words(col("text")).as("w")))
-      }).localCheckpoint()
-      val aggs = count(lit(1)).cast(DoubleType).as("n") +:
-        avg(col("dl")).as("avgdl") +:
-        allTerms.indices.map(i =>
-          sum(when(col(s"tf$i") > 0, 1).otherwise(0))
-            .cast(DoubleType).as(s"df$i"))
-      val stats = tf.agg(aggs.head, aggs.tail: _*)
-      tf.crossJoin(broadcast(stats)).localCheckpoint()
+    val (scored, sims) = Overlap.scope { o =>
+      val scoredF = o.fork {
+        // ---- lexical side: ONE tokenize pass for all 9 terms ----
+        // Adaptive content grain (round 21, the q251/q253 reshape): tf
+        // and dl are pure functions of the RAW text, so on a replicated
+        // corpus the tokenize + 9 term-count projections run once per
+        // DISTINCT text and fan out through a slim (doc_id, th)
+        // membership join — at ×100 (verbatim 100× replication) that is
+        // ~replication× less regex work for byte-identical rows. The
+        // census (the dedup family's 1.5× cut, GRAFT_GRAIN_FORCE
+        // honored) keeps the direct per-doc form on low-replication
+        // corpora where the md5+join detour dedupes nothing. Per-doc
+        // stats (n, avgdl, df) aggregate the fanned-out doc-grain frame
+        // either way — identical values.
+        val rawDocs = t(s, dir, "documents").filter(col("text").isNotNull)
+        val withTf = (d: org.apache.spark.sql.DataFrame) =>
+          allTerms.zipWithIndex.foldLeft(
+            d.withColumn("dl", size(col("w")).cast(DoubleType))) {
+            case (x, (term, i)) =>
+              x.withColumn(s"tf$i",
+                size(filter(col("w"), y => y === term)).cast(DoubleType))
+          }.drop("w")
+        // round 22 (ADVICE #2): the census runs as a plain aggregate
+        // over the scan — the old checkpointed membership frame was
+        // computed on every run solely to make the grain decision and
+        // then DISCARDED on the doc-grain branch (a full md5 pass plus
+        // a checkpoint job for nothing there); the content branch, the
+        // only consumer, materializes it after the decision
+        val membIn = rawDocs
+          .select(col("doc_id"), md5(col("text")).as("h"))
+        val tf = (if (DedupQueries.contentGrainByCensus(membIn)) {
+          val memb = membIn.localCheckpoint()
+          val gtf = withTf(
+            rawDocs.select(md5(col("text")).as("h"), col("text"))
+              .groupBy(col("h")).agg(min(col("text")).as("text"))
+              .select(col("h"), TextOps.words(col("text")).as("w")))
+          memb.join(gtf, "h").drop("h")
+        } else {
+          withTf(rawDocs
+            .select(col("doc_id"), TextOps.words(col("text")).as("w")))
+        }).localCheckpoint()
+        val aggs = count(lit(1)).cast(DoubleType).as("n") +:
+          avg(col("dl")).as("avgdl") +:
+          allTerms.indices.map(i =>
+            sum(when(col(s"tf$i") > 0, 1).otherwise(0))
+              .cast(DoubleType).as(s"df$i"))
+        val stats = tf.agg(aggs.head, aggs.tail: _*)
+        tf.crossJoin(broadcast(stats)).localCheckpoint()
+      }
+      // ---- dense side: ONE embeddings pass for all 3 probe sims ----
+      val simsF = o.fork {
+        val e = t(s, dir, "embeddings")
+          .select(col("vec_id"), asDouble(col("embedding")).as("v"))
+        val probes = e.filter(col("vec_id") < qterms.size)
+          .groupBy().pivot("vec_id").agg(first(col("v")))
+          .select((0 until qterms.size).map(q =>
+            col(q.toString).as(s"pv$q")): _*)
+        e.crossJoin(broadcast(probes))
+          .select(col("vec_id") +:
+            (0 until qterms.size).map(q =>
+              cosine(col("v"), col(s"pv$q")).as(s"sim$q")): _*)
+          .localCheckpoint()
+      }
+      (scoredF.join, simsF.join)
     }
-    // ---- dense side: ONE embeddings pass for all 3 probe sims ----
-    val simsF = Future {
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      val probes = e.filter(col("vec_id") < qterms.size)
-        .groupBy().pivot("vec_id").agg(first(col("v")))
-        .select((0 until qterms.size).map(q =>
-          col(q.toString).as(s"pv$q")): _*)
-      e.crossJoin(broadcast(probes))
-        .select(col("vec_id") +:
-          (0 until qterms.size).map(q =>
-            cosine(col("v"), col(s"pv$q")).as(s"sim$q")): _*)
-        .localCheckpoint()
-    }
-    val scored = Await.result(scoredF, Duration.Inf)
-    val sims = Await.result(simsF, Duration.Inf)
     // ---- per-query shortlists + fusion over the slim frames ----
     val perQ = qterms.zipWithIndex.map { case (terms, q) =>
       val idx = terms.map(allTerms.indexOf)
@@ -375,13 +373,11 @@ object LtrHoldoutQueries {
       val labeled = features(s, dir)
         .withColumn("rel_d", col("rel_u").cast(DoubleType))
         .localCheckpoint()
-      val reranked = {
-        import scala.concurrent.Future
-        import graft.operators.Overlap.ec
-        val futs = (0L until qterms.size.toLong)
-          .map(f => Future(heldoutRerankOn(labeled, f)
+      val reranked = Overlap.scope { o =>
+        (0L until qterms.size.toLong)
+          .map(f => o.fork(heldoutRerankOn(labeled, f)
             .withColumn("fold", lit(f))))
-        Overlap.awaitAll(futs: _*)
+          .map(_.join)
       }
       // round 22 (job-count cut): ONE union + ONE grouped aggregate
       // replaces the per-fold 1-row aggregates, their union

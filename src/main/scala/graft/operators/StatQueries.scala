@@ -402,19 +402,16 @@ object StatQueries {
       // back on the key cut that to the slowest single pass). Each
       // pass output is just (o_custkey, rn); the equi-joins back are
       // customer-dimension-sized and AQE picks their strategy.
-      import scala.concurrent.{Await, Future}
-      import graft.operators.Overlap.ec
-      import scala.concurrent.duration.Duration
-      def pass(order: Seq[Column], rn: String) = Future {
-        val (d, n) = PrefixPass.withRowNumber(perCust, order, rn)
-        (d.select(col("o_custkey"), col(rn)), n)
+      val ((pr, n), (pf, _), (pm, _)) = Overlap.scope { o =>
+        def pass(order: Seq[Column], rn: String) = o.fork {
+          val (d, n) = PrefixPass.withRowNumber(perCust, order, rn)
+          (d.select(col("o_custkey"), col(rn)), n)
+        }
+        val fr = pass(Seq(col("last_order").desc, col("o_custkey").asc), "rn_r")
+        val ff = pass(Seq(col("freq").desc, col("o_custkey").asc), "rn_f")
+        val fm = pass(Seq(col("mon").desc, col("o_custkey").asc), "rn_m")
+        (fr.join, ff.join, fm.join)
       }
-      val fr = pass(Seq(col("last_order").desc, col("o_custkey").asc), "rn_r")
-      val ff = pass(Seq(col("freq").desc, col("o_custkey").asc), "rn_f")
-      val fm = pass(Seq(col("mon").desc, col("o_custkey").asc), "rn_m")
-      val (pr, n) = Await.result(fr, Duration.Inf)
-      val (pf, _) = Await.result(ff, Duration.Inf)
-      val (pm, _) = Await.result(fm, Duration.Inf)
       // NTILE(5) from the 1-based global row number over the n
       // (driver-known) customers — the shared PrefixPass formula
       def nt(rn: String): Column = PrefixPass.ntileExpr(rn, s"${n}L", 5)

@@ -150,9 +150,12 @@ class ApiServer(spark: SparkSession, modelDir: String, port: Int = 0) {
 
   server.createContext("/predict/", (ex: HttpExchange) => {
     val id = Try(ex.getRequestURI.getPath.stripPrefix("/predict/").toInt)
-    val body = new String(ex.getRequestBody.readAllBytes(),
-      StandardCharsets.UTF_8)
+    val bytes = ex.getRequestBody.readNBytes(ApiServer.MaxBodyBytes + 1)
+    val body = new String(bytes, StandardCharsets.UTF_8)
     (ex.getRequestMethod, id.toOption) match {
+      case _ if bytes.length > ApiServer.MaxBodyBytes =>
+        respond(ex, 413,
+          s"""{"error":"request body over ${ApiServer.MaxBodyBytes} bytes"}""")
       case ("POST", Some(k)) if k >= 1 && k <= Trainer.NumModels =>
         if (!models.contains(k))
           // known-but-unloaded is 404, matching api.py:192,203,216,224
@@ -332,6 +335,10 @@ object ApiServer {
 
   /** /find_allergen's cap on returned matches. */
   private val MaxMatches = 100
+
+  /** /predict's cap on the request body: a larger body is a 413, so
+    * one request cannot fill the driver heap. */
+  private val MaxBodyBytes = 1 << 20
 
   /** food_data on the driver, one array per column, indexed by its
     * contiguous `__graft_rn`: `Array[Double]` per double column (NULL

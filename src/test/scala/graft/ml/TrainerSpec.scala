@@ -1,5 +1,9 @@
 package graft.ml
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import org.apache.spark.{ListenerBusDrain, SparkException}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -226,5 +230,36 @@ class TrainerSpec extends AnyFunSuite {
       assert(local.length == fitted.length)
       local.indices.foreach(i => assert(local(i) == fitted(i), s"feature $i of $p"))
     }
+  }
+
+  test("a failed fit cancels the other fits; trainAll throws only once every fit has settled") {
+    val sc = spark.sparkContext
+    val out = java.nio.file.Files.createTempDirectory("graft_t_fail_").toString
+    val data = syntheticFood(2000)
+    // every job start, in order; every KMeans job is cancelled as it
+    // starts, so fit 1 or fit 2 fails while the GBT fits still run
+    val starts = new ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        starts.add(e.jobId)
+        if (e.stageInfos.exists(_.name.contains("KMeans"))) sc.cancelJob(e.jobId)
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val e = intercept[SparkException](
+        Trainer.trainAll(data, Seq("description"), out))
+      ListenerBusDrain(sc)
+      val active = sc.statusTracker.getActiveJobIds().toSeq
+      val startedAtThrow = starts.size
+      assert(e.getMessage.contains("cancel"), e.getMessage)
+      assert(active.isEmpty, s"jobs still running after trainAll threw: $active")
+      Thread.sleep(1000)
+      ListenerBusDrain(sc)
+      assert(starts.size == startedAtThrow, "a job started after trainAll threw")
+      // the GBT fits were cancelled, not run to completion
+      Seq(4, 5).foreach(k =>
+        assert(!new java.io.File(s"$out/model_$k").exists, s"model_$k was saved"))
+    } finally sc.removeSparkListener(listener)
   }
 }

@@ -345,4 +345,12 @@ class ApiServerSpec extends AnyFunSuite {
     val ms = keepAliveMs(server.boundPort, "/health", 20).sorted
     assert(ms(ms.size / 2) < 20.0, s"p50 ${ms(ms.size / 2)} ms of $ms")
   }
+
+  test("a /predict body over 1 MiB gets 413, and the server keeps serving") {
+    val (code, body) = call(server, "/predict/1", Some("x" * ((1 << 20) + 1024)))
+    assert(code == 413, body)
+    assert(call(server, "/predict/1", Some("{}"))._1 == 200)
+    assert(call(server, "/predict/1", Some(" " * (1 << 20) + "{}"))._1 == 413)
+    assert(call(server, "/predict/4", Some(" " * ((1 << 20) - 2) + "{}"))._1 == 200)
+  }
 }
