@@ -213,10 +213,16 @@ object Trainer {
 
   /** The full reference training run: prepare, label, persist, 5
     * cumulative slices, one model per slice, artifacts saved under
-    * `outDir/model_<k>` (+ `outDir/reco_snapshot` parquet for model 3).
-    * Slices smaller than `minRows` are skipped, mirroring the
-    * reference's count gates (spark_model_trainer.py:72,121,158).
-    * Returns the per-model row counts actually trained on.
+    * `outDir/model_<k>` (+ `outDir/reco_snapshot` parquet for model 3,
+    * and the `outDir/food_data` serving frame). Slices smaller than
+    * `minRows` are skipped, mirroring the reference's count gates
+    * (spark_model_trainer.py:72,121,158). Returns the per-model row
+    * counts actually trained on.
+    *
+    * The whole set is staged in one dir and replaces `outDir` through
+    * one [[graft.streaming.MarkerProtocol]] publish, so a failed run
+    * leaves the previous set (or none), never a partial set that looks
+    * trained. One trainer writes a given `outDir` at a time.
     */
   def trainAll(
       raw: DataFrame,
@@ -233,7 +239,10 @@ object Trainer {
     // scheduling floor was a visible slice of the q63 bench line.
     val (indexed, releasePrepared, n) = indexByOrderN(
       withLabel(prepare(raw)), orderCols, rowsPerPartition = 4096L)
-    try {
+    var trained = Map.empty[Int, Long]
+    try graft.streaming.MarkerProtocol.publish(raw.sparkSession, outDir,
+        overwrite = true) { staged =>
+      val dir = staged.toString
       // The 5 fits are independent seeded pipelines over nested slices
       // of the SAME cached frame: run them concurrently (the
       // CrossValidator-parallelism pattern). Each fit is a chain of
@@ -241,13 +250,13 @@ object Trainer {
       // overlapping them collapses wall time without changing any
       // result — every pipeline is seeded and fit in isolation. The
       // scope settles every fit before releasePrepared() unpersists.
-      graft.operators.Overlap.scope { o =>
+      trained = graft.operators.Overlap.scope { o =>
         // data-plane artifact: the indexed frame the slices are cut
         // from, persisted so the serving layer (ApiServer's README
         // routes /stats, /find_allergen, /food_details) can serve the
         // EXACT per-model cumulative slices (rn < n*k/5) after training
         val dataWrite = o.fork {
-          indexed.write.mode("overwrite").parquet(s"$outDir/food_data")
+          indexed.write.mode("overwrite").parquet(s"$dir/food_data")
         }
         val fits = (1 to NumModels).flatMap { k =>
           // contiguous 0-based index => filter(rn < b) has exactly b
@@ -259,21 +268,21 @@ object Trainer {
             k match {
               case 1 | 2 =>
                 clusteringPipeline().fit(slice)
-                  .write.overwrite().save(s"$outDir/model_$k")
+                  .write.overwrite().save(s"$dir/model_$k")
               case 3 =>
                 val pm = scalingPipeline().fit(slice)
-                pm.write.overwrite().save(s"$outDir/model_$k")
+                pm.write.overwrite().save(s"$dir/model_$k")
                 pm.transform(slice)
                   .select(col(FoodSchema.descriptionCol),
                     col("scaled_features"))
                   .write.mode("overwrite")
-                  .parquet(s"$outDir/reco_snapshot")
+                  .parquet(s"$dir/reco_snapshot")
               case 4 =>
                 regressionPipeline().fit(slice)
-                  .write.overwrite().save(s"$outDir/model_$k")
+                  .write.overwrite().save(s"$dir/model_$k")
               case 5 =>
                 classificationPipeline().fit(slice)
-                  .write.overwrite().save(s"$outDir/model_$k")
+                  .write.overwrite().save(s"$dir/model_$k")
             }
             k -> nRows
           })
@@ -281,7 +290,9 @@ object Trainer {
         dataWrite.join
         fits.map(_.join).toMap
       }
+      true
     } finally releasePrepared()
+    trained
   }
 
   def loadModel(dir: String, k: Int): PipelineModel =

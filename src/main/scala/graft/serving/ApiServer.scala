@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions.{col, lower}
 import org.apache.spark.sql.types.{DoubleType, StringType}
 
 import graft.ml.{FoodSchema, Serve, Trainer}
-import graft.operators.GatedBroadcast
+import graft.operators.{GatedBroadcast, Overlap}
 
 /** The reference's serving API (api_server/api.py:172-269), minus
   * Flask: `POST /predict/<model_id>` routes by model type over the
@@ -45,28 +45,33 @@ import graft.operators.GatedBroadcast
   */
 class ApiServer(spark: SparkSession, modelDir: String, port: Int = 0) {
 
-  private val models: Map[Int, PipelineModel] =
-    (1 to Trainer.NumModels).flatMap { k =>
-      Try(Trainer.loadModel(modelDir, k)).toOption.map(k -> _)
-    }.toMap
-
-  private val foods: Option[DataFrame] =
-    Try(spark.read.parquet(s"$modelDir/food_data")).toOption
-  private val foodCount: Long = foods.map(_.count()).getOrElse(0L)
-
-  /** Driver-resident copies of the data routes' artifacts, held while
-    * food_data's measured row count is within the gate; None above it,
-    * where those routes run distributed. */
-  private val resident: Option[DataFrame] = foods.filter(df =>
-    foodCount <= GatedBroadcast.rowLimit(df) / 10)
-  private val foodColumns: Option[ApiServer.FoodColumns] =
-    resident.filter(ApiServer.FoodColumns.fits)
-      .map(ApiServer.FoodColumns.load(_, foodCount.toInt))
-  // a missing snapshot keeps the distributed path, which reports it per
-  // request as it always has
-  private val recoSnapshot: Option[Serve.RecoSnapshot] =
-    if (resident.isEmpty || !models.contains(3)) None
-    else Try(Serve.loadRecoSnapshot(spark, s"$modelDir/reco_snapshot")).toOption
+  /** The artifacts, loaded at once through one `Overlap` scope: the
+    * five models, food_data and its count, then, once the count has
+    * set the gate, the driver-resident copies of the data routes'
+    * artifacts (None above the gate, where those routes run
+    * distributed). A missing model or snapshot stays absent, as
+    * `/health` reports, without cancelling the other loads. */
+  private val (models, foods, foodCount, foodColumns, recoSnapshot) =
+    Overlap.scope { o =>
+      val loads = (1 to Trainer.NumModels).map(k =>
+        k -> o.fork(Try(Trainer.loadModel(modelDir, k)).toOption)).toMap
+      val counted = o.fork(Try(spark.read.parquet(s"$modelDir/food_data"))
+        .toOption.map(df => df -> df.count()))
+      val foods = counted.join.map(_._1)
+      val foodCount = counted.join.fold(0L)(_._2)
+      val resident = foods.filter(df =>
+        foodCount <= GatedBroadcast.rowLimit(df) / 10)
+      val columns = o.fork(resident.filter(ApiServer.FoodColumns.fits)
+        .map(ApiServer.FoodColumns.load(_, foodCount.toInt)))
+      // a missing snapshot keeps the distributed path, which reports it
+      // per request as it always has
+      val snapshot = o.fork(
+        if (resident.isEmpty || loads(3).join.isEmpty) None
+        else Try(Serve.loadRecoSnapshot(spark, s"$modelDir/reco_snapshot")).toOption)
+      val models: Map[Int, PipelineModel] =
+        loads.flatMap { case (k, f) => f.join.map(k -> _) }.toMap
+      (models, foods, foodCount, columns.join, snapshot.join)
+    }
 
   private val server = ApiServer.createServer(port)
   // the JDK server's default executor is the caller thread — serialize

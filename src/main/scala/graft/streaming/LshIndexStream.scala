@@ -309,12 +309,10 @@ private[streaming] object TombstoneSidecar {
 private[streaming] object FoldStream {
   def start(spark: SparkSession, srcDir: String, schema: String,
       checkpoint: String, fold: (DataFrame, Long) => Unit): StreamingQuery =
-    spark.readStream
+    StreamStart(spark, spark.readStream
       .schema(schema)
       .parquet(srcDir)
       .writeStream
       .foreachBatch(fold)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      .trigger(Trigger.AvailableNow()), checkpoint)
 }

@@ -117,7 +117,8 @@ private[graft] object MarkerProtocol {
     * dir and returns true to publish; returning false aborts (tmp is
     * deleted, nothing exposed) — for callers that discover mid-write
     * there is nothing to publish (e.g. an empty retrain frame must not
-    * bump a generation).
+    * bump a generation). A callback that throws aborts the same way,
+    * then the exception propagates.
     *
     * @param deleteDebris sweep same-target `.tmp-` leftovers on entry:
     *   the tier rule in the scaladoc above. A losing racer entering
@@ -140,7 +141,9 @@ private[graft] object MarkerProtocol {
         .foreach(st => fs.delete(st.getPath, true))
     val tmp = new Path(base.getParent,
       prefix + java.util.UUID.randomUUID().toString.take(8))
-    if (!write(tmp)) { fs.delete(tmp, true); return false }
+    val wrote = try write(tmp)
+      catch { case t: Throwable => fs.delete(tmp, true); throw t }
+    if (!wrote) { fs.delete(tmp, true); return false }
     fs.create(new Path(tmp, Marker), true).close()
     // expose: clear whatever the mode says must yield, one rename
     if (fs.exists(base) && (overwrite || !fs.exists(ok)))

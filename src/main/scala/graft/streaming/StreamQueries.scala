@@ -22,30 +22,11 @@ object StreamQueries {
   private def t(s: SparkSession, dir: String, n: String) =
     Tables.load(Tables.tuned(s), dir, n)
 
-  /** Start a streaming query with the session's shuffle partitions —
-    * which pin the stateful operators' state-store count at plan
-    * time — narrowed to 4 for the duration of `start()`: N stores ×
-    * 4 state files per commit is pure fixed overhead at bench volume,
-    * and a cluster deployment sets the real value via its own session
-    * conf. The previous setting is always restored (StreamExecution
-    * clones the session inside `start()`, so the narrowed value is
-    * captured synchronously). */
-  private def startNarrow(s: SparkSession)(
-      start: => org.apache.spark.sql.streaming.StreamingQuery)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try start finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
-  /** Streaming checkpoint root: RAM-backed tmpfs when present. The
-    * offset/commit WAL and per-partition state-store files are
-    * fsync-heavy small-file writes, and at bench volume that disk
-    * traffic IS most of the micro-batch fixed cost. A cluster
-    * deployment needs the checkpoint durable across driver failover
-    * and would point it at reliable storage instead — this root is
-    * only for the drain-to-memory-sink harness below, whose state is
-    * discarded after the query anyway. */
+  /** Streaming checkpoint root: RAM-backed tmpfs when present. Only
+    * for the drain-to-memory-sink harness below, whose state is
+    * discarded after the query; a deployment keeps its checkpoints on
+    * durable storage. Where a trigger's fixed cost went: SCALE.md,
+    * "Ingest triggers". */
   private val ckptBase: java.nio.file.Path = {
     val shm = java.nio.file.Paths.get("/dev/shm")
     if (java.nio.file.Files.isDirectory(shm) && java.nio.file.Files.isWritable(shm)) shm
@@ -75,6 +56,9 @@ object StreamQueries {
   /** Drain a streaming frame through a memory sink with AvailableNow
     * and return the sink table. Centralizes the harness knobs:
     *   - checkpoint under `ckptBase`, deleted after the drain;
+    *   - the shuffle width narrowed to 4 at start: it pins the stateful
+    *     operators' state-store count, and N stores × 4 state files per
+    *     commit is pure fixed overhead at bench volume;
     *   - no-data micro-batches OFF unless the query's semantics need
     *     the terminal watermark-advance batch (event-time timers:
     *     q205). Complete/update aggregations and append inner joins
@@ -85,22 +69,17 @@ object StreamQueries {
       needsNoDataBatch: Boolean = false): DataFrame = {
     val name = "graft_stream_" + UUID.randomUUID().toString.replace("-", "")
     val ckpt = Files.createTempDirectory(ckptBase, "graft_ckpt_")
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevNd = s.conf.get(ndKey)
-    s.conf.set(ndKey, needsNoDataBatch.toString)
     try {
-      val query = startNarrow(s)(df.writeStream
+      StreamStart(s, df.writeStream
         .outputMode(mode)
         .format("memory")
         .queryName(name)
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start())
-      query.awaitTermination()
-    } finally {
-      s.conf.set(ndKey, prevNd)
-      deleteRec(ckpt)
-    }
+        .trigger(Trigger.AvailableNow()),
+        ckpt.toString,
+        "spark.sql.shuffle.partitions" -> "4",
+        "spark.sql.streaming.noDataMicroBatches.enabled" ->
+          needsNoDataBatch.toString).awaitTermination()
+    } finally deleteRec(ckpt)
     s.table(name)
   }
 

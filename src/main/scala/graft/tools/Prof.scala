@@ -82,11 +82,9 @@ object Prof {
       ms.addData(1L, 2L, 3L)
       val ckpt = java.nio.file.Files.createTempDirectory(
         java.nio.file.Paths.get("/dev/shm"), "graft_prof_ck_").toString
-      val q = ms.toDF().groupBy().count()
+      val q = graft.streaming.StreamStart(spark, ms.toDF().groupBy().count()
         .writeStream.outputMode("complete").format("noop")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
+        .trigger(Trigger.AvailableNow()), ckpt)
       val tStart = System.nanoTime()
       q.awaitTermination(60000)
       val tRun = System.nanoTime()

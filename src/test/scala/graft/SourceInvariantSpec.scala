@@ -8,9 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Rules about where main code may do certain things, checked over the
   * text of `src/main`: Spark work runs on its own threads and is waited
-  * on only through `graft.operators.Overlap`, and only
+  * on only through `graft.operators.Overlap`, only
   * `graft.streaming.MarkerProtocol` knows the publish marker and the
-  * staging name. */
+  * staging name, and only `graft.streaming.StreamStart` names a
+  * stream's checkpoint and its checkpoint manager. */
 class SourceInvariantSpec extends AnyFunSuite {
 
   /** (file name, text) of every main source. */
@@ -40,6 +41,14 @@ class SourceInvariantSpec extends AnyFunSuite {
     // ApiServer's HTTP executor is the one other pool
     assert(offenders("newFixedThreadPool", "Overlap.scala") ==
       Seq("ApiServer.scala: 1"))
+  }
+
+  test("only StreamStart starts a checkpointed stream or picks its checkpoint manager") {
+    for (needle <- Seq("checkpointFileManagerClass", ".option(\"checkpointLocation\"")) {
+      assert(sources.exists { case (f, text) =>
+        f == "StreamStart.scala" && text.contains(needle) }, needle)
+      assert(offenders(needle, "StreamStart.scala").isEmpty, needle)
+    }
   }
 
   test("only MarkerProtocol knows the publish marker and the staging name") {

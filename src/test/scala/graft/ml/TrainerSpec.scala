@@ -262,4 +262,31 @@ class TrainerSpec extends AnyFunSuite {
         assert(!new java.io.File(s"$out/model_$k").exists, s"model_$k was saved"))
     } finally sc.removeSparkListener(listener)
   }
+
+  test("a failed trainAll publishes nothing: the previous complete set stays, and no staging dir is left") {
+    val sc = spark.sparkContext
+    val parent = java.nio.file.Files.createTempDirectory("graft_t_keep_")
+    val out = parent.resolve("models").toString
+    Trainer.trainAll(syntheticFood(200), Seq("description"), out)
+    def listing(): Seq[(String, Long)] = {
+      import scala.jdk.CollectionConverters._
+      val s = java.nio.file.Files.walk(parent)
+      try s.iterator.asScala.toSeq.filter(_ != parent).map(p => p.toString ->
+        java.nio.file.Files.getLastModifiedTime(p).toMillis).sorted
+      finally s.close()
+    }
+    val before = listing()
+    assert(before.exists(_._1.endsWith("/models/model_5")))
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.stageInfos.exists(_.name.contains("KMeans"))) sc.cancelJob(e.jobId)
+    }
+    sc.addSparkListener(listener)
+    try intercept[SparkException](
+      Trainer.trainAll(syntheticFood(2000), Seq("description"), out))
+    finally sc.removeSparkListener(listener)
+    // every model_<k>, food_data and reco_snapshot under out is the first
+    // run's, file for file; the failed run's staging dir is gone
+    assert(listing() == before)
+  }
 }
