@@ -75,12 +75,13 @@ object LshIndexQueries {
     // through the projections INTO the parquet scan with the whole
     // signature tree substituted — 8 `element_at(graft_minhash(
     // graft_shingles(...)))` re-evaluations per scan row, measured
-    // 0.8 → 3.8 s on the kernel alone at sf0.1 (GrainProbe; the plan
-    // shows the inlined filter in the scan's DataFilters). q51's doc
-    // branch is immune because its shingle table is checkpointed (a
-    // hard barrier); here the aggregate is the barrier, and at ~1×
-    // replication the grouping costs only its own ~equal-cardinality
-    // aggregate — there is no toll worth a census.
+    // 0.8 → 3.8 s on the kernel alone at sf0.1 (SCALE.md, "Round-20
+    // lesson: InferFiltersFromGenerate pushdown vs expensive lineage";
+    // the plan shows the inlined filter in the scan's DataFilters).
+    // q51's doc branch is immune because its shingle table is
+    // checkpointed (a hard barrier); here the aggregate is the
+    // barrier, and at ~1× replication the grouping costs only its own
+    // ~equal-cardinality aggregate — there is no toll worth a census.
     val grp = ShufflePlan.pinnedByKey(
       base.select(col("h"), col("nt")), col("h"))
       .groupBy(col("h")).agg(min(col("nt")).as("nt"))

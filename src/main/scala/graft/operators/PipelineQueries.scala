@@ -75,8 +75,8 @@ object PipelineQueries {
     * and doc_freq = Σ member-doc counts of the contents carrying the
     * gram — exact, because a doc has exactly one content and its
     * shingle set is distinct (disjoint doc sets per content).
-    * Measured 2.8–3.2 s vs 5.7–8.0 s at ×100 (SCALE.md round-19
-    * SpreadProf table); an unreplicated corpus keeps the plain
+    * Measured 2.8–3.2 s vs 5.7–8.0 s at ×100 (SCALE.md, "Round-19
+    * spread hunt"); an unreplicated corpus keeps the plain
     * doc-grain shape and pays no grouping shuffle. */
   private val q90 = Q(
     "q90_boilerplate_ngrams",

@@ -466,8 +466,8 @@ object StatQueries {
     * as its own subtree, so the lineage form re-ran the corpus-scale
     * lineitem⋈orders join 3× per execution — measured 12–15 s vs
     * ~8 s at ×100, and a 3× amplifier on ambient scan pressure (the
-    * round-18 10.1/22.6/35.7 s cross-sweep spread; SCALE.md round-19
-    * SpreadProf table). The checkpoint is 3 slim columns; Catalyst
+    * round-18 10.1/22.6/35.7 s cross-sweep spread; SCALE.md, "Round-19
+    * spread hunt"). The checkpoint is 3 slim columns; Catalyst
     * still does the decorrelation — that surface is the point of the
     * query. */
   private val q183 = Q(

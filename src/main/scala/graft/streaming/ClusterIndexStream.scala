@@ -111,10 +111,10 @@ object ClusterIndexStream {
     // The accumulated lake already contains the just-delivered batch;
     // mergeCore anti-joins the contact set against its own new-content
     // hashes before this fetch runs, so new contents are shingled
-    // once, in newGrp — not a second time through the lake read
-    // (round-17 advice; the filter lives in mergeCore because the
-    // batch may ALSO carry exact dups of OLD contents, whose shingles
-    // genuinely must come from this fetch)
+    // once, in newGrp — not a second time through the lake read (the
+    // filter lives in mergeCore because the batch may ALSO carry exact
+    // dups of OLD contents, whose shingles genuinely must come from
+    // this fetch)
     val (sigs1, labels1) =
       if (ins.isEmpty) (oldSigs.localCheckpoint(),
         oldLabels.localCheckpoint())
@@ -145,10 +145,10 @@ object ClusterIndexStream {
     // Publish version batchId atomically through the shared marker
     // protocol (overwrite mode: a redelivered batch N supersedes its
     // own previous publication; MarkerProtocol clears this batch's
-    // crash debris — round-18 advice #4 — and throws if the rename
-    // loses state). A crash at any point leaves either the intact
-    // predecessor as the newest complete version (readers skip
-    // marker-less debris) or the fully-published version.
+    // crash debris and throws if the rename loses state). A crash at
+    // any point leaves either the intact predecessor as the newest
+    // complete version (readers skip marker-less debris) or the
+    // fully-published version.
     MarkerProtocol.publish(s, s"$stateDir/batch=$batchId",
       overwrite = true) { tmp =>
       sigs.write.parquet(s"$tmp/sigs")
@@ -179,50 +179,23 @@ object ClusterIndexStream {
     * to the versioned stream state): drop all versions older than the
     * newest `keep`. Safe floor is keep = 2 — the latest version
     * serves reads, and a crash-redelivery of the latest batchId needs
-    * its PREDECESSOR intact; anything older is only history.
-    * StreamingClusterIndexSpec proves reads and redelivery survive a
-    * prune to that floor. Additionally bounded below by the live
-    * [[SnapshotManifest]]s at `manifestRoot` (default: the state dir)
-    * — a manifest pinning `cluster.version=V` keeps version V until
-    * it drops (round-19 verdict #1). */
+    * its PREDECESSOR intact; anything older is only history. Only
+    * complete versions count toward `keep`. StreamingClusterIndexSpec
+    * proves reads and redelivery survive a prune to that floor.
+    * Additionally bounded below by the live [[SnapshotManifest]]s at
+    * `manifestRoot` (default: the state dir) — a manifest pinning
+    * `cluster.version=V` keeps version V until it drops. Debris goes
+    * by [[Retention]]'s sweep, staging dirs once older than
+    * `tmpGraceMs`. */
   def pruneVersions(stateDir: String, keep: Int = 2,
-      tmpGraceMs: Long = 10 * 60 * 1000L,
-      manifestRoot: Option[String] = None): Unit = {
-    val complete = completeVersions(stateDir)
-    val pinned = SnapshotManifest.floorC(
-      new org.apache.hadoop.conf.Configuration(),
-      manifestRoot.getOrElse(stateDir), "cluster.version")
-    val keepFloor = complete.dropRight(keep.max(2)).lastOption
-      .map(f => pinned.fold(f)(p => math.min(f, p - 1)))
-    MarkerProtocol.deleteVersions(stateDir, "batch=") { v =>
-      // Only COMPLETE versions count toward `keep`; a marker-less
-      // directory is deleted ONLY when a newer complete version
-      // exists (crash debris, already superseded) — a marker-less
-      // dir NEWER than every complete version may be a publish in
-      // flight and is never touched (prune-race safety). Note the
-      // rename publish makes this window ~zero on a local fs; this
-      // guard covers object-store style non-atomic renames.
-      keepFloor.exists(v <= _) ||
-        (complete.nonEmpty && v <= complete.last &&
-          !MarkerProtocol.isComplete(s"$stateDir/batch=$v"))
+      tmpGraceMs: Long = Retention.GraceMs,
+      manifestRoot: Option[String] = None): Unit =
+    Retention.gc(manifestRoot.getOrElse(stateDir), "cluster.version", -1L,
+      stateDir -> "batch=", tmpGraceMs) { pinned =>
+      val keepFloor = completeVersions(stateDir).dropRight(keep.max(2))
+        .lastOption.map(f => pinned.fold(f)(p => math.min(f, p - 1)))
+      Seq((stateDir, "batch=", v => keepFloor.exists(v <= _)))
     }
-    // crash-debris tmp dirs (staged batch=N publishes) for versions a
-    // COMPLETE version already covers are superseded by construction
-    // — deletable; a tmp NEWER than every complete version may be a
-    // publish in flight and is never touched (same prune-race rule as
-    // marker-less version dirs above). Age guard (round-19 advice):
-    // a crash-recovery REDELIVERY of batch N (N == complete frontier)
-    // writes into a fresh tmp for N before its rename supersedes the
-    // old version — version arithmetic alone would let a concurrent
-    // prune delete it under the writer. Only tmp dirs whose mtime is
-    // older than `tmpGraceMs` are reclaimed; a live publish finishes
-    // well inside the grace, so only genuine crash debris ages out.
-    val last = complete.lastOption
-    val now = System.currentTimeMillis()
-    MarkerProtocol.deleteStaged(stateDir, "batch=") { (v, mtime) =>
-      last.exists(v <= _) && now - mtime >= tmpGraceMs
-    }
-  }
 
   /** The live labels: the HIGHEST COMPLETE batch version. */
   def labels(spark: SparkSession, stateDir: String): DataFrame =
@@ -236,13 +209,12 @@ object ClusterIndexStream {
     Map("cluster.version" ->
       completeVersions(stateDir).lastOption.getOrElse(-1L).toString)
 
-  /** [[pin]] plus its check that the pinned version is still
-    * complete (a racing [[pruneVersions]] may reclaim it). */
+  /** [[pin]] plus the version dir it needs. */
   private[streaming] def resolvePin(stateDir: String)
-      : (Map[String, String], () => Boolean) = {
+      : (Map[String, String], Seq[String]) = {
     val p = pin(stateDir)
-    val v = p("cluster.version").toLong
-    (p, () => v < 0 || MarkerProtocol.isComplete(s"$stateDir/batch=$v"))
+    (p, Seq(p("cluster.version").toLong).filter(_ >= 0)
+      .map(v => s"$stateDir/batch=$v"))
   }
 
   /** Publish a snapshot manifest pinning the current version under
@@ -260,13 +232,10 @@ object ClusterIndexStream {
     * version dir IS the whole world). */
   def labelsAt(spark: SparkSession, stateDir: String, id: Long,
       manifestRoot: Option[String] = None): DataFrame =
-    SnapshotManifest.read(spark, manifestRoot.getOrElse(stateDir), id)
-      .flatMap(_.get("cluster.version")).map(_.toLong) match {
+    SnapshotManifest.pinned(spark, manifestRoot.getOrElse(stateDir), id,
+      "cluster.").get("cluster.version").map(_.toLong) match {
       case Some(v) if v >= 0 =>
         spark.read.parquet(s"$stateDir/batch=$v/labels")
-      case Some(_) => emptyLabels(spark)
-      case None => throw new IllegalArgumentException(
-        s"no complete snapshot manifest=$id pinning cluster.version " +
-          s"under ${manifestRoot.getOrElse(stateDir)}")
+      case _ => emptyLabels(spark)
     }
 }

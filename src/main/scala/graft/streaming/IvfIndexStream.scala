@@ -5,14 +5,14 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
-/** Streaming maintenance of the q265 IVF shard index (round-17 advice
-  * #6) — the last maintained artifact without a streaming fold. A
+/** Streaming maintenance of the q265 IVF shard index (design history:
+  * SCALE.md, "Maintained index streams"). A
   * production IVF never re-clusters per shard: centroids FREEZE after
   * training and arriving vectors are only ASSIGNED (q265's contract).
   * Given frozen centroids, a vector's cell assignment depends only on
   * its own embedding — per-doc-pure — so the LshIndexStream
   * discipline applies verbatim: each delivered micro-batch's
-  * assignment rows publish with mode=overwrite under the batch's
+  * assignment rows publish with overwrite under the batch's
   * STABLE foreachBatch id (`{idxDir}/batch={id}/`), making
   * at-least-once redelivery idempotent with no read-modify-write and
   * no transaction log. The live index is the union of the batch
@@ -31,17 +31,17 @@ import org.apache.spark.sql.types._
   * CDC batches (op ∈ {I, D}) retract per-row-purely through the
   * shared [[TombstoneSidecar]] — see LshIndexStream.
   *
-  * DRIFT-TRIGGERED RETRAIN (round-18 advice/VERDICT #3, the q295
-  * decision as a streaming fold): after folding batch N, the current
-  * generation's live occupancy is checked; if the hottest cell
-  * exceeds 1.5× the mean (the q295 cut, integer micro-units),
-  * generation G+1 trains on the live rows' vectors (same
-  * deterministic kernel), re-assigns them as a BASE snapshot, and
-  * publishes the whole generation write-once under the
-  * underscore-hidden `{idxDir}/_gen=G+1/` (centroids + base +
-  * cover=N marker, one [[MarkerProtocol]] publish). Assignments carry
-  * their generation positionally: batch M folds under the NEWEST COMPLETE
-  * generation whose cover < M, which is what makes the bump
+  * DRIFT-TRIGGERED RETRAIN (the q295 decision as a streaming fold):
+  * after folding batch N, the current generation's live occupancy is
+  * checked; if the hottest cell exceeds 1.5× the mean (the q295 cut,
+  * integer micro-units), generation G+1 trains on the live rows'
+  * vectors (same deterministic kernel), re-assigns them as a BASE
+  * snapshot, and publishes the whole generation write-once under the
+  * underscore-hidden `{idxDir}/_gen=G+1/` (centroids + base + an
+  * empty `cover=N` dir, one [[MarkerProtocol]] publish). Assignments
+  * carry their generation positionally: batch M folds under the
+  * NEWEST COMPLETE generation whose cover < M, which is what makes
+  * the bump
   * idempotent — a redelivered batch N re-selects its ORIGINAL
   * generation (cover ≥ N excludes the bumped one), re-publishes its
   * own directory, and the already-complete `_gen=G+1` publish is
@@ -118,9 +118,9 @@ object IvfIndexStream {
     * `trainFrom` if absent (tmp+marker+rename — concurrent/replayed
     * publishers collapse to one winner; losers read the winner's
     * copy, which is identical because selection is a pure function of
-    * the batch). The caller guarantees `trainFrom` is NON-EMPTY
-    * (round-18 advice: an empty batch 0 must NOT freeze an empty
-    * centroid set forever — mergeBatch defers training to the first
+    * the batch). The caller guarantees `trainFrom` is NON-EMPTY (an
+    * empty batch 0 must NOT freeze an empty centroid set forever —
+    * mergeBatch defers training to the first
     * non-empty batch); a training frame smaller than nCells still
     * publishes (assignment to the nearest of what exists is
     * well-defined) but is logged, because an undersized cell count
@@ -159,11 +159,8 @@ object IvfIndexStream {
   private[streaming] def generations(idxDir: String): Seq[(Long, Long)] =
     MarkerProtocol.versions(idxDir, "_gen=", completeOnly = true)
       .map { g =>
-        val dir = new java.io.File(s"$idxDir/_gen=$g")
-        val cover = Option(dir.list()).getOrElse(Array.empty)
-          .find(_.startsWith("cover=")).map(_.stripPrefix("cover=").toLong)
-          .getOrElse(sys.error(s"generation dir $dir has no cover"))
-        (g, cover)
+        g -> MarkerProtocol.versions(s"$idxDir/_gen=$g", "cover=")
+          .headOption.getOrElse(sys.error(s"generation $g has no cover"))
       }
 
   /** The generation a given batch folds under: the newest COMPLETE
@@ -184,7 +181,7 @@ object IvfIndexStream {
     generations(idxDir).lastOption
 
   private def batchesUnder(root: String): Seq[Long] =
-    MarkerProtocol.versions(root, "batch=")
+    MarkerProtocol.versions(root, "batch=", completeOnly = true)
 
   private def genRoot(idxDir: String, gen: Long): String =
     if (gen == 0L) idxDir else s"$idxDir/_gen=$gen"
@@ -250,12 +247,10 @@ object IvfIndexStream {
       val cents = selectFrom(live).localCheckpoint()
       if (cents.isEmpty) false
       else {
-        val fs = tmp.getFileSystem(spark.sparkContext.hadoopConfiguration)
         cents.write.parquet(s"$tmp/centroids")
         assignVecs(cents, live).write.parquet(s"$tmp/base")
-        fs.create(new org.apache.hadoop.fs.Path(tmp, s"cover=$cover"),
-          true).close()
-        true
+        tmp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .mkdirs(new org.apache.hadoop.fs.Path(tmp, s"cover=$cover"))
       }
     }
     ()
@@ -264,9 +259,9 @@ object IvfIndexStream {
   /** Idempotent per-batch fold: assignments of THIS batch only,
     * overwrite-published under the batch's stable id, under the
     * generation the batch belongs to. An EMPTY insert set publishes
-    * no batch directory — in particular it never trains centroids
-    * (round-18 advice: a stream started before the lake has data must
-    * not freeze an empty/degenerate centroid set). After the fold,
+    * no batch directory — in particular it never trains centroids (a
+    * stream started before the lake has data must not freeze an
+    * empty/degenerate centroid set). After the fold,
     * the drift cut runs on the generation's live view AS OF this
     * batch (deterministic under redelivery) and may bump a
     * generation, write-once. */
@@ -287,16 +282,13 @@ object IvfIndexStream {
           centroids(s, idxDir, b.select(col("vec_id"),
             col("v").as("embedding")))
         else s.read.parquet(centsPath).select(col("cid"), col("cv"))
-      assignVecs(cents, b)
-        .write.mode("overwrite").parquet(s"$root/batch=$batchId")
+      MarkerProtocol.replace(assignVecs(cents, b), s"$root/batch=$batchId")
     }
     // CDC deletes: vec_id tombstones to the shared sidecar — an
     // assignment row depends only on its own vector (frozen
     // centroids), so retraction is read-side per-row-pure exactly
-    // like the LSH signatures (round-18 advice #2)
-    if (hasOp)
-      batch.filter(col("op") === "D").select(col("vec_id")).distinct()
-        .write.mode("overwrite").parquet(s"$idxDir/_tombs/batch=$batchId")
+    // like the LSH signatures
+    TombstoneSidecar.publish(batch, idxDir, "vec_id", batchId)
     // drift cut on this generation's live view as of THIS batch —
     // pure function of (lake ≤ batchId), so a redelivery recomputes
     // the same decision and the write-once publish makes it a no-op
@@ -342,9 +334,8 @@ object IvfIndexStream {
 
   /** The live index (vec_id, cell, csim): the newest complete
     * generation's base ∪ its batches, minus the tombstone sidecar's
-    * retractions; empty before any batch has published (round-18
-    * advice; mirrors ClusterIndexStream.labels' empty-state
-    * handling). */
+    * retractions; empty before any batch has published (mirrors
+    * ClusterIndexStream.labels' empty-state handling). */
   def index(spark: SparkSession, idxDir: String): DataFrame = {
     val view = newestGen(idxDir) match {
       case Some((g, cover)) =>
@@ -359,53 +350,31 @@ object IvfIndexStream {
     newestGen(idxDir).map(_._1).getOrElse(0L)
 
   /** GC — the compaction analog for the generation layout (a bump
-    * already consolidates the live rows into its base snapshot, so
-    * unlike LshIndexStream no separate base cut is needed): reclaim
-    * every source the newest COMPLETE generation supersedes — older
-    * `_gen=G` dirs wholesale, root (gen-0) batch dirs with id ≤ the
-    * newest cover, tombstones ≤ the newest cover (they were applied
-    * when that base was cut; base rows carry batch = cover, so only
-    * NEWER tombstones can still retract), and crash-debris tmp dirs
-    * for already-complete generations. Safe anytime after the
-    * newest marker exists: readers already ignore all of it, and a
-    * redelivered pre-bump batch merely republishes a root dir
-    * readers skip (its id ≤ cover) — the next GC sweeps it. Gen-0
-    * centroids stay (a pre-bump redelivery re-reads them). No-op
-    * before the first bump.
-    *
-    * Retention (round-19 verdict #1): bounded below by the live
-    * [[SnapshotManifest]]s at `manifestRoot` (default: this index
-    * dir). A manifest pinning `ivf.gen=G` keeps generation G's dirs
-    * — its `_gen=G` tree (or, for G=0, the root batch dirs) and the
-    * tombstones newer than G's cover — until the manifest drops. */
-  def gc(idxDir: String,
-      manifestRoot: Option[String] = None): Unit =
-    newestGen(idxDir) match {
-    case None => ()
-    case Some((g, cover)) =>
-      val pins = SnapshotManifest.liveC(
-        new org.apache.hadoop.conf.Configuration(),
-        manifestRoot.getOrElse(idxDir)).map(_._2)
-        .filter(_.keys.exists(_.startsWith("ivf.")))
-      // floor generation: a manifest pinning ivf without a gen token
-      // pinned the pre-bump world (gen 0)
-      val floorGen = pins
-        .map(_.get("ivf.gen").map(_.toLong).getOrElse(0L))
-        .minOption
-      val keepGen = floorGen.fold(g)(math.min(g, _))
-      // the floor generation's cover bounds batch/tombstone reclaim:
-      // gen 0 covers nothing (-1), so a gen-0 pin keeps everything
-      val floorCover =
-        if (keepGen == g) cover
-        else if (keepGen == 0L) -1L
-        else generations(idxDir).find(_._1 == keepGen).map(_._2)
-          .getOrElse(-1L)
-      MarkerProtocol.deleteVersions(idxDir, "_gen=")(_ < keepGen)
-      MarkerProtocol.deleteVersions(idxDir, "batch=")(_ <= floorCover)
-      MarkerProtocol.deleteVersions(s"$idxDir/_tombs", "batch=")(
-        _ <= floorCover)
-      MarkerProtocol.deleteStaged(idxDir, "_gen=")((v, _) => v <= g)
-  }
+    * already consolidates the live rows into its base snapshot):
+    * through [[Retention]], reclaim what the floor generation
+    * supersedes — older `_gen=G` dirs, root (gen-0) batch dirs and
+    * tombstones ≤ its cover (base rows carry batch = cover, so only
+    * NEWER tombstones can still retract). The floor generation is the
+    * newest complete one, or the least `ivf.gen` a live
+    * [[SnapshotManifest]] at `manifestRoot` (default: this index dir)
+    * pins; a manifest without a gen pinned gen 0, which covers
+    * nothing. Gen-0 centroids stay (a pre-bump redelivery re-reads
+    * them); a redelivered pre-bump batch republishes a root dir
+    * readers skip, which the next GC takes. Reclaims no version
+    * before the first bump. */
+  def gc(idxDir: String, manifestRoot: Option[String] = None): Unit =
+    Retention.gc(manifestRoot.getOrElse(idxDir), "ivf.gen", 0L,
+      idxDir -> "_gen=") { floor =>
+      val gens = generations(idxDir)
+      gens.lastOption.toSeq.flatMap { case (g, _) =>
+        val keep = floor.fold(g)(math.min(g, _))
+        // gen 0 covers nothing (-1), so a gen-0 pin keeps every batch
+        val cover = gens.toMap.getOrElse(keep, -1L)
+        Seq((idxDir, "_gen=", (_: Long) < keep),
+          (idxDir, "batch=", (_: Long) <= cover),
+          (s"$idxDir/_tombs", "batch=", (_: Long) <= cover))
+      }
+    }
 
   /** This index's version tokens for a [[SnapshotManifest]] pin:
     * `ivf.gen` (live generation) and `ivf.max_batch` (the newest
@@ -417,18 +386,15 @@ object IvfIndexStream {
     Map("ivf.gen" -> g.toString, "ivf.max_batch" -> maxBatch.toString)
   }
 
-  /** [[pin]] plus its check that the dirs the pin needs — generation
-    * G's `_gen=G` tree (G > 0) and its batch dirs ≤ max_batch present
-    * at pin time — still exist (a racing [[gc]] may reclaim them). */
+  /** [[pin]] plus the dirs it needs: generation G's `_gen=G` tree
+    * (G > 0) and its batch dirs ≤ max_batch. */
   private[streaming] def resolvePin(idxDir: String)
-      : (Map[String, String], () => Boolean) = {
+      : (Map[String, String], Seq[String]) = {
     val p = pin(idxDir)
-    val g = p("ivf.gen").toLong
-    val root = genRoot(idxDir, g)
-    val need = batchesUnder(root).filter(_ <= p("ivf.max_batch").toLong)
-    (p, () =>
-      (g == 0L || MarkerProtocol.isComplete(root)) &&
-        need.toSet.subsetOf(batchesUnder(root).toSet))
+    val root = genRoot(idxDir, p("ivf.gen").toLong)
+    (p, Seq(root).filter(_ != idxDir) ++
+      batchesUnder(root).filter(_ <= p("ivf.max_batch").toLong)
+        .map(b => s"$root/batch=$b"))
   }
 
   /** Publish a snapshot manifest pinning the live generation under
@@ -446,11 +412,8 @@ object IvfIndexStream {
     * oldest live manifest) to concurrent GC. */
   def indexAt(spark: SparkSession, idxDir: String, id: Long,
       manifestRoot: Option[String] = None): DataFrame = {
-    val pins = SnapshotManifest
-      .read(spark, manifestRoot.getOrElse(idxDir), id)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no complete snapshot manifest=$id under " +
-          manifestRoot.getOrElse(idxDir)))
+    val pins = SnapshotManifest.pinned(spark,
+      manifestRoot.getOrElse(idxDir), id, "ivf.")
     val g = pins.get("ivf.gen").map(_.toLong).getOrElse(0L)
     val cover =
       if (g == 0L) -1L

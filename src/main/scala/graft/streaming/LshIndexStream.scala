@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-/** Streaming maintenance of the q276 banded-signature index
-  * (round-16 advice #7): the batch merge path
+/** Streaming maintenance of the q276 banded-signature index (design
+  * history: SCALE.md, "Maintained index streams"): the batch merge path
   * (LshIndexQueries.mergedIndex) is proven; this wires the SAME
   * signature kernel through foreachBatch so an arriving micro-batch
   * of documents folds into the maintained index with EXACTLY-ONCE
@@ -16,10 +16,10 @@ import org.apache.spark.sql.types._
   * Exactly-once recipe (the standard idempotent-sink discipline, and
   * the reason the artifact is laid out per batch): foreachBatch gives
   * at-least-once delivery with a STABLE batchId, so each batch's
-  * signature rows are published with mode=overwrite into
-  * `{idxDir}/batch={batchId}/` — a replay of batch N overwrites
-  * batch N's own directory instead of appending duplicates, and
-  * every other batch's rows are untouched. The live index is the
+  * signature rows are published through [[MarkerProtocol]] with
+  * overwrite into `{idxDir}/batch={batchId}/` — a replay of batch N
+  * replaces batch N's own directory instead of appending duplicates,
+  * and every other batch's rows are untouched. The live index is the
   * union of the batch directories (partition-discovered read).
   * StreamingLshIndexSpec proves: (a) across checkpointed restarts
   * the index equals the batch-built signatures of the full corpus,
@@ -47,9 +47,9 @@ object LshIndexStream {
     * underscore-hidden `_tombs/batch=N` sidecar (invisible to the
     * parent partition-discovery read), also overwrite-idempotent.
     * Signatures are per-doc-pure, so retraction needs no component
-    * algebra — the read side anti-joins (round-18 advice #2; the
-    * ClusterIndexStream op∈{I,D} discipline, minus the versioned
-    * state a read-modify-write artifact needs). */
+    * algebra — the read side anti-joins (the ClusterIndexStream
+    * op∈{I,D} discipline, minus the versioned state a
+    * read-modify-write artifact needs). */
   private[streaming] def mergeBatch(idxDir: String)(
       batch: DataFrame, batchId: Long): Unit = {
     batchCount.incrementAndGet()
@@ -58,12 +58,9 @@ object LshIndexStream {
       if (hasOp) batch.filter(col("op").isNull || col("op") === "I")
         .select(col("doc_id"), col("text"))
       else batch
-    graft.operators.LshIndexQueries.signatures(ins)
-      .write.mode("overwrite").parquet(s"$idxDir/batch=$batchId")
-    if (hasOp)
-      batch.filter(col("op") === "D").select(col("doc_id")).distinct()
-        .write.mode("overwrite").parquet(s"$idxDir/_tombs/batch=$batchId")
-    ()
+    MarkerProtocol.replace(graft.operators.LshIndexQueries.signatures(ins),
+      s"$idxDir/batch=$batchId")
+    TombstoneSidecar.publish(batch, idxDir, "doc_id", batchId)
   }
 
   /** Maintain the index at `idxDir` from a documents directory
@@ -83,7 +80,7 @@ object LshIndexStream {
       checkpoint, mergeBatch(idxDir))
 
   private def batches(idxDir: String): Seq[Long] =
-    MarkerProtocol.versions(idxDir, "batch=")
+    MarkerProtocol.versions(idxDir, "batch=", completeOnly = true)
 
   /** Complete compaction bases, ascending by their upTo batch id. */
   private def bases(idxDir: String): Seq[Long] =
@@ -160,19 +157,15 @@ object LshIndexStream {
     SnapshotManifest.publishVerified(spark, manifestRoot.getOrElse(idxDir),
       () => resolvePin(idxDir), afterPublish)
 
-  /** [[pin]] plus its check that the dirs the pin needs — the base,
-    * and every batch dir in (base, max_batch] present at pin time —
-    * still exist. */
+  /** [[pin]] plus the dirs it needs: the base, and every batch dir in
+    * (base, max_batch]. */
   private[streaming] def resolvePin(idxDir: String)
-      : (Map[String, String], () => Boolean) = {
+      : (Map[String, String], Seq[String]) = {
     val p = pin(idxDir)
     val base = p.get("lsh.base").map(_.toLong)
-    val maxB = p("lsh.max_batch").toLong
-    val need = batches(idxDir)
-      .filter(b => b > base.getOrElse(-1L) && b <= maxB)
-    (p, () =>
-      base.forall(b => MarkerProtocol.isComplete(s"$idxDir/_base=$b")) &&
-        need.toSet.subsetOf(batches(idxDir).toSet))
+    (p, base.map(b => s"$idxDir/_base=$b").toSeq ++ batches(idxDir)
+      .filter(b => b > base.getOrElse(-1L) && b <= p("lsh.max_batch").toLong)
+      .map(b => s"$idxDir/batch=$b"))
   }
 
   /** The index AS OF manifest `id`: resolves (base, max_batch)
@@ -182,11 +175,8 @@ object LshIndexStream {
     * concurrent compaction reclaiming its input dirs. */
   def indexAt(spark: SparkSession, idxDir: String, id: Long,
       manifestRoot: Option[String] = None): DataFrame = {
-    val pins = SnapshotManifest
-      .read(spark, manifestRoot.getOrElse(idxDir), id)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no complete snapshot manifest=$id under " +
-          manifestRoot.getOrElse(idxDir)))
+    val pins = SnapshotManifest.pinned(spark,
+      manifestRoot.getOrElse(idxDir), id, "lsh.")
     liveRows(spark, idxDir,
       pinBase = Some(pins.get("lsh.base").map(_.toLong)),
       maxBatch = pins.get("lsh.max_batch").map(_.toLong)
@@ -196,20 +186,17 @@ object LshIndexStream {
 
   /** COMPACTION — the maintenance pass a deployment runs when
     * tombstones and dead batch dirs accumulate: materialize the live
-    * index as of the newest published batch into a write-once
-    * `_base=<upTo>` snapshot through [[MarkerProtocol]] (crash
-    * debris is marker-less and invisible), then
-    * garbage-collect everything the base supersedes — batch dirs and
-    * tombstone dirs ≤ upTo, and older bases. Underscore-prefixed, so
-    * the parent partition-discovery read never sees it. Idempotent:
-    * a re-run with no newer batches hits the marker check and only
-    * re-runs the (safe-anytime) GC; a redelivered pre-compaction
-    * batch republishes its dir, which readers ignore (its id is ≤
-    * the base's upTo) and the next compaction GC removes. Returns
-    * the base's upTo id, or None when there is nothing to compact.
-    * GC honors the retention floor of the live [[SnapshotManifest]]s
-    * at `manifestRoot` (default: this index dir) — a deployment
-    * keeping one cross-artifact manifest root passes it here. */
+    * index as of the newest published batch into a write-once,
+    * underscore-hidden `_base=<upTo>` snapshot through
+    * [[MarkerProtocol]], then reclaim through [[Retention]] what the
+    * base supersedes — batch and tombstone dirs ≤ upTo, and older
+    * bases — floored at the live [[SnapshotManifest]]s at
+    * `manifestRoot` (default: this index dir). Idempotent: a re-run
+    * with no newer batches hits the marker check and only re-runs the
+    * (safe-anytime) GC; a redelivered pre-compaction batch
+    * republishes a dir readers ignore (its id is ≤ upTo), which the
+    * next compaction removes. Returns the base's upTo id, or None
+    * when there is nothing to compact. */
   def compact(spark: SparkSession, idxDir: String,
       manifestRoot: Option[String] = None): Option[Long] = {
     val newest = batches(idxDir).lastOption
@@ -224,34 +211,23 @@ object LshIndexStream {
         .write.parquet(tmp.toString)
       true
     }
-    // GC: everything a complete base supersedes — safe anytime after
-    // the marker exists — BOUNDED BELOW by the retention floor of the
-    // live snapshot manifests (round-19 verdict #1, VACUUM-style
-    // grace): a reader pinned to manifest M resolves base/batches/
-    // tombstones M recorded, so nothing a live manifest pins is
-    // reclaimed until the manifest is dropped. A manifest pinned
-    // BEFORE any compaction (no lsh.base) floors at -1 — it reads
-    // the raw batch dirs from 0, so none may go. With no live
-    // manifests the floor is absent and reclaim is immediate.
-    val root = manifestRoot.getOrElse(idxDir)
-    val lshPins = SnapshotManifest.live(spark, root).map(_._2)
-      .filter(_.keys.exists(_.startsWith("lsh.")))
-    val floorB = lshPins
-      .map(_.get("lsh.base").map(_.toLong).getOrElse(-1L))
-      .minOption
-    val delUpTo = floorB.fold(upTo)(math.min(upTo, _))
-    val baseKeep = lshPins.flatMap(_.get("lsh.base").map(_.toLong))
-      .minOption.fold(upTo)(math.min(upTo, _))
-    MarkerProtocol.deleteVersions(idxDir, "batch=")(_ <= delUpTo)
-    MarkerProtocol.deleteVersions(s"$idxDir/_tombs", "batch=")(_ <= delUpTo)
-    MarkerProtocol.deleteVersions(idxDir, "_base=")(_ < baseKeep)
+    // GC: everything the base supersedes, bounded below by the base
+    // a live manifest pins; a manifest pinned before any compaction
+    // (no lsh.base) floors at -1, since it reads the raw batches
+    Retention.gc(manifestRoot.getOrElse(idxDir), "lsh.base", -1L,
+      idxDir -> "_base=") { floor =>
+      val keep = floor.fold(upTo)(math.min(upTo, _))
+      Seq((idxDir, "batch=", _ <= keep),
+        (s"$idxDir/_tombs", "batch=", _ <= keep),
+        (idxDir, "_base=", _ < keep))
+    }
     Some(upTo)
   }
 }
 
 /** The tombstone sidecar shared by the per-row-pure maintained
-  * indexes (LshIndexStream signatures, IvfIndexStream assignments;
-  * round-18 advice #2): CDC deletes publish (id) rows under the
+  * indexes (LshIndexStream signatures, IvfIndexStream assignments):
+  * CDC deletes publish (id) rows under the
   * underscore-hidden `{idxDir}/_tombs/batch=N` — invisible to the
   * parent partition-discovery read, overwrite-idempotent under
   * redelivery exactly like the data batches — and the read side
@@ -265,6 +241,14 @@ object LshIndexStream {
   * scale, never pairwise). */
 private[streaming] object TombstoneSidecar {
 
+  /** Publish the `idCol` tombstones of a batch's delete rows, if it
+    * carries an `op` column. */
+  def publish(batch: DataFrame, idxDir: String, idCol: String,
+      batchId: Long): Unit =
+    if (batch.columns.contains("op"))
+      MarkerProtocol.replace(batch.filter(col("op") === "D")
+        .select(col(idCol)).distinct(), s"$idxDir/_tombs/batch=$batchId")
+
   /** Per-id newest tombstone batch (id, maxt) — empty frame when no
     * CDC delete has ever published. */
   def newest(spark: SparkSession, idxDir: String,
@@ -277,8 +261,8 @@ private[streaming] object TombstoneSidecar {
     * recomputes the same decision). */
   def newestUpTo(spark: SparkSession, idxDir: String,
       idCol: String, maxBatch: Long): DataFrame = {
-    val dirs = MarkerProtocol.versions(s"$idxDir/_tombs", "batch=")
-      .filter(_ <= maxBatch).map(v => s"$idxDir/_tombs/batch=$v")
+    val dirs = MarkerProtocol.versions(s"$idxDir/_tombs", "batch=",
+        completeOnly = true).filter(_ <= maxBatch).map(v => s"$idxDir/_tombs/batch=$v")
     if (dirs.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],

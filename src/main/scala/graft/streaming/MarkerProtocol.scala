@@ -1,13 +1,16 @@
 package graft.streaming
 
+import java.nio.file.Files
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** THE atomic-publish protocol of every maintained artifact, and the
   * only code that knows its on-disk names: the `_GRAFT_OK`
   * completeness marker, the `.tmp-<name>-<uuid>` staging sibling, the
-  * `<prefix><n>` version-dir listing and the recursive delete. A fix
+  * `<prefix><n>` version-dir listing, the withdrawal and the staging
+  * delete. A fix
   * in a hand-rolled copy would not propagate, so there are none.
   *
   * Sequence: stage everything (parquet parts + any caller-side
@@ -17,7 +20,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Two tiers publish through it, with opposite debris rules:
   *  - the STREAM tier (ClusterIndexStream versions, LshIndexStream
-  *    bases, IvfIndexStream centroids and generations) has one writer
+  *    batches and bases, IvfIndexStream batches, centroids and
+  *    generations, their tombstones) has one writer
   *    per target — foreachBatch serializes batch publishes and
   *    write-once targets have a single trainer — so same-target tmp
   *    leftovers are always crash debris: `deleteDebris = true`, and
@@ -41,8 +45,21 @@ import org.apache.spark.sql.SparkSession
   *    inputs). An INCOMPLETE existing target is crash debris and is
   *    replaced.
   *
-  * The local-path helpers default to a shared Hadoop configuration
-  * because the stream tier's listings run without a session.
+  * Retention contract, the same for every stream-tier family and
+  * carried out by [[Retention]] alone: a version, or a publish
+  * target being replaced, leaves by [[unpublish]], marker first and
+  * then the dir, so a crash partway never leaves a marked dir with
+  * missing parts. Debris is a marker-less version dir below the
+  * newest complete version (a publish exposes only marked dirs), or
+  * a staging dir at or below it older than [[Retention.GraceMs]]
+  * (a redelivery of the newest version stages a fresh one).
+  *
+  * On a local path the marker is created with java.nio, with no
+  * `.crc` shadow: Hadoop's local filesystem would fork a `chmod` for
+  * the file and one for its checksum. Every check here treats a
+  * marker with or without a `.crc` alike. The local-path helpers
+  * default to a shared Hadoop configuration because the stream
+  * tier's listings run without a session.
   */
 private[graft] object MarkerProtocol {
 
@@ -53,7 +70,7 @@ private[graft] object MarkerProtocol {
   /** Staging dirs are `<Staging><target name>-<uuid>` siblings. */
   private val Staging = ".tmp-"
 
-  private lazy val localConf = new Configuration()
+  private[streaming] lazy val localConf = new Configuration()
 
   private def children(fs: FileSystem, dir: Path): Array[FileStatus] =
     try fs.listStatus(dir)
@@ -77,15 +94,6 @@ private[graft] object MarkerProtocol {
       .filter(st => !completeOnly || fs.exists(new Path(st.getPath, Marker)))
       .map(_.getPath.getName.stripPrefix(prefix).toLong)
       .sorted
-  }
-
-  /** Recursively delete the `<prefix><n>` dirs under `dir` whose id
-    * `n` the predicate selects. */
-  def deleteVersions(dir: String, prefix: String)(
-      drop: Long => Boolean): Unit = {
-    val fs = new Path(dir).getFileSystem(localConf)
-    versions(dir, prefix).filter(drop)
-      .foreach(v => fs.delete(new Path(s"$dir/$prefix$v"), true))
   }
 
   /** Recursively delete the staging dirs of `<prefix><n>` targets
@@ -113,6 +121,16 @@ private[graft] object MarkerProtocol {
     ()
   }
 
+  /** [[publish]] `df` as parquet at `target`, replacing any previous
+    * publication: the stream tier's per-batch write. */
+  def replace(df: DataFrame, target: String): Unit = {
+    publish(df.sparkSession, target, overwrite = true) { tmp =>
+      df.write.parquet(tmp.toString)
+      true
+    }
+    ()
+  }
+
   /** Publish `target`: the callback writes the artifact into the tmp
     * dir and returns true to publish; returning false aborts (tmp is
     * deleted, nothing exposed) — for callers that discover mid-write
@@ -131,7 +149,8 @@ private[graft] object MarkerProtocol {
       overwrite: Boolean, deleteDebris: Boolean = true)(
       write: Path => Boolean): Boolean = {
     val base = new Path(target)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = base.getFileSystem(conf)
     val ok = new Path(base, Marker)
     if (!overwrite && fs.exists(ok)) return false
     val prefix = s"$Staging${base.getName}-"
@@ -144,10 +163,13 @@ private[graft] object MarkerProtocol {
     val wrote = try write(tmp)
       catch { case t: Throwable => fs.delete(tmp, true); throw t }
     if (!wrote) { fs.delete(tmp, true); return false }
-    fs.create(new Path(tmp, Marker), true).close()
-    // expose: clear whatever the mode says must yield, one rename
+    if (NioCheckpointFileManager.isLocalPath(tmp, conf))
+      Files.createFile(Files.createDirectories(
+        NioCheckpointFileManager.local(tmp)).resolve(Marker))
+    else fs.create(new Path(tmp, Marker), true).close()
+    // expose: withdraw whatever the mode says must yield, one rename
     if (fs.exists(base) && (overwrite || !fs.exists(ok)))
-      fs.delete(base, true)
+      unpublish(target, conf)
     if (fs.exists(base) || !fs.rename(tmp, base)) {
       fs.delete(tmp, true)
       if (overwrite) throw new IllegalStateException(

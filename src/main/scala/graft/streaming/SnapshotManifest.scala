@@ -5,11 +5,11 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Consistent cross-artifact snapshots for the maintained-artifact
-  * tier (round-19 verdict #1). The artifact families each version
-  * independently — LshIndexStream batches/bases, IvfIndexStream
-  * generations, ClusterIndexStream versions, the warehouse batch
-  * artifacts — and compaction/GC used to reclaim superseded dirs
-  * immediately, so a reader joining ACROSS families (q294's audit
+  * tier (design history: SCALE.md, "Maintained index streams"). The
+  * artifact families each version independently — LshIndexStream
+  * batches/bases, IvfIndexStream generations, ClusterIndexStream
+  * versions, the warehouse batch artifacts — and compaction/GC used
+  * to reclaim superseded dirs immediately, so a reader joining ACROSS families (q294's audit
   * surface) could observe mixed versions, and a long scan could hit
   * FileNotFound when a concurrent compaction swept its input dirs.
   *
@@ -20,13 +20,17 @@ import org.apache.spark.sql.SparkSession
   * tmp+marker+rename lifecycle as the artifacts themselves, so a
   * half-written manifest is marker-less debris readers skip.
   * Readers resolve versions through ONE complete manifest and see a
-  * single consistent world; each family's GC honors a RETENTION
-  * FLOOR derived from the oldest live manifest (the VACUUM-style
-  * grace): a version some live manifest pins is never reclaimed,
-  * and dropping the manifest (the reader lease ending) is what
-  * releases its dirs to the next GC pass. With no manifests
-  * published, every GC keeps its round-19 immediate-reclaim
-  * behavior — the tier is pay-for-what-you-pin.
+  * single consistent world.
+  *
+  * Retention contract: every family's GC runs through [[Retention]],
+  * which floors it at the least version any live manifest of the
+  * family pins (the VACUUM-style grace; a family manifest without the
+  * key pinned the world before the family's first such version): a
+  * version some live manifest pins is never reclaimed, and dropping
+  * the manifest (the reader lease ending) is what releases its dirs
+  * to the next GC pass. With no manifests published, reclaim is
+  * immediate — the tier is pay-for-what-you-pin. The same pass sweeps
+  * manifest debris by [[MarkerProtocol]]'s rule.
   *
   * Entry keys are namespaced per family ("lsh.base",
   * "ivf.gen", "cluster.version", ...) so one manifest can span any
@@ -35,7 +39,7 @@ import org.apache.spark.sql.SparkSession
   */
 object SnapshotManifest {
 
-  private def manifestsDir(root: String) = s"$root/_manifests"
+  private[streaming] def manifestsDir(root: String) = s"$root/_manifests"
 
   private def confOf(spark: SparkSession): Configuration =
     spark.sparkContext.hadoopConfiguration
@@ -65,9 +69,9 @@ object SnapshotManifest {
       // publishers (collapse-to-one-winner by design), so another
       // publisher's same-id tmp is an in-flight write, not crash
       // debris — sweeping it could publish a COMPLETE manifest with
-      // no entries file (round-20 ADVICE #1). Loser tmps are deleted
-      // by their own publish() calls; true crash debris under
-      // _manifests is marker-less and readers skip it.
+      // no entries file. Loser tmps are deleted by their own publish()
+      // calls; crash debris under _manifests is marker-less, readers
+      // skip it and [[Retention]] sweeps it once aged.
       won = MarkerProtocol.publish(spark,
         manifestDir(root, id), overwrite = false,
         deleteDebris = false) { tmp =>
@@ -84,8 +88,8 @@ object SnapshotManifest {
   }
 
   /** Publish one family's pin, RE-RESOLVED against a racing GC.
-    * `resolve` returns the family's current pin plus its check that
-    * the dirs the pin needs still exist (recorded at pin time).
+    * `resolve` returns the family's current pin plus the version dirs
+    * it needs, which must all still be complete once it is published.
     *
     * Pin-vs-GC acquisition window: a concurrent GC can compute its
     * retention floor BEFORE this manifest lands and reclaim the dirs
@@ -100,16 +104,16 @@ object SnapshotManifest {
     * id. `afterPublish` runs inside the window; it exists so specs can
     * stage the race deterministically. */
   private[streaming] def publishVerified(spark: SparkSession,
-      root: String, resolve: () => (Map[String, String], () => Boolean),
+      root: String, resolve: () => (Map[String, String], Seq[String]),
       afterPublish: Long => Unit = _ => ()): Long = {
     var attempt = 0
     var verified: Option[Long] = None
     while (verified.isEmpty && attempt < 5) {
       attempt += 1
-      val (entries, intact) = resolve()
+      val (entries, needed) = resolve()
       val id = publish(spark, root, entries)
       afterPublish(id)
-      if (intact()) verified = Some(id) else drop(spark, root, id)
+      if (needed.forall(MarkerProtocol.isComplete(_))) verified = Some(id) else drop(spark, root, id)
     }
     verified.getOrElse(publish(spark, root, resolve()._1))
   }
@@ -128,7 +132,7 @@ object SnapshotManifest {
     // partial object-store rename), not a readable manifest — treat
     // as incomplete so readers, liveC/newest and GC floors skip it
     // instead of crashing every compact/gc/pinned read at this root
-    // until the dir is hand-deleted (round-20 ADVICE #2)
+    // until the dir is hand-deleted
     if (!fs.exists(new Path(dir, "entries"))) return None
     val in = fs.open(new Path(dir, "entries"))
     val bytes =
@@ -145,6 +149,14 @@ object SnapshotManifest {
       line.take(i) -> line.drop(i + 1)
     }.toMap)
   }
+
+  /** The entries of manifest `id` for a family's `*At` reader: the
+    * manifest must be complete and pin some key of `family`. */
+  private[streaming] def pinned(spark: SparkSession, root: String,
+      id: Long, family: String): Map[String, String] =
+    read(spark, root, id).filter(_.keys.exists(_.startsWith(family)))
+      .getOrElse(throw new IllegalArgumentException(
+        s"no complete snapshot manifest=$id pinning $family under $root"))
 
   /** Complete manifests, ascending: the live reader leases. */
   def live(spark: SparkSession, root: String)
@@ -173,11 +185,5 @@ object SnapshotManifest {
     * manifest pins it (GC is then unconstrained by this key). */
   def floor(spark: SparkSession, root: String, key: String)
       : Option[Long] =
-    floorC(confOf(spark), root, key)
-
-  def floorC(conf: Configuration, root: String, key: String)
-      : Option[Long] = {
-    val pins = liveC(conf, root).flatMap(_._2.get(key)).map(_.toLong)
-    if (pins.isEmpty) None else Some(pins.min)
-  }
+    live(spark, root).flatMap(_._2.get(key)).map(_.toLong).minOption
 }

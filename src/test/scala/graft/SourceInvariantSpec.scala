@@ -10,8 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * text of `src/main`: Spark work runs on its own threads and is waited
   * on only through `graft.operators.Overlap`, only
   * `graft.streaming.MarkerProtocol` knows the publish marker and the
-  * staging name, and only `graft.streaming.StreamStart` names a
-  * stream's checkpoint and its checkpoint manager. */
+  * staging name, only `graft.streaming.StreamStart` names a stream's
+  * checkpoint and its checkpoint manager, and the index streams leave
+  * manifest floors, deletes and debris to `graft.streaming.Retention`. */
 class SourceInvariantSpec extends AnyFunSuite {
 
   /** (file name, text) of every main source. */
@@ -56,5 +57,15 @@ class SourceInvariantSpec extends AnyFunSuite {
       f == "MarkerProtocol.scala" && text.contains("\"_GRAFT_OK\"") })
     assert(offenders("\"_GRAFT_OK\"", "MarkerProtocol.scala").isEmpty)
     assert(offenders(".tmp-", "MarkerProtocol.scala").isEmpty)
+  }
+
+  test("the index streams leave floors, deletes and debris to Retention") {
+    val families = Seq("LshIndexStream.scala", "ClusterIndexStream.scala",
+      "IvfIndexStream.scala")
+    assert(families.forall(f => sources.exists(_._1 == f)))
+    for (needle <- Seq("deleteVersions", "deleteStaged", "liveC(", "floorC(",
+        "SnapshotManifest.live(", "java.io.File"))
+      assert(sources.collect { case (f, text)
+        if families.contains(f) && text.contains(needle) => f }.isEmpty, needle)
   }
 }
