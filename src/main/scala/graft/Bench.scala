@@ -1,20 +1,28 @@
 package graft
+
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.sql.SparkSession
+
+import graft.operators.DedupQueries
+import graft.tools.{PeakHeap, Runner}
+
 object Bench {
 
-  private def newSession(cpus: String, sfDir: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // scale-conditional stability tuning (round-15 heap-margin
-      // campaign + round-16 floor attribution) — see HarnessConf
-      .config(graft.tools.HarnessConf.tuning(sfDir))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  /** Variance control: a run sharing the box with concurrent work
+    * measured 1.5x slower totals on identical code (157.9 s -> 241.6 s),
+    * which makes a single timing un-gateable. A query whose first run
+    * is slower than [[RepeatThresholdS]], or failed, runs [[Repeats]]
+    * times and reports the min over its successful runs: the min
+    * estimates code speed, not scheduler noise. A fast first run is
+    * accepted as is, so the added wall cost is bounded by the slow
+    * tail. */
+  private val Repeats = 2
+  private val RepeatThresholdS = 1.0
+
+  /** Post-GC footprint from which a floor fixture's query is followed
+    * by a forced GC (see the policy in [[main]]). */
+  private val ForceGcGb = 1.5
 
   /** Pre-warm the JVM so the first timed query isn't charged one-time
     * startup: codegen pipeline, parquet reader, and the streaming
@@ -71,218 +79,100 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Recycle the SparkContext every N queries. The registry holds 160+
-    // MUTUALLY UNRELATED workloads; a single long-lived local context
-    // accumulates cross-query residue a real deployment never sees in
-    // one app — stopped streaming queries' state-store providers and
-    // their 60s maintenance threads, memory-sink tables, listener-bus
-    // state — and that residue was measured to inflate later
-    // job-storm-heavy queries (the ML cumulative trainer: 5s fresh vs
-    // 86s after ~100 queries). Recycling stops those services and
-    // empties the block manager while keeping JVM/JIT and the global
-    // codegen cache warm; per-query numbers then reflect the query,
-    // not its position in the run order.
-    val recycleEvery =
-      sys.env.getOrElse("GRAFT_BENCH_RECYCLE", "40").toInt.max(1)
-    // Variance control: a run sharing the box with concurrent work
-    // (the driver's correctness sweep) measured 1.5x slower TOTALS on
-    // identical code (157.9s -> 241.6s round 6), which makes a single
-    // timing un-gateable. Any query whose first measurement exceeds
-    // the threshold is re-run and the MIN reported — the min of two
-    // runs estimates code speed, not scheduler noise. Fast first runs
-    // are accepted as-is (a fast time is already proof the code is
-    // fast), so the added wall cost is bounded by the slow tail, not
-    // 2x the whole suite.
-    val repeats = sys.env.getOrElse("GRAFT_BENCH_REPEATS", "2").toInt.max(1)
-    val repeatThreshold =
-      sys.env.getOrElse("GRAFT_BENCH_REPEAT_THRESHOLD", "1.0").toDouble
-    // A/B gates for floor-attribution experiments (round-16 advice #1):
-    // GRAFT_PEAKHEAP=off skips the heap listener+sampler entirely;
-    // GRAFT_FORCE_GC controls the inter-query System.gc(): "always"
-    // (round-15 behavior), "off", or "auto" (only after a query whose
-    // measured post-GC footprint says broadcast/checkpoint residue is
-    // actually worth collecting). The DEFAULT is scale-conditional
-    // both ways: "auto" on floor fixtures (the per-query Full GC
-    // clears weak/soft codegen+footer caches — measured sf0.1 tax),
-    // "always" on big fixtures (deterministic broadcast reclamation —
-    // auto-mode ×100 sweeps measured +10-16% on shared queries and
-    // the always-GC mode is the round-15 OOM protection).
-    val peakHeapOn = sys.env.getOrElse("GRAFT_PEAKHEAP", "on") != "off"
-    val forceGcMode = sys.env.getOrElse("GRAFT_FORCE_GC",
-      if (graft.tools.HarnessConf.isBigFixture(sfDir)) "always"
-      else "auto")
-    // Interleaved-sweep mode for ambient-pressure attribution
-    // (round-16 advice #1): GRAFT_BENCH_PASSES=N runs the WHOLE
-    // registry N times inside ONE session, so slow ambient drift
-    // (page-cache erosion, heap wear, JIT state) shows up as a
-    // within-session pass-over-pass slope on identical code, instead
-    // of hiding in between-run noise. The stdout contract is
-    // unchanged (per-query min over passes); the per-pass maps go to
-    // a BENCH_PASSES.json sidecar.
-    val passes = sys.env.getOrElse("GRAFT_BENCH_PASSES", "1").toInt.max(1)
-    var spark = newSession(cpus, sfDir)
-    if (peakHeapOn) graft.tools.PeakHeap.install(spark.sparkContext)
+    val sfDir = Runner.envSfDir
+    // Inter-query GC policy, worked out from the fixture. Broadcast
+    // blocks are reclaimed by ContextCleaner only after a GC collects
+    // their driver references; without a forced GC, seven heavy
+    // dedup/BPE queries' broadcasts were still resident when q247 ran
+    // at ×100 and the heap died. But a Full GC also clears the weak
+    // and soft caches every small query relies on (codegen
+    // classloaders, parquet footers), a measured tax on the sf0.1
+    // floor. So a big fixture collects after every query ("always");
+    // a floor fixture only after a query whose measured post-GC
+    // footprint reached ForceGcGb ("auto": ×100 sweeps under it ran
+    // +10-16% slower on the broadcast-heavy MinHash family).
+    val gcAlways = Runner.isBigFixture(sfDir)
+    // (warm-up s, canary s) of each session, in run order
+    val sessions = ArrayBuffer.empty[(Double, Double)]
+    // Every new session is warmed before it serves a query: table
+    // scans (empty block manager, cold footer caches) and the
+    // streaming machinery. JIT and the codegen cache persist across
+    // recycles for free. Its canary locates a contended window inside
+    // a long run to within RecycleEvery queries.
+    val runner = new Runner(sfDir, { spark =>
+      PeakHeap.install(spark.sparkContext)
+      val t0 = System.nanoTime()
+      warmup(spark, sfDir)
+      sessions += (((System.nanoTime() - t0) / 1e9, canary(spark)))
+    })
     // per-query peak-heap observations for the SCALE.md margin table;
     // written to a BENCH_HEAP.json sidecar, never the stdout contract.
     // Fields: (query, post-GC peak GB, peak stage, post-forced-GC
-    // floor GB — -1 when the inter-query GC was skipped).
-    val heapObs = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Double, String, Double)]
+    // floor GB: -1 when the inter-query GC was skipped).
+    val heapObs = ArrayBuffer.empty[(String, Double, String, Double)]
     // query -> census decisions (nDocs, nGroups, contentGrain) of its
-    // latest run (round-19 verdict #5)
+    // latest run
     val censusObs = scala.collection.mutable.LinkedHashMap
       .empty[String, Seq[(Long, Long, Boolean)]]
     // fixture vintage marker: the documents.parquet footer-tail
-    // fingerprint (BpeQueries's artifact key) — regenerated fixtures
+    // fingerprint (BpeQueries's artifact key); regenerated fixtures
     // change it even at identical logical content
     val fixtureFp =
-      try graft.operators.BpeQueries.fingerprint(spark, sfDir)
+      try graft.operators.BpeQueries.fingerprint(runner.current, sfDir)
       catch { case _: Throwable => "unknown" }
-    val warmT0 = System.nanoTime()
-    warmup(spark, sfDir)
-    val warmupS = (System.nanoTime() - warmT0) / 1e9
-    val canaryPre = canary(spark)
-    // Mid-run canary cadence (round-18 advice #6): one canary at every
-    // recycle boundary, in run order, so a contended WINDOW inside a
-    // long run is attributable from the artifact alone — runs 4-7 of
-    // the round-18 close drifted +0.11s median per query with clean
-    // END canaries, forcing a hand-assembled per-query-min table; the
-    // series makes protocol-honest mins computable per segment.
-    val canarySeries = scala.collection.mutable.ArrayBuffer.empty[Double]
     val only = args.toSet
-    var sinceRecycle = 0
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
+    val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }
-    val passResults = (1 to passes).map { pass =>
-      pass -> selected.map {
-      case (name, fn) =>
-        if (sinceRecycle >= recycleEvery) {
-          spark.stop()
-          SparkSession.clearActiveSession()
-          SparkSession.clearDefaultSession()
-          spark = newSession(cpus, sfDir)
-          if (peakHeapOn) graft.tools.PeakHeap.install(spark.sparkContext)
-          // re-warm the fresh context: table scans (empty block manager,
-          // cold footer caches) plus the streaming machinery; JIT and
-          // the codegen cache persist across recycles for free
-          warmup(spark, sfDir)
-          canarySeries += canary(spark)
-          sinceRecycle = 0
-        }
-        sinceRecycle += 1
-        // Queries are independent: release each run's localCheckpoint /
-        // persist blocks and its memory-sink temp views before the next
-        // one. Without this, ~80 queries' worth of checkpoint blocks
-        // accumulate in storage memory and later queries run
-        // execution-memory-starved (measured 3-5x inflation on the heavy
-        // text queries late in the run).
-        def cleanup(): Double = {
-          graft.operators.PrefixPass.releaseAll()
-          // BLOCKING unpersist (round 15): with unpersist(false) the
-          // next query starts allocating while the previous query's
-          // multi-GB checkpoint blocks are still draining — measured
-          // as the q245→q247 in-context hard OOM at ×100 (two copies
-          // of the corpus shingle table alive at once)
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(true))
-          spark.sharedState.cacheManager.clearCache()
-          // Broadcast blocks are reclaimed by ContextCleaner only
-          // after a GC collects their driver references; without a
-          // forced GC, seven heavy dedup/BPE queries' broadcasts were
-          // still resident when q247 ran at ×100 and the heap died
-          // (the Context Cleaner thread itself OOMed — round-15 sweep
-          // post-mortem). But a Full GC also clears the WEAK/SOFT
-          // reference caches every small query relies on (codegen
-          // classloaders, parquet footers), so running it after ALL
-          // 268 queries taxes the sf0.1 floor. "auto" forces it only
-          // when the query's measured post-GC footprint says there is
-          // actually multi-GB residue worth collecting — heavy ×100
-          // queries still get their GC, sub-second queries don't.
-          val gcNow = forceGcMode match {
-            case "always" => true
-            case "off"    => false
-            case _ => // auto: measured-footprint gate
-              !peakHeapOn || graft.tools.PeakHeap.postGcPeakGb >=
-                sys.env.getOrElse("GRAFT_FORCE_GC_GB", "1.5").toDouble
-          }
-          // post-forced-GC floor (round-16 advice #3): what is STILL
-          // live after the harness collects everything collectable —
-          // the true OOM-margin number a saturated post-GC peak
-          // over-states. -1 when the gc was skipped (auto mode,
-          // footprint under the gate).
-          val floor = if (gcNow) {
-            System.gc()
-            graft.tools.PeakHeap.heapUsedNowGb
-          } else -1.0
-          try spark.catalog.listTables().collect()
-            .filter(t => t.name.startsWith("graft_"))
-            .foreach(t => spark.catalog.dropTempView(t.name))
-          catch { case _: Throwable => () }
-          floor
-        }
+      .map { case (name, fn) =>
+        val spark = runner.next()
         def once(): (Double, Boolean) = {
-          if (peakHeapOn) graft.tools.PeakHeap.reset()
-          graft.operators.DedupQueries.drainCensusLog() // stale entries
+          PeakHeap.reset()
+          DedupQueries.drainCensusLog() // stale entries
           val t0 = System.nanoTime()
           val ok = try { fn(spark, sfDir).count(); true }
             catch { case _: Throwable => false }
           val dt = (System.nanoTime() - t0) / 1e9
-          // adaptive-grain observability (round-19 advice/verdict #5):
-          // record THIS query's census decisions so a grain flip is
+          // this query's adaptive-grain decisions, so a grain flip is
           // visible in the bench artifact, not inferred from timing
-          val censuses = graft.operators.DedupQueries.drainCensusLog()
-          if (censuses.nonEmpty) censusObs.synchronized {
-            censusObs(name) = censuses
-          }
-          val (pk, st) = (graft.tools.PeakHeap.postGcPeakGb,
-            graft.tools.PeakHeap.postGcPeakStage)
-          val floor = cleanup()
-          heapObs.synchronized {
-            // keep the MAX observation per query across repeat runs
-            val i = heapObs.indexWhere(_._1 == name)
-            if (i < 0) heapObs += ((name, pk, st, floor))
-            else if (pk > heapObs(i)._2) heapObs(i) = (name, pk, st, floor)
-          }
+          val censuses = DedupQueries.drainCensusLog()
+          if (censuses.nonEmpty) censusObs(name) = censuses
+          val (pk, st) = (PeakHeap.postGcPeakGb, PeakHeap.postGcPeakStage)
+          Runner.release(spark)
+          // post-forced-GC floor: what is still live once the harness
+          // has collected everything collectable, the OOM-margin
+          // number a saturated post-GC peak over-states
+          val floor =
+            if (gcAlways || PeakHeap.postGcPeakGb >= ForceGcGb) {
+              System.gc()
+              PeakHeap.heapUsedNowGb
+            } else -1.0
+          // keep the MAX observation per query across repeat runs
+          val i = heapObs.indexWhere(_._1 == name)
+          if (i < 0) heapObs += ((name, pk, st, floor))
+          else if (pk > heapObs(i)._2) heapObs(i) = (name, pk, st, floor)
           (dt, ok)
         }
         val first = once()
-        // A fast SUCCESSFUL first run is proof enough; anything slow —
-        // or failed — is re-run. The min is taken over successful runs
-        // only, so a crashed re-run can never report a broken query as
-        // fast (and a failure is never trusted just because it errored
-        // out quickly).
+        // The min is taken over successful runs only, so a crashed
+        // re-run can never report a broken query as fast.
         val runs =
-          if ((first._1 > repeatThreshold || !first._2) && repeats > 1)
-            first +: (2 to repeats).map(_ => once())
+          if (first._1 > RepeatThresholdS || !first._2)
+            first +: (2 to Repeats).map(_ => once())
           else Seq(first)
         val good = runs.filter(_._2)
         // A query with NO successful run must be unmistakable in the
         // JSON: its time is reported NEGATIVE (the min over failed
         // runs, sign-flipped) and its name goes to the "failed" list;
-        // it contributes nothing to the total. Without this, a broken
-        // query silently reports a plausible-looking time.
+        // it contributes nothing to the total.
         val dt = if (good.nonEmpty) good.map(_._1).min
           else -runs.map(_._1).min
         // progress to stderr so a mid-run crash (e.g. an executor OOM
         // stopping the context) still identifies the query that died;
         // the stdout JSON contract is untouched
-        System.err.println(
-          f"[bench] p$pass $name $dt%.2f s ok=${good.nonEmpty}")
+        System.err.println(f"[bench] $name $dt%.2f s ok=${good.nonEmpty}")
         (name, dt, good.nonEmpty)
       }
-    }
-    // Stdout contract: per-query MIN over passes (each pass's value is
-    // already min-of-repeats); a query is "failed" only if it failed
-    // in EVERY pass.
-    val results = selected.map(_._1).map { name =>
-      val obs = passResults.map(_._2.find(_._1 == name).get)
-      val good = obs.filter(_._3)
-      if (good.nonEmpty) (name, good.map(_._2).min, true)
-      else (name, obs.map(_._2).min, false)
-    }
-    val canaryPost = canary(spark)
+    val canaryPost = canary(runner.current)
     def fmt(v: Double, dp: Int): String = s"%.${dp}f".format(v)
     def line(dp: Int): String = {
       val qs = results.map { case (k, v, _) => "\"" + k + "\":" + fmt(v, dp) }
@@ -297,32 +187,30 @@ object Bench {
       // The canary pair rides in the surviving tail: read it FIRST when
       // judging the totals (idle-box reference ~0.2s).
       s"""{"metric":"total","unit":"sec","queries":$qs,""" +
-        s""""failed":$failed,"warmup_s":${fmt(warmupS, dp)},""" +
-        s""""canary_pre_s":${fmt(canaryPre, dp)},""" +
+        s""""failed":$failed,"warmup_s":${fmt(sessions.head._1, dp)},""" +
+        s""""canary_pre_s":${fmt(sessions.head._2, dp)},""" +
         s""""canary_post_s":${fmt(canaryPost, dp)},""" +
-        // one value per recycle boundary, in run order — with
-        // recycle_every from the protocol object this locates a
-        // contended window to within ~recycle_every queries
-        canarySeries.map(fmt(_, dp))
+        // one value per recycle boundary, in run order
+        sessions.tail.map(c => fmt(c._2, dp))
           .mkString("\"canary_series\":[", ",", "],") +
-        // measurement protocol + fixture vintage, recorded IN the
-        // artifact (round-17 advice #3): cross-round comparisons are
-        // only like-for-like when repeats mode, pass count, and the
-        // fixture file/row-group layout all match — the round-17
-        // experiments measured an 18% protocol effect and a 15-50%
-        // fixture-vintage effect on the slow tail, both invisible
-        // without these fields
-        // per-query adaptive-grain census decisions (round-19 verdict
-        // #5): [docs, distinct groups, grain] per census the query ran
+        // per-query adaptive-grain census decisions: [docs, distinct
+        // groups, grain] per census the query ran
         censusObs.toSeq.sortBy(_._1).map { case (n, cs) =>
           "\"" + n + "\":" + cs.map { case (d, g, c) =>
             s"""[$d,$g,"${if (c) "content" else "doc"}"]"""
           }.mkString("[", ",", "]")
         }.mkString("\"census\":{", ",", "},") +
-        s""""protocol":{"repeats":$repeats,""" +
-        s""""repeat_threshold_s":$repeatThreshold,""" +
-        s""""passes":$passes,"recycle_every":$recycleEvery,""" +
-        s""""force_gc":"$forceGcMode","cpus":"$cpus"},""" +
+        // measurement protocol + fixture vintage, recorded IN the
+        // artifact: cross-round comparisons are only like-for-like
+        // when the protocol and the fixture file/row-group layout both
+        // match (measured: an 18% protocol effect and a 15-50%
+        // fixture-vintage effect on the slow tail). "passes" stays at
+        // its one value so the object reads as before.
+        s""""protocol":{"repeats":$Repeats,""" +
+        s""""repeat_threshold_s":$RepeatThresholdS,""" +
+        s""""passes":1,"recycle_every":${Runner.RecycleEvery},""" +
+        s""""force_gc":"${if (gcAlways) "always" else "auto"}",""" +
+        s""""cpus":"${Runner.cpus}"},""" +
         s""""fixture_fp":"$fixtureFp",""" +
         s""""value":${fmt(total, dp)},"sf":"$sfDir"}"""
     }
@@ -336,26 +224,14 @@ object Bench {
       val heapLines = heapObs.sortBy(-_._2).map { case (n, pk, st, fl) =>
         f"""{"query":"$n","post_gc_peak_gb":$pk%.2f,""" +
           f""""post_forced_gc_floor_gb":$fl%.2f,""" +
-          f""""xmx_gb":${graft.tools.PeakHeap.xmxGb}%.2f,""" +
+          f""""xmx_gb":${PeakHeap.xmxGb}%.2f,""" +
           s""""peak_stage":"${esc(st)}"}"""
       }
       java.nio.file.Files.write(
         java.nio.file.Paths.get("BENCH_HEAP.json"),
         (heapLines.mkString("\n") + "\n").getBytes("UTF-8"))
     } catch { case _: Throwable => () }
-    if (passes > 1) try {
-      // one JSON line per pass: {"pass":i,"queries":{...},"total":t}
-      val passLines = passResults.map { case (pass, rs) =>
-        val qs = rs.map { case (k, v, _) =>
-          "\"" + k + "\":" + fmt(v, 3) }.mkString("{", ",", "}")
-        val tot = rs.collect { case (_, v, true) => v }.sum
-        s"""{"pass":$pass,"queries":$qs,"total":${fmt(tot, 3)}}"""
-      }
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get("BENCH_PASSES.json"),
-        (passLines.mkString("\n") + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
     println(line(3))
-    spark.stop()
+    runner.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.tools.Runner
 
 /** Plan audit: prints the formatted physical plan for the named queries
   * (all with no args). Used to keep the plans honest — PushedFilters
@@ -15,23 +15,18 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val runner = new Runner(sfDir, _.sparkContext.setLogLevel("ERROR"))
     names.foreach { name =>
       SparkEntry.queries.get(name).foreach { fn =>
+        val spark = runner.next()
         println(s"\n===== $name =====")
         try fn(spark, sfDir).explain("formatted")
         catch { case e: Throwable =>
           println(s"explain failed: ${e.getMessage}")
         }
+        Runner.release(spark)
       }
     }
-    spark.stop()
+    runner.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.tools.Runner
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -8,50 +8,19 @@ object Verify {
     val sfDir = args(0)
     val outDir = args(1)
     val only: Set[String] = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-      // scale-conditional stability tuning — see HarnessConf
-      .config(graft.tools.HarnessConf.tuning(sfDir))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
-    var spark = newSession()
+    val runner = new Runner(sfDir)
     new java.io.File(outDir).mkdirs()
-    // recycle the context periodically for the same reason Bench does:
-    // 160+ unrelated workloads through one long-lived local context
-    // accumulate state-store/memory-sink/listener residue that slows
-    // the tail of the run (see Bench.scala)
-    var sinceRecycle = 0
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-      if (sinceRecycle >= 40) {
-        spark.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-        spark = newSession()
-        sinceRecycle = 0
+        val spark = runner.next()
+        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        }
+        Runner.release(spark)
       }
-      sinceRecycle += 1
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      graft.operators.PrefixPass.releaseAll()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      spark.sharedState.cacheManager.clearCache()
-      try spark.catalog.listTables().collect()
-        .filter(t => t.name.startsWith("graft_"))
-        .foreach(t => spark.catalog.dropTempView(t.name))
-      catch { case _: Throwable => () }
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -67,6 +36,6 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    runner.stop()
   }
 }

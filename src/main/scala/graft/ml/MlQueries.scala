@@ -129,10 +129,11 @@ object MlQueries {
           col("l_discount").as("Total lipid (fat)-G"),
           col("l_tax").as("Carbohydrate, by difference-G"),
           col("l_returnflag").as(FoodSchema.descriptionCol))
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_models_").toString
-      val trained = Trainer.trainAll(raw,
-        Seq(FoodSchema.proteinCol, FoodSchema.energyCol), out)
+      // the result frame is local, so the models can go at once
+      val out = java.nio.file.Files.createTempDirectory("graft_models_")
+      val trained = try Trainer.trainAll(raw,
+          Seq(FoodSchema.proteinCol, FoodSchema.energyCol), out.toString)
+        finally org.apache.commons.io.FileUtils.deleteDirectory(out.toFile)
       trained.toSeq.sortBy(_._1)
         .map { case (k, n) => (k.toLong, n) }
         .toDF("model_id", "n_train_rows")

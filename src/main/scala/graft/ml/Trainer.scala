@@ -112,17 +112,29 @@ object Trainer {
     new Pipeline().setStages(Array(assembler, gbt))
   }
 
-  /** Name of the global-row-index column added by [[indexByOrder]];
+  /** Name of the global-row-index column added by [[indexByOrderN]];
     * dropped before any training slice is returned, but kept in the
     * `food_data` serving artifact, where it doubles as the stable
     * record id the README detail route looks up by. */
   private[graft] val RnCol = "__graft_rn"
 
+  /** Rows per partition of the indexed frame: MLlib fits are iterative
+    * (tens of tiny jobs), so the cached training frame's partition
+    * count is sized to the data and per-task scheduling overhead does
+    * not dominate tiny fits. */
+  private val RowsPerPartition = 4096L
+
+  /** Rows in model k's slice of n rows: the first floor(k*n/total)
+    * under the explicit order. The index is contiguous and 0-based, so
+    * `rn < sliceBound(n, k)` selects exactly that many rows. */
+  private[graft] def sliceBound(n: Long, k: Int, total: Int = NumModels): Long =
+    n * k / total
+
   /** Attach a contiguous 0-based Long row index under the explicit
     * total order. Returns an eagerly MATERIALIZED frame (persisted
-    * indexed RDD) plus a release hook — callers slice the frame
-    * without re-running the sort, then call the hook to free the
-    * block-manager storage (idempotent; unreleased storage is
+    * indexed RDD), a release hook and the row count. Callers slice
+    * the frame without re-running the sort, then call the hook to free
+    * the block-manager storage (idempotent; unreleased storage is
     * eventually reclaimed by ContextCleaner once the RDD is GC'd, but
     * explicit release is what keeps repeated training runs from
     * accumulating blocks).
@@ -132,28 +144,13 @@ object Trainer {
     * per-partition offsets — uncached, that job plus the downstream
     * materialization would each execute the reduce-side sort. So: one
     * range-partitioned sort (`orderBy` — never a single-partition
-    * `Window.orderBy`), one cached count pass, one indexing pass. The
-    * index is a Long, so — unlike the previous `limit()`-based
-    * slicing — nothing here is bounded by Int.MaxValue rows. */
-  private[ml] def indexByOrder(
-      df: DataFrame, orderCols: Seq[String]): (DataFrame, () => Unit) = {
-    val (frame, release, _) = indexByOrderN(df, orderCols, 0L)
-    (frame, release)
-  }
-
-  /** [[indexByOrder]] that also returns the row count (free — the sort
-    * is materialized by a count) and, when `rowsPerPartition` > 0,
-    * right-sizes the indexed frame's partition count to the data with
-    * a shuffle-free `coalesce` INSTEAD of the former post-hoc
-    * `repartition` pass. Once the index column is attached, row
-    * placement no longer matters (slices filter on [[RnCol]]), so the
-    * coalesce's arbitrary grouping of parent partitions is safe — and
-    * it saves one full shuffle + materialization per training run,
-    * which at local job-latency floors is a measurable slice of the
-    * q63 bench line. */
+    * `Window.orderBy`), one cached count pass that also yields n, one
+    * indexing pass. The index is a Long, so nothing here is bounded by
+    * Int.MaxValue rows. Once the index is attached, row placement no
+    * longer matters (slices filter on [[RnCol]]), so the frame is
+    * right-sized with a shuffle-free `coalesce`. */
   private[ml] def indexByOrderN(
-      df: DataFrame, orderCols: Seq[String],
-      rowsPerPartition: Long): (DataFrame, () => Unit, Long) = {
+      df: DataFrame, orderCols: Seq[String]): (DataFrame, () => Unit, Long) = {
     val ordered = df.orderBy(orderCols.map(col): _*)
     val schema = org.apache.spark.sql.types.StructType(
       ordered.schema.fields :+ org.apache.spark.sql.types.StructField(
@@ -163,16 +160,13 @@ object Trainer {
     try {
       // one job: materialize the range-partitioned sort AND learn n
       val n = sortedRdd.count()
+      val parts = math.max(1, math.min(sortedRdd.getNumPartitions,
+        (n / RowsPerPartition + 1L).toInt))
       // zipWithIndex's internal per-partition-size job reads the
       // cached sort blocks (cheap); the map attaches the global index
-      val indexed0 = sortedRdd.zipWithIndex.map { case (r, i) =>
+      val indexedRdd = sortedRdd.zipWithIndex.map { case (r, i) =>
         org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i)
-      }
-      val indexedRdd = (if (rowsPerPartition > 0) {
-        val parts = math.max(1, math.min(sortedRdd.getNumPartitions,
-          (n / rowsPerPartition + 1L).toInt))
-        indexed0.coalesce(parts)
-      } else indexed0)
+      }.coalesce(parts)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       indexedRdd.count() // eager: materialize while the sort is cached
       val frame = df.sparkSession.createDataFrame(indexedRdd, schema)
@@ -181,35 +175,20 @@ object Trainer {
   }
 
   /** Deterministic cumulative slices: slice k holds the first
-    * floor(k*n/total) rows under an explicit total order
-    * (spark_model_trainer.py:208-226, made reproducible).
-    *
-    * Single-pass: the input is sorted and indexed ONCE
-    * ([[indexByOrder]], materialized eagerly so all slices see the
-    * same index) and each slice is a cheap `rn < bound` filter —
-    * versus the previous formulation's one global sort + `limit()`
-    * per slice. The second element is the storage-release hook: call
-    * it once the slices are consumed (the slices read the released
-    * blocks lazily, so release AFTER the last action over them;
-    * un-released storage falls back to ContextCleaner on GC). */
-  def cumulativeSlicesReleasable(
-      df: DataFrame,
-      orderCols: Seq[String],
-      total: Int = NumModels): (Seq[DataFrame], () => Unit) = {
-    val (indexed, release) = indexByOrder(df, orderCols)
-    val n = indexed.count()
-    ((1 to total).map(k =>
-      indexed.filter(col(RnCol) < lit(n * k / total)).drop(RnCol)),
-      release)
-  }
-
-  /** [[cumulativeSlicesReleasable]] without the hook — storage is
-    * reclaimed by ContextCleaner once the returned frames are GC'd. */
+    * [[sliceBound]] rows under an explicit total order
+    * (spark_model_trainer.py:208-226, made reproducible). The input is
+    * sorted and indexed ONCE ([[indexByOrderN]], materialized eagerly
+    * so all slices see the same index) and each slice is a cheap
+    * `rn < bound` filter. Storage is reclaimed by ContextCleaner once
+    * the returned frames are GC'd. */
   def cumulativeSlices(
       df: DataFrame,
       orderCols: Seq[String],
-      total: Int = NumModels): Seq[DataFrame] =
-    cumulativeSlicesReleasable(df, orderCols, total)._1
+      total: Int = NumModels): Seq[DataFrame] = {
+    val (indexed, _, n) = indexByOrderN(df, orderCols)
+    (1 to total).map(k =>
+      indexed.filter(col(RnCol) < lit(sliceBound(n, k, total))).drop(RnCol))
+  }
 
   /** The full reference training run: prepare, label, persist, 5
     * cumulative slices, one model per slice, artifacts saved under
@@ -229,16 +208,8 @@ object Trainer {
       orderCols: Seq[String],
       outDir: String,
       minRows: Long = 10): Map[Int, Long] = {
-    // MLlib fits are iterative (tens of tiny jobs); right-size the
-    // cached training frame's partition count to the data so per-task
-    // scheduling overhead doesn't dominate tiny fits. The sizing
-    // happens INSIDE the indexing pass (shuffle-free coalesce after
-    // the index is attached — see indexByOrderN), not as a post-hoc
-    // repartition: that saves one full shuffle + materialization +
-    // two count jobs per run, which at the measured ~23ms/job local
-    // scheduling floor was a visible slice of the q63 bench line.
-    val (indexed, releasePrepared, n) = indexByOrderN(
-      withLabel(prepare(raw)), orderCols, rowsPerPartition = 4096L)
+    val (indexed, releasePrepared, n) =
+      indexByOrderN(withLabel(prepare(raw)), orderCols)
     var trained = Map.empty[Int, Long]
     try graft.streaming.MarkerProtocol.publish(raw.sparkSession, outDir,
         overwrite = true) { staged =>
@@ -259,9 +230,8 @@ object Trainer {
           indexed.write.mode("overwrite").parquet(s"$dir/food_data")
         }
         val fits = (1 to NumModels).flatMap { k =>
-          // contiguous 0-based index => filter(rn < b) has exactly b
-          // rows; no per-slice count() jobs needed
-          val nRows = n * k / NumModels
+          // no per-slice count() jobs needed: see sliceBound
+          val nRows = sliceBound(n, k)
           if (nRows < minRows) None
           else Some(o.fork {
             val slice = indexed.filter(col(RnCol) < lit(nRows)).drop(RnCol)

@@ -125,34 +125,30 @@ object LshIndexQueries {
     * the parts with `mk` (counted on `builds`, the caller family's
     * counter), publish them through [[MarkerProtocol]] and return
     * artifact-backed readers — falling back to the in-memory frames
-    * only if the warehouse is unwritable. Write-once without debris
-    * deletion: the warehouse can have racing publishers, whose losers
+    * only if the warehouse is unwritable. Write-once in the racing
+    * tier: the warehouse can have racing publishers, whose losers
     * read the winner's identical content. A marker-less dir at `base`
-    * is crash debris and is replaced. */
+    * is crash debris and is replaced. Every first use in a session
+    * goes through the publish, so aged staging debris beside a
+    * complete artifact is swept too. */
   private[operators] def loadOrBuildParts(s: SparkSession, base: String,
       partNames: Seq[String], mk: () => Map[String, DataFrame],
       builds: java.util.concurrent.atomic.AtomicLong = buildCount)
       : Map[String, () => DataFrame] =
     memo.getOrElseUpdate(s"${s.sparkContext.applicationId}|$base", {
       val conf = s.sparkContext.hadoopConfiguration
-      def readers: Map[String, () => DataFrame] =
+      lazy val parts = { builds.incrementAndGet(); mk() }
+      val published = try {
+        MarkerProtocol.publish(s, base, overwrite = false,
+          deleteDebris = false) { tmp =>
+          partNames.foreach(p => parts(p).write.parquet(s"$tmp/$p"))
+          true
+        } || MarkerProtocol.isComplete(base, conf)
+      } catch { case scala.util.control.NonFatal(_) => false }
+      if (published)
         partNames.map(p => p -> (() => s.read.parquet(s"$base/$p"))).toMap
-      if (MarkerProtocol.isComplete(base, conf)) readers
-      else {
-        builds.incrementAndGet()
-        val parts = mk()
-        val published = try {
-          MarkerProtocol.publish(s, base, overwrite = false,
-            deleteDebris = false) { tmp =>
-            partNames.foreach(p => parts(p).write.parquet(s"$tmp/$p"))
-            true
-          }
-          MarkerProtocol.isComplete(base, conf)
-        } catch { case scala.util.control.NonFatal(_) => false }
-        if (published) readers
-        else parts.map { case (p, df) =>
-          val fallback = df.localCheckpoint(); p -> (() => fallback)
-        }
+      else parts.map { case (p, df) =>
+        val fallback = df.localCheckpoint(); p -> (() => fallback)
       }
     })
 
@@ -184,38 +180,35 @@ object LshIndexQueries {
         signatures(t(s, dir, "documents")
           .filter(!isHistory(col("doc_id"))))))
 
-  /** Index-health statistics off the MERGED artifact: per band, how
-    * many buckets exist, how many hold ≥2 docs (candidate-generating),
-    * the candidate-pair mass Σ m·(m−1)/2 computed FROM BUCKET SIZES
-    * (never materializing pairs — the posting-cap lesson), how many
-    * multi-doc buckets mix distinct contents (near-dup signal rather
-    * than exact-copy echo), and the largest bucket (the skew number a
-    * deployment watches before a band join). The oracle recomputes
-    * everything from the raw corpus from scratch — artifact content
-    * and from-scratch banding must agree bit-for-bit. */
-  private val q276 = Q(
-    "q276_lsh_index_maintain",
-    (s, dir) => {
-      val idx = mergedIndex(s, dir)()
-      idx.groupBy(col("band_idx"), col("bh"))
-        .agg(count(lit(1)).as("m"),
-          count_distinct(col("h")).as("g"))
-        .groupBy(col("band_idx"))
-        .agg(count(lit(1)).as("n_buckets"),
-          sum(when(col("m") > 1, 1L).otherwise(0L)).as("n_multi_buckets"),
-          sum(expr("m * (m - 1) div 2")).as("n_cand_pairs"),
-          sum(when(col("g") > 1, 1L).otherwise(0L)).as("n_mixed_buckets"),
-          max(col("m")).as("max_bucket"))
-        .orderBy(col("band_idx"))
-    },
-    Some {
-      val mins = (0 until 8).map(i =>
-        s"list_min([md5('$i|'||s) FOR s IN sh]) AS m$i").mkString(", ")
-      val bandSelects = (0 until 4).map(j =>
-        s"SELECT doc_id, h, CAST($j AS BIGINT) AS band_idx, " +
-          s"md5(m${2 * j}||m${2 * j + 1}) AS bh FROM mh")
-        .mkString(" UNION ALL ")
-      s"""
+  /** Index-health statistics of a signature index: per band, how many
+    * buckets exist, how many hold ≥2 docs (candidate-generating), the
+    * candidate-pair mass Σ m·(m−1)/2 computed FROM BUCKET SIZES (never
+    * materializing pairs — the posting-cap lesson), how many multi-doc
+    * buckets mix distinct contents (near-dup signal rather than
+    * exact-copy echo), and the largest bucket (the skew number a
+    * deployment watches before a band join). */
+  private def bandStats(idx: DataFrame): DataFrame =
+    idx.groupBy(col("band_idx"), col("bh"))
+      .agg(count(lit(1)).as("m"),
+        count_distinct(col("h")).as("g"))
+      .groupBy(col("band_idx"))
+      .agg(count(lit(1)).as("n_buckets"),
+        sum(when(col("m") > 1, 1L).otherwise(0L)).as("n_multi_buckets"),
+        sum(expr("m * (m - 1) div 2")).as("n_cand_pairs"),
+        sum(when(col("g") > 1, 1L).otherwise(0L)).as("n_mixed_buckets"),
+        max(col("m")).as("max_bucket"))
+      .orderBy(col("band_idx"))
+
+  /** The oracle of [[bandStats]]: banding recomputed from scratch over
+    * the raw `documents` rows `where` keeps. */
+  private def bandStatsOracle(where: String): String = {
+    val mins = (0 until 8).map(i =>
+      s"list_min([md5('$i|'||s) FOR s IN sh]) AS m$i").mkString(", ")
+    val bandSelects = (0 until 4).map(j =>
+      s"SELECT doc_id, h, CAST($j AS BIGINT) AS band_idx, " +
+        s"md5(m${2 * j}||m${2 * j + 1}) AS bh FROM mh")
+      .mkString(" UNION ALL ")
+    s"""
       WITH c AS (
         SELECT doc_id, md5(nt) AS h,
                list_distinct([array_to_string(w[i+1:i+5],' ')
@@ -224,7 +217,7 @@ object LshIndexQueries {
               FROM (SELECT doc_id,
                            regexp_replace(trim(lower(text)),'\\s+',' ','g')
                              AS nt
-                    FROM documents)
+                    FROM documents$where)
               WHERE nt IS NOT NULL)),
       mh AS (SELECT doc_id, h, $mins FROM c),
       bands AS ($bandSelects),
@@ -239,7 +232,15 @@ object LshIndexQueries {
              MAX(m) AS max_bucket
       FROM b GROUP BY 1 ORDER BY 1
       """
-    })
+  }
+
+  /** Index health off the MERGED artifact. The oracle recomputes
+    * everything from the raw corpus from scratch — artifact content
+    * and from-scratch banding must agree bit-for-bit. */
+  private val q276 = Q(
+    "q276_lsh_index_maintain",
+    (s, dir) => bandStats(mergedIndex(s, dir)()),
+    Some(bandStatsOracle("")))
 
   /** q290 — DELETION for the maintained LSH signature index
     * (round-17 advice #1, the per-row-pure half): a doc's signature
@@ -256,56 +257,12 @@ object LshIndexQueries {
   private val q290 = Q(
     "q290_lsh_index_delete",
     (s, dir) => {
-      val docs = t(s, dir, "documents")
-      val tombs = docs
+      val tombs = t(s, dir, "documents")
         .filter(ClusterIndexQueries.isRetracted(col("doc_id")))
         .select(col("doc_id"))
-      val idx = mergedIndex(s, dir)()
-        .join(tombs, Seq("doc_id"), "left_anti")
-      idx.groupBy(col("band_idx"), col("bh"))
-        .agg(count(lit(1)).as("m"),
-          count_distinct(col("h")).as("g"))
-        .groupBy(col("band_idx"))
-        .agg(count(lit(1)).as("n_buckets"),
-          sum(when(col("m") > 1, 1L).otherwise(0L)).as("n_multi_buckets"),
-          sum(expr("m * (m - 1) div 2")).as("n_cand_pairs"),
-          sum(when(col("g") > 1, 1L).otherwise(0L)).as("n_mixed_buckets"),
-          max(col("m")).as("max_bucket"))
-        .orderBy(col("band_idx"))
+      bandStats(mergedIndex(s, dir)().join(tombs, Seq("doc_id"), "left_anti"))
     },
-    Some {
-      val mins = (0 until 8).map(i =>
-        s"list_min([md5('$i|'||s) FOR s IN sh]) AS m$i").mkString(", ")
-      val bandSelects = (0 until 4).map(j =>
-        s"SELECT doc_id, h, CAST($j AS BIGINT) AS band_idx, " +
-          s"md5(m${2 * j}||m${2 * j + 1}) AS bh FROM mh")
-        .mkString(" UNION ALL ")
-      s"""
-      WITH c AS (
-        SELECT doc_id, md5(nt) AS h,
-               list_distinct([array_to_string(w[i+1:i+5],' ')
-                              FOR i IN range(len(w)-4)]) AS sh
-        FROM (SELECT doc_id, nt, string_split(nt, ' ') AS w
-              FROM (SELECT doc_id,
-                           regexp_replace(trim(lower(text)),'\\s+',' ','g')
-                             AS nt
-                    FROM documents
-                    WHERE doc_id % 7 <> 3)
-              WHERE nt IS NOT NULL)),
-      mh AS (SELECT doc_id, h, $mins FROM c),
-      bands AS ($bandSelects),
-      b AS (SELECT band_idx, bh, COUNT(*) AS m, COUNT(DISTINCT h) AS g
-            FROM bands WHERE bh IS NOT NULL GROUP BY 1, 2)
-      SELECT band_idx, COUNT(*) AS n_buckets,
-             CAST(SUM(CASE WHEN m > 1 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_multi_buckets,
-             CAST(SUM(m * (m - 1) // 2) AS BIGINT) AS n_cand_pairs,
-             CAST(SUM(CASE WHEN g > 1 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_mixed_buckets,
-             MAX(m) AS max_bucket
-      FROM b GROUP BY 1 ORDER BY 1
-      """
-    })
+    Some(bandStatsOracle(" WHERE doc_id % 7 <> 3")))
 
   val registry: Seq[Q] = Seq(q276, q290)
 }

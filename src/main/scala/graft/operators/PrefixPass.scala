@@ -75,8 +75,8 @@ object PrefixPass {
     * RDD-based passes, a cached DataFrame for [[withRowNumber]]),
     * tracked weakly so callers can release the blocks EAGERLY once
     * the pass output is materialized — [[releaseAll]] — instead of
-    * waiting for a harness-wide getPersistentRDDs sweep or
-    * ContextCleaner GC. Weak references: a pass cache that became
+    * waiting for the harness's between-query release
+    * ([[graft.tools.Runner.release]]) or ContextCleaner GC. Weak references: a pass cache that became
     * unreachable is already ContextCleaner's job; the registry never
     * extends a cache's lifetime. */
   private val tracked =

@@ -195,7 +195,7 @@ class ApiServer(spark: SparkSession, modelDir: String, port: Int = 0) {
         .filter(k => k >= 1 && k <= Trainer.NumModels)
     else None
 
-  private def sliceBound(k: Int): Long = foodCount * k / Trainer.NumModels
+  private def sliceBound(k: Int): Long = Trainer.sliceBound(foodCount, k)
 
   /** Model k's slice of food_data, for the distributed path. */
   private def slice(k: Int): DataFrame =

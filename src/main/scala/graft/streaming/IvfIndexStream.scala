@@ -141,7 +141,7 @@ object IvfIndexStream {
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
           s"IVF centroids trained from only $n vectors (< $nCells " +
             "cells) — recall will be degraded until a retrain")
-      picked.write.parquet(tmp.toString)
+      picked.write.mode("append").parquet(tmp.toString)
       true
     }
     // the completeness marker is underscore-prefixed, which Spark's

@@ -208,7 +208,7 @@ object LshIndexStream {
       overwrite = false) { tmp =>
       liveRows(spark, idxDir)
         .select(col("doc_id"), col("h"), col("band_idx"), col("bh"))
-        .write.parquet(tmp.toString)
+        .write.mode("append").parquet(tmp.toString)
       true
     }
     // GC: everything the base supersedes, bounded below by the base

@@ -18,19 +18,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * expose with ONE rename. A crash at any point leaves either the
   * intact predecessor or marker-less debris readers already skip.
   *
-  * Two tiers publish through it, with opposite debris rules:
+  * Two tiers publish through it, with different debris rules. Every
+  * publish sweeps same-target staging leftovers on entry, the debris
+  * of crashed or failed writes (a failed write's straggler tasks can
+  * re-create its staging dir after the failure path deletes it):
   *  - the STREAM tier (ClusterIndexStream versions, LshIndexStream
   *    batches and bases, IvfIndexStream batches, centroids and
   *    generations, their tombstones) has one writer
   *    per target — foreachBatch serializes batch publishes and
   *    write-once targets have a single trainer — so same-target tmp
-  *    leftovers are always crash debris: `deleteDebris = true`, and
-  *    sweeping them on entry is what keeps debris bounded;
+  *    leftovers are always debris: `deleteDebris = true` sweeps them
+  *    at once;
   *  - the WAREHOUSE tier (`LshIndexQueries.loadOrBuildParts`, which
   *    the BPE, unigram, LSH, cluster and BM25 artifacts all go
   *    through) and [[SnapshotManifest]] ids can have RACING
   *    publishers of one target, so another publisher's tmp may be an
-  *    in-flight write: `deleteDebris = false`.
+  *    in-flight write: `deleteDebris = false` sweeps only those older
+  *    than [[Retention.GraceMs]].
   *
   * Two modes:
   *  - `overwrite = true` (versioned-state publish, e.g.
@@ -125,7 +129,7 @@ private[graft] object MarkerProtocol {
     * publication: the stream tier's per-batch write. */
   def replace(df: DataFrame, target: String): Unit = {
     publish(df.sparkSession, target, overwrite = true) { tmp =>
-      df.write.parquet(tmp.toString)
+      df.write.mode("append").parquet(tmp.toString)
       true
     }
     ()
@@ -138,12 +142,15 @@ private[graft] object MarkerProtocol {
     * bump a generation). A callback that throws aborts the same way,
     * then the exception propagates.
     *
-    * @param deleteDebris sweep same-target `.tmp-` leftovers on entry:
-    *   the tier rule in the scaladoc above. A losing racer entering
-    *   publish() with it set would delete the winner's in-flight tmp,
-    *   and the winner's subsequent marker create would resurrect the
-    *   tmp dir and rename a COMPLETE target containing only the marker
-    *   (SnapshotManifestSpec pins the race).
+    * The staging dir exists before the callback runs, and the marker
+    * goes only into a staging dir that still exists: one deleted under
+    * the write fails the publish instead of being re-created holding
+    * only the marker, a COMPLETE target with no parts.
+    *
+    * @param deleteDebris sweep same-target `.tmp-` leftovers on entry
+    *   whatever their age: the tier rule in the scaladoc above. A
+    *   losing racer entering publish() with it set would delete the
+    *   winner's in-flight tmp (SnapshotManifestSpec pins the race).
     * @return true iff THIS call's write became the live target. */
   def publish(spark: SparkSession, target: String,
       overwrite: Boolean, deleteDebris: Boolean = true)(
@@ -152,21 +159,27 @@ private[graft] object MarkerProtocol {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = base.getFileSystem(conf)
     val ok = new Path(base, Marker)
-    if (!overwrite && fs.exists(ok)) return false
     val prefix = s"$Staging${base.getName}-"
-    if (deleteDebris)
-      children(fs, base.getParent)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
-        .foreach(st => fs.delete(st.getPath, true))
+    val now = System.currentTimeMillis()
+    children(fs, base.getParent)
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
+      .filter(st => deleteDebris ||
+        now - st.getModificationTime >= Retention.GraceMs)
+      .foreach(st => fs.delete(st.getPath, true))
+    if (!overwrite && fs.exists(ok)) return false
     val tmp = new Path(base.getParent,
       prefix + java.util.UUID.randomUUID().toString.take(8))
+    val local = NioCheckpointFileManager.isLocalPath(tmp, conf)
+    if (local) Files.createDirectories(NioCheckpointFileManager.local(tmp))
+    else fs.mkdirs(tmp)
     val wrote = try write(tmp)
       catch { case t: Throwable => fs.delete(tmp, true); throw t }
     if (!wrote) { fs.delete(tmp, true); return false }
-    if (NioCheckpointFileManager.isLocalPath(tmp, conf))
-      Files.createFile(Files.createDirectories(
-        NioCheckpointFileManager.local(tmp)).resolve(Marker))
-    else fs.create(new Path(tmp, Marker), true).close()
+    if (local)
+      Files.createFile(NioCheckpointFileManager.local(tmp).resolve(Marker))
+    else if (fs.exists(tmp)) fs.create(new Path(tmp, Marker), true).close()
+    else throw new java.io.FileNotFoundException(
+      s"staging dir $tmp vanished before its marker")
     // expose: withdraw whatever the mode says must yield, one rename
     if (fs.exists(base) && (overwrite || !fs.exists(ok)))
       unpublish(target, conf)

@@ -33,48 +33,32 @@ object ScaleBench {
     val names =
       if (args.length > 1) args.drop(1).toSeq
       else PrefixQueries ++ GatedQueries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // scale-conditional stability tuning — see HarnessConf
-      .config(graft.tools.HarnessConf.tuning(sfDir))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    PeakHeap.install(spark.sparkContext)
-    spark.range(1000000).selectExpr("sum(id)").collect()
-
-    def cleanup(): Unit = {
-      PrefixPass.releaseAll()
-      // blocking, so the next measurement never overlaps the previous
-      // run's draining blocks (see Bench.cleanup)
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      spark.sharedState.cacheManager.clearCache()
-      // deterministic broadcast reclamation (see Bench.cleanup)
-      System.gc()
-    }
-    // returns (min-of-2 seconds, MAX post-GC heap GB across both
-    // runs, the stages live at that worst snapshot, MAX old-gen
-    // after-GC GB)
-    def time(name: String): (Double, Double, String, Double) = {
-      def once(): (Double, Double, String, Double) = {
-        PeakHeap.reset()
-        val t0 = System.nanoTime()
-        graft.SparkEntry.queries(name)(spark, sfDir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        val r = (dt, PeakHeap.postGcPeakGb, PeakHeap.postGcPeakStage,
-          PeakHeap.oldGenPeakGb)
-        cleanup()
-        r
-      }
-      val a = once(); val b = once()
-      val live = if (a._2 >= b._2) a else b
-      (math.min(a._1, b._1), live._2, live._3, math.max(a._4, b._4))
-    }
-
+    val runner = new Runner(sfDir, spark => {
+      PeakHeap.install(spark.sparkContext)
+      spark.range(1000000).selectExpr("sum(id)").collect()
+    })
     names.foreach { name =>
+      val spark = runner.next()
+      // deterministic broadcast reclamation (see Bench's GC policy)
+      def cleanup(): Unit = { Runner.release(spark); System.gc() }
+      // returns (min-of-2 seconds, MAX post-GC heap GB across both
+      // runs, the stages live at that worst snapshot, MAX old-gen
+      // after-GC GB)
+      def time(name: String): (Double, Double, String, Double) = {
+        def once(): (Double, Double, String, Double) = {
+          PeakHeap.reset()
+          val t0 = System.nanoTime()
+          graft.SparkEntry.queries(name)(spark, sfDir).count()
+          val dt = (System.nanoTime() - t0) / 1e9
+          val r = (dt, PeakHeap.postGcPeakGb, PeakHeap.postGcPeakStage,
+            PeakHeap.oldGenPeakGb)
+          cleanup()
+          r
+        }
+        val a = once(); val b = once()
+        val live = if (a._2 >= b._2) a else b
+        (math.min(a._1, b._1), live._2, live._3, math.max(a._4, b._4))
+      }
       if (name == "probe:dedup") { dedupProbe(spark, sfDir); cleanup() }
       else if (name == "probe:recall") { recallProbe(spark, sfDir); cleanup() }
       else if (name == "probe:decontam") {
@@ -83,7 +67,7 @@ object ScaleBench {
         semanticProbe(spark, sfDir); cleanup()
       } else runShapes(spark, sfDir, name, time)
     }
-    spark.stop()
+    runner.stop()
   }
 
   private def runShapes(spark: SparkSession, sfDir: String, name: String,

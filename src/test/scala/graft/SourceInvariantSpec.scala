@@ -11,8 +11,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * on only through `graft.operators.Overlap`, only
   * `graft.streaming.MarkerProtocol` knows the publish marker and the
   * staging name, only `graft.streaming.StreamStart` names a stream's
-  * checkpoint and its checkpoint manager, and the index streams leave
-  * manifest floors, deletes and debris to `graft.streaming.Retention`. */
+  * checkpoint and its checkpoint manager, the index streams leave
+  * manifest floors, deletes and debris to `graft.streaming.Retention`,
+  * and the harness mains take their session and between-query release
+  * from `graft.tools.Runner`, bar the two probes that build their own
+  * (`Prof`, `GenScale`). */
 class SourceInvariantSpec extends AnyFunSuite {
 
   /** (file name, text) of every main source. */
@@ -67,5 +70,13 @@ class SourceInvariantSpec extends AnyFunSuite {
         "SnapshotManifest.live(", "java.io.File"))
       assert(sources.collect { case (f, text)
         if families.contains(f) && text.contains(needle) => f }.isEmpty, needle)
+  }
+
+  test("only Runner releases between queries; only Runner, Prof and GenScale build a session") {
+    assert(sources.exists(_._1 == "Runner.scala"))
+    for (needle <- Seq("getPersistentRDDs", "cacheManager.clearCache", "dropTempView"))
+      assert(offenders(needle, "Runner.scala").isEmpty, needle)
+    assert(offenders("SparkSession.builder",
+      "Runner.scala", "Prof.scala", "GenScale.scala").isEmpty)
   }
 }

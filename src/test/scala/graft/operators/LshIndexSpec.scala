@@ -131,4 +131,27 @@ class LshIndexSpec extends AnyFunSuite {
     assert(!unrelated.exists(s => famZeroBh((s._2, s._3))),
       "an unrelated doc collided with the exact-dup family")
   }
+
+  test("an aged staging dir beside a complete artifact goes with the next loadOrBuildParts") {
+    import java.nio.file.{Files, Paths}
+    val root = graft.TestTmp.dir("graft_wh_debris_")
+    def load() = LshIndexQueries.loadOrBuildParts(spark, s"$root/artifact",
+      Seq("rows"), () => Map("rows" -> spark.range(3).toDF()))
+    LshIndexQueries.resetMemoForTest()
+    assert(load()("rows")().count() == 3)
+    // a failed write's straggler re-created its staging dir an hour
+    // ago, well past the grace; a fresh one may be an in-flight racer
+    val aged = Paths.get(root, ".tmp-artifact-aged0000", "rows")
+    val fresh = Paths.get(root, ".tmp-artifact-fresh000")
+    Files.createDirectories(aged)
+    Files.createDirectories(fresh)
+    Files.setLastModifiedTime(aged.getParent, java.nio.file.attribute.FileTime
+      .fromMillis(System.currentTimeMillis() - 60 * 60 * 1000L))
+    LshIndexQueries.resetMemoForTest()
+    val before = LshIndexQueries.buildCount.get()
+    assert(load()("rows")().count() == 3)
+    assert(LshIndexQueries.buildCount.get() == before, "a complete artifact was rebuilt")
+    assert(!Files.exists(aged.getParent), "aged staging debris survived")
+    assert(Files.exists(fresh), "a fresh staging dir was swept")
+  }
 }

@@ -54,6 +54,24 @@ class SnapshotManifestSpec extends AnyFunSuite {
     assert(!f.exists(debris), "single-writer publish must sweep crash debris")
   }
 
+  test("a staging dir deleted under the write fails the publish and exposes nothing") {
+    for (deleteDebris <- Seq(true, false)) {
+      val root = graft.TestTmp.dir("graft_marker_vanished_")
+      val f = fs(root)
+      val target = s"$root/artifact"
+      intercept[java.io.IOException] {
+        MarkerProtocol.publish(spark, target, overwrite = false,
+          deleteDebris = deleteDebris) { tmp =>
+          f.create(new Path(tmp, "payload"), true).close()
+          f.delete(tmp, true)
+          true
+        }
+      }
+      assert(!f.exists(new Path(target)), s"deleteDebris=$deleteDebris")
+      assert(f.listStatus(new Path(root)).isEmpty, s"deleteDebris=$deleteDebris")
+    }
+  }
+
   test("a marker-complete manifest without entries reads as incomplete everywhere") {
     val root = graft.TestTmp.dir("graft_manifest_noentries_")
     val f = fs(root)
