@@ -106,7 +106,8 @@ object Bench {
       sessions += (((System.nanoTime() - t0) / 1e9, canary(spark)))
     })
     // per-query peak-heap observations for the SCALE.md margin table;
-    // written to a BENCH_HEAP.json sidecar, never the stdout contract.
+    // written to a target/BENCH_HEAP.json sidecar, never the stdout
+    // contract.
     // Fields: (query, post-GC peak GB, peak stage, post-forced-GC
     // floor GB: -1 when the inter-query GC was skipped).
     val heapObs = ArrayBuffer.empty[(String, Double, String, Double)]
@@ -183,7 +184,7 @@ object Bench {
       // "value" and "sf" deliberately AFTER "queries": the harness that
       // captures this output keeps only the last ~2000 characters, so a
       // long per-query map truncates at the HEAD — trailing keys (and the
-      // later queries) survive. Full-precision copy goes to a repo file.
+      // later queries) survive. Full-precision copy: target/BENCH_FULL.json.
       // The canary pair rides in the surviving tail: read it FIRST when
       // judging the totals (idle-box reference ~0.2s).
       s"""{"metric":"total","unit":"sec","queries":$qs,""" +
@@ -214,23 +215,24 @@ object Bench {
         s""""fixture_fp":"$fixtureFp",""" +
         s""""value":${fmt(total, dp)},"sf":"$sfDir"}"""
     }
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get("BENCH_FULL.json"),
-      (line(6) + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
-    try {
-      def esc(s: String): String =
-        s.replace("\\", "\\\\").replace("\"", "\\\"")
-      val heapLines = heapObs.sortBy(-_._2).map { case (n, pk, st, fl) =>
+    // full-precision sidecars go under target/, the build's ignored
+    // output dir: the repo root's BENCH_*.json are committed records
+    def sidecar(name: String, text: String): Unit =
+      try {
+        val dir = java.nio.file.Files.createDirectories(
+          java.nio.file.Paths.get("target"))
+        java.nio.file.Files.write(dir.resolve(name), text.getBytes("UTF-8"))
+      } catch { case _: Throwable => () }
+    sidecar("BENCH_FULL.json", line(6) + "\n")
+    def esc(s: String): String =
+      s.replace("\\", "\\\\").replace("\"", "\\\"")
+    sidecar("BENCH_HEAP.json", heapObs.sortBy(-_._2).map {
+      case (n, pk, st, fl) =>
         f"""{"query":"$n","post_gc_peak_gb":$pk%.2f,""" +
           f""""post_forced_gc_floor_gb":$fl%.2f,""" +
           f""""xmx_gb":${PeakHeap.xmxGb}%.2f,""" +
           s""""peak_stage":"${esc(st)}"}"""
-      }
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get("BENCH_HEAP.json"),
-        (heapLines.mkString("\n") + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+    }.mkString("", "\n", "\n"))
     println(line(3))
     runner.stop()
   }

@@ -252,11 +252,6 @@ object DedupQueries {
     * shingle; scores themselves are exact (computed on the full sets,
     * q51's verify pattern). Pairs of a >cap-replicated cluster beyond
     * its cap lowest members are covered by q45/q46/q51, not here. */
-  /** The capped-posting candidate machinery's two building blocks —
-    * (candidate pairs, full shingle-set table) — exposed to the
-    * SCALE.md candidate-growth probes (tools/ScaleBench `dedup` mode)
-    * so the measurement counts EXACTLY the frames the queries join,
-    * not a re-derivation that could drift. */
   /** The [[MaxShingleDf]]-lowest posting cap as a mergeable TopK
     * aggregate instead of a per-shingle row_number window. Output is
     * IDENTICAL (the MaxShingleDf lowest doc_ids of every shingle —
@@ -396,20 +391,6 @@ object DedupQueries {
     PrunedParts(cand, memb, grp, contentGrain)
   }
 
-  private[graft] def prunedCandParts(docs: DataFrame): (DataFrame, DataFrame) = {
-    val p = prunedParts(docs)
-    // doc-grain shingle table via membership fan-out — no per-doc
-    // shingle recompute (null-text docs carry no row; they never had
-    // postings or candidates). On the DOC-grain branch the membership
-    // join is an identity detour (h IS doc_id rendered as a string —
-    // round 21): read the doc id straight back off the group key.
-    if (!p.contentGrain)
-      (p.cand, p.grp.select(col("doc_id"), col("sh"), col("nsh")))
-    else
-      (p.cand, p.memb.join(p.grp, "h")
-        .select(col("doc_id"), col("sh"), col("nsh")))
-  }
-
   private def prunedPairStats(docs: DataFrame): DataFrame = {
     val p = prunedParts(docs)
     // DOC grain (round 21): h == CAST(doc_id AS STRING) by
@@ -488,15 +469,6 @@ object DedupQueries {
       FROM v WHERE CAST(inter AS DOUBLE) / (n1 + n2 - inter) >= 0.3
     """))
 
-  /** MinHash + LSH near-dup: 8 salted-md5 minhash components, 4 bands
-    * of 2, candidate pairs from band-bucket equality, verified with
-    * exact Jaccard ≥ 0.5 on the shingle sets. The banding join is the
-    * 100 TB path — candidates are generated per-bucket, never all-pairs.
-    */
-  /** q51's LSH index build + band-bucket candidate generation —
-    * (candidate pairs, full shingle-set table) — exposed to the
-    * SCALE.md candidate-growth probes for the same no-drift reason as
-    * [[prunedCandParts]]. */
   /** The q51/q241 shared banding kernel: 8 MinHash components over a
     * `(idCol, sh)` frame, 4 bands of 2, exploded to narrow
     * (idCol, band_idx, bh) rows. Factored exactly like
@@ -601,27 +573,11 @@ object DedupQueries {
       .select(idCols.map(col) :+
         posexplode(col("bands")).as(Seq("band_idx", "bh")): _*)
 
-  private[graft] def lshBandParts(docs: DataFrame): (DataFrame, DataFrame) = {
-    // materialize the shingle-set table, then the band signature
-    // table: every downstream branch (band self-join sides, the two
-    // verify joins) reuses them instead of recomputing the
-    // tokenize->shingle->8x-minhash lineage — the LSH "index build"
-    val c = corpus(docs)
-      .withColumn("sh",
-        TextOps.shingleSet(TextOps.words(col("text")), 5))
-      .localCheckpoint()
-    val ex = minhashBandTableCk(c, "doc_id")
-    val cand = ex.alias("a")
-      .join(ex.alias("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.bh") === col("b.bh") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-      .distinct()
-    val shTab = c.select(col("doc_id"), col("sh"), size(col("sh")).as("nsh"))
-    (cand, shTab)
-  }
-
+  /** MinHash + LSH near-dup: 8 salted-md5 minhash components, 4 bands
+    * of 2, candidate pairs from band-bucket equality, verified with
+    * exact Jaccard ≥ 0.5 on the shingle sets. The banding join is the
+    * 100 TB path — candidates are generated per-bucket, never all-pairs.
+    */
   private val q51 = Q(
     "q51_minhash_lsh",
     (s, dir) => {
@@ -1190,17 +1146,6 @@ object DedupQueries {
       """
     })
 
-  /** The q245 machinery, exposed for ScaleBench's embedded-leak probe
-    * (the lshDecontamParts discipline — the probe measures the exact
-    * scheme the query ships): capped-posting candidates AND
-    * containment-verified flags from arbitrary train/eval frames
-    * (each `(doc_id, text)`). A candidate is any (train, eval) pair
-    * sharing a shingle with both docs inside that shingle's
-    * [[MaxShingleDf]]-lowest posting cap — ANY shared shingle, so a
-    * verbatim extract reaches its source through every one of its
-    * shingles, where q232's MinHash banding needs a whole-set
-    * signature coincidence. Verify is ASYMMETRIC containment
-    * |sh_train ∩ sh_eval| / |sh_eval| >= tau. */
   /** The (doc_id, sh, nsh) 5-gram shingle table of one corpus side,
     * materialized — the shared input of BOTH cross-corpus detector
     * kernels. q232/q245 build their own; q247 builds each side ONCE
@@ -1408,11 +1353,19 @@ object DedupQueries {
       .select(col("doc_id"), col("s"))
   }
 
+  /** The q245 machinery, as [[lshDecontamParts]] is q232's:
+    * capped-posting candidates AND containment-verified flags from
+    * arbitrary train/eval frames (each `(doc_id, text)`). A candidate
+    * is any (train, eval) pair sharing a shingle with both docs inside
+    * that shingle's [[MaxShingleDf]]-lowest posting cap — ANY shared
+    * shingle, so a verbatim extract reaches its source through every
+    * one of its shingles, where q232's MinHash banding needs a
+    * whole-set signature coincidence. Verify is ASYMMETRIC
+    * containment |sh_train ∩ sh_eval| / |sh_eval| >= 0.8. */
   private[graft] def containmentDecontamParts(
-      train: DataFrame, evalDocs: DataFrame, tau: Double = 0.8)
-      : (DataFrame, DataFrame) = {
+      train: DataFrame, evalDocs: DataFrame): (DataFrame, DataFrame) = {
     val (tp, ep) = bothSides(train, evalDocs)
-    containmentDecontamPartsOn(tp, ep, tau)
+    containmentDecontamPartsOn(tp, ep)
   }
 
   /** One side's capped shingle postings off its parts: the grouped
@@ -1438,9 +1391,7 @@ object DedupQueries {
     * as a string); the verify joins run straight at doc-pair grain on
     * numeric keys. */
   private[graft] def containmentDecontamPartsOn(
-      tp: ShingleParts, ep: ShingleParts,
-      tau: Double = 0.8)
-      : (DataFrame, DataFrame) = {
+      tp: ShingleParts, ep: ShingleParts): (DataFrame, DataFrame) = {
     val (exT, exE) = (cappedPostingsOf(tp), cappedPostingsOf(ep))
     val cand = exT.alias("t")
       .join(exE.alias("e"), col("t.s") === col("e.s"))
@@ -1455,7 +1406,7 @@ object DedupQueries {
         .withColumn("containment",
           size(array_intersect(col("sh1"), col("sh2"))).cast(DoubleType) /
             col("n2"))
-        .filter(col("containment") >= tau)
+        .filter(col("containment") >= 0.8)
         .select(col("train_id"), col("eval_id"),
           round(col("containment"), 6).as("containment"))
       return (cand, flagged)
@@ -1472,7 +1423,7 @@ object DedupQueries {
       .withColumn("containment",
         size(array_intersect(col("sh1"), col("sh2"))).cast(DoubleType) /
           col("n2"))
-      .filter(col("containment") >= tau)
+      .filter(col("containment") >= 0.8)
       .select(col("ht"), col("he"),
         round(col("containment"), 6).as("containment"))
     val flagged = candH.join(cstats, Seq("ht", "he"))
@@ -1494,8 +1445,8 @@ object DedupQueries {
     * eval probes are planted as exactly that miss case: every 50th
     * doc's MIDDLE THIRD (id negated — disjoint id space at any
     * scale), so jac ≈ 1/3 for the true source pair while containment
-    * = 1.0; ScaleBench probe:decontam measures both schemes on these
-    * plants side by side.
+    * = 1.0; SCALE.md "Round-12 new-query scaling" has both schemes
+    * measured on embedded plants side by side.
     *
     * Scale: posting lists are capped at [[MaxShingleDf]] per shingle
     * per side (q50/q112's bound — cap² candidate rows per shingle,
@@ -2205,20 +2156,18 @@ object DedupQueries {
     * exchange; past it (1.25M+ eval docs) the join falls back to
     * shuffle. The verify joins stay shuffled: their small side (the
     * candidate list) is runtime-sized, which is AQE's job. */
-  /** The q232 machinery, exposed for ScaleBench's planted-leak recall
-    * probe: banded candidates AND verified flags from arbitrary
-    * train/eval frames (each `(doc_id, text)`), so the probe measures
-    * the exact scheme the query ships — 5-shingles, 8 MinHash rows in
-    * `bands` bands of `rowsPerBand`, Jaccard ≥ `tau` verify — never a
-    * reimplementation that could drift. Returns (candidates, flagged):
+  /** The q232 machinery over arbitrary train/eval frames (each
+    * `(doc_id, text)`): banded candidates AND verified flags from the
+    * scheme the query ships — 5-shingles, 8 MinHash rows in 8 bands of
+    * 1 (the round-11 retune, see q232), Jaccard ≥ 0.5 verify. A probe
+    * measuring q232 calls this, never a reimplementation that could
+    * drift (SCALE.md round 11). Returns (candidates, flagged):
     * candidates = distinct (train_id, eval_id) band collisions,
     * flagged = the verified subset with exact Jaccard. */
   private[graft] def lshDecontamParts(
-      train: DataFrame, evalDocs: DataFrame,
-      bands: Int = 4, rowsPerBand: Int = 2, tau: Double = 0.5)
-      : (DataFrame, DataFrame) = {
+      train: DataFrame, evalDocs: DataFrame): (DataFrame, DataFrame) = {
     val (tp, ep) = bothSides(train, evalDocs)
-    lshDecontamPartsOn(tp, ep, bands, rowsPerBand, tau)
+    lshDecontamPartsOn(tp, ep)
   }
 
   /** Both sides' [[decontamShingleParts]] built CONCURRENTLY (round 21,
@@ -2246,9 +2195,7 @@ object DedupQueries {
     * the membership joins — identical rows to the old doc-grain
     * plan. */
   private[graft] def lshDecontamPartsOn(
-      tp: ShingleParts, ep: ShingleParts,
-      bands: Int, rowsPerBand: Int, tau: Double)
-      : (DataFrame, DataFrame) = {
+      tp: ShingleParts, ep: ShingleParts): (DataFrame, DataFrame) = {
     val (tg, eg) = (tp.grp, ep.grp)
     // concat, NOT concat_ws: a content with < 5 words has an empty
     // shingle set and NULL minhash components, and concat_ws would
@@ -2261,16 +2208,14 @@ object DedupQueries {
     // round 21: the signature pass is widened + checkpointed per side
     // (minhashSigTable discipline) — the lazy form re-evaluated the
     // ms tree inside the join's inferred `isnotnull(bh)`/size filters
-    // up to `bands`× per row, single-task (measured 2.4–2.6 s on the
+    // up to 8× per row, single-task (measured 2.4–2.6 s on the
     // train side at sf0.1); the checkpoint computes it once, parallel,
     // and is the pushdown barrier
     def bandsOf(c: DataFrame): DataFrame = {
       val sig = widenCk(c.select(col("h"), col("sh")), Seq(col("h")))
-        .withColumn("ms", graft.plans.MinHashSig.minhashSig(
-          col("sh"), bands * rowsPerBand))
-        .withColumn("bands", array((0 until bands).map(j =>
-          md5(concat((0 until rowsPerBand).map(r =>
-            element_at(col("ms"), rowsPerBand * j + r + 1)): _*))): _*))
+        .withColumn("ms", graft.plans.MinHashSig.minhashSig(col("sh"), 8))
+        .withColumn("bands", array((0 until 8).map(j =>
+          md5(concat(element_at(col("ms"), j + 1)))): _*))
         .select(col("h"), col("bands"))
         .localCheckpoint()
       sig.select(col("h"),
@@ -2284,9 +2229,9 @@ object DedupQueries {
     }
     // measurement is free: |grp| rode the eval side's checkpoint job
     // (ShingleParts.nGroups, round 22 — the old form paid a separate
-    // count() job here); bands are exactly `bands` rows per eval
+    // count() job here); bands are exactly 8 rows per eval
     // CONTENT — an even smaller broadcast than the old per-doc table
-    val bandsE = GatedBroadcast(bandsE0, ep.nGroups * bands)
+    val bandsE = GatedBroadcast(bandsE0, ep.nGroups * 8)
     val candG = bandsT.alias("t")
       .join(bandsE.alias("e"),
         col("t.band_idx") === col("e.band_idx") &&
@@ -2302,7 +2247,7 @@ object DedupQueries {
       .withColumn("inter", size(array_intersect(col("sh1"), col("sh2"))))
       .withColumn("jaccard",
         col("inter").cast(DoubleType) / (col("n1") + col("n2") - col("inter")))
-      .filter(col("jaccard") >= tau)
+      .filter(col("jaccard") >= 0.5)
       .select(col("ht"), col("he"), round(col("jaccard"), 6).as("jac"))
     // fan back to doc grain. On a DOC-grain side h is the doc id
     // rendered as a string (round 22): the membership join is an
@@ -2335,9 +2280,10 @@ object DedupQueries {
       val evalDocs = docs.filter(col("doc_id") % 50 === 0)
         .select((-col("doc_id") - 1).as("doc_id"),
           array_join(slice(w, lit(1), size(w) - 1), " ").as("text"))
-      // 8 bands x 1 row (round-11 retune, measured): the original
-      // 4x2 scheme's S-curve midpoint (1/4)^(1/2) = 0.5 sits exactly
-      // AT the tau=0.5 verify threshold, so it silently lost 10-25%
+      // lshDecontamParts bands 8 x 1 row (round-11 retune,
+      // measured): the original 4x2 scheme's S-curve midpoint
+      // (1/4)^(1/2) = 0.5 sits exactly AT the tau=0.5 verify
+      // threshold, so it silently lost 10-25%
       // of TRUE >=0.5-Jaccard leaks in the planted-leak probe (118
       // vs 132 flags at edit distance 3, 84 vs 98 at 4 — identical
       // at x1/x10/x100). 8x1's midpoint is 1/8, recall at tau is
@@ -2347,7 +2293,7 @@ object DedupQueries {
       // poisons an eval — so the banding belongs well BELOW the
       // verify threshold, which does the precision work. SCALE.md
       // round-11 records the full table.
-      lshDecontamParts(docs, evalDocs, bands = 8, rowsPerBand = 1)._2
+      lshDecontamParts(docs, evalDocs)._2
     },
     Some {
       val w = """string_split(regexp_replace(trim(lower(text)),'\s+',' ','g'),' ')"""
@@ -2461,8 +2407,7 @@ object DedupQueries {
             transform(col("embedding"), x => x.cast(DoubleType)).as("v")),
           para.select(col("eval_id"), col("v")))._2)
         val (tp, ep) = (trainF.join, evalF.join)
-        val lsh = lshDecontamPartsOn(tp, ep,
-          bands = 8, rowsPerBand = 1, tau = 0.5)._2
+        val lsh = lshDecontamPartsOn(tp, ep)._2
         val con = containmentDecontamPartsOn(tp, ep)._2
         (lsh, con, semF.join)
       }

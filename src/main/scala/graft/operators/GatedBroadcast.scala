@@ -23,9 +23,7 @@ import org.apache.spark.sql.functions.broadcast
   * comfortably inside the ceiling and executor memory for key-only
   * tables; callers broadcasting wider rows should lower it via the
   * `graft.broadcast.rowLimit` conf. Setting the conf to 0 disables
-  * the hint entirely — specs use that to pin the shuffled path. The
-  * pre-helper `graft.bfs.broadcastRowLimit` key is honored as a
-  * fallback so existing sessions/specs keep working.
+  * the hint entirely — specs use that to pin the shuffled path.
   *
   * Call sites and the constant-bounded-vs-fact-scaled classification
   * of every other `broadcast(` in the repo are audited in PLANS.md
@@ -33,15 +31,11 @@ import org.apache.spark.sql.functions.broadcast
   */
 object GatedBroadcast {
   val ConfKey = "graft.broadcast.rowLimit"
-  private val LegacyConfKey = "graft.bfs.broadcastRowLimit"
   val DefaultRowLimit: Long = 5L * 1000 * 1000
 
   /** The session's effective row limit for gated broadcasts. */
-  def rowLimit(df: DataFrame): Long = {
-    val conf = df.sparkSession.conf
-    conf.get(ConfKey,
-      conf.get(LegacyConfKey, DefaultRowLimit.toString)).toLong
-  }
+  def rowLimit(df: DataFrame): Long =
+    df.sparkSession.conf.get(ConfKey, DefaultRowLimit.toString).toLong
 
   /** Hint `broadcast(df)` iff `measuredRows` (a count the caller has
     * already paid for) is within the session's row limit; otherwise

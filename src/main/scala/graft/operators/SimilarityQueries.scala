@@ -1031,11 +1031,10 @@ object SimilarityQueries {
     * sets — not just verdicts — agree exactly). */
   private[graft] val ProbeMasks: Seq[Long] = 0L +: (0 until 8).map(1L << _)
 
-  /** The q248 machinery, exposed for q247's unified verdict and
-    * ScaleBench's paraphrase probe (the lshDecontamParts /
-    * containmentDecontamParts discipline — the verdict and the probe
-    * run the exact scheme the query ships). `train` is `(vec_id, v)`,
-    * `evalVecs` is `(eval_id, v)`, both double[64]. Returns
+  /** The q248 machinery, exposed for q247's unified verdict (the
+    * lshDecontamParts / containmentDecontamParts discipline — the
+    * verdict runs the exact scheme the query ships). `train` is
+    * `(vec_id, v)`, `evalVecs` is `(eval_id, v)`, both double[64]. Returns
     * (candidates, flagged): candidates from 8-hyperplane LSH bucket
     * equality with 1-bit eval-side multiprobe, flagged = the subset
     * with exact cosine >= `tau`. Candidates are per-bucket, never

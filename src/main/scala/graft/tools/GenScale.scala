@@ -33,7 +33,7 @@ object GenScale {
     // optional 4th arg: regenerate only the named tables
     val only = args.drop(3).toSet
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+      .master(s"local[${Runner.cpus}]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

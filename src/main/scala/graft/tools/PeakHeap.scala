@@ -7,31 +7,22 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerStageSubmitted}
 
-/** Sampled peak-heap tracker with stage attribution, for the
+/** Post-GC peak-heap tracker with stage attribution, for the
   * SCALE.md ×100 heap-margin table (round-14 advice #1).
   *
-  * A daemon thread samples the JVM heap's used bytes every 20 ms; a
-  * SparkListener keeps the set of currently-running stages, so each
-  * new peak records WHICH stages were live when it happened. In
-  * local[*] the driver and executors share one heap, so this single
-  * number IS the process's OOM margin against -Xmx.
-  *
-  * The sampled value includes not-yet-collected garbage (a high
-  * reading can be a healthy young gen about to be collected), so it
-  * over-approximates live set — the right direction for a margin
-  * check: a query whose SAMPLED peak stays well under Xmx can't have
-  * OOMed on live data.
+  * GC-completion notifications carry the heap surviving each
+  * collection; a SparkListener keeps the set of currently-running
+  * stages, so each new peak records WHICH stages were live when it
+  * happened. In local[*] the driver and executors share one heap, so
+  * this single number IS the process's OOM margin against -Xmx.
   */
 object PeakHeap {
   private val active =
     new java.util.concurrent.ConcurrentHashMap[Int, String]()
-  // Peak updates arrive from two threads (the 20 ms sampler and the
-  // GC-notification dispatcher); all check-then-act updates and
-  // reset() go through this lock so no peak is lost to a concurrent
-  // write and a reset can't interleave with a half-applied update.
+  // Peak updates arrive on the GC-notification dispatcher thread;
+  // they and reset() go through this lock so a reset can't interleave
+  // with a half-applied update.
   private val lock = new Object
-  private var peakBytes = 0L
-  private var atPeak: Seq[String] = Nil
   private var postGcPeakBytes = 0L
   private var atPostGcPeak: Seq[String] = Nil
   private var oldGenPeakBytes = 0L
@@ -105,8 +96,8 @@ object PeakHeap {
     }
   }
 
-  /** Idempotent per SparkContext (Bench recycles contexts); starts the
-    * sampler thread once per JVM. */
+  /** Idempotent per SparkContext (Bench recycles contexts); subscribes
+    * to GC notifications once per JVM. */
   def install(sc: SparkContext): Unit = synchronized {
     if (installedOn != sc.applicationId) {
       sc.addSparkListener(listener)
@@ -116,27 +107,10 @@ object PeakHeap {
     if (!started) {
       started = true
       subscribeGc()
-      val t = new Thread(() => {
-        val mx = ManagementFactory.getMemoryMXBean
-        while (true) {
-          val used = mx.getHeapMemoryUsage.getUsed
-          val stages = active.values.asScala.toSeq.sorted.take(3)
-          lock.synchronized {
-            if (used > peakBytes) {
-              peakBytes = used
-              atPeak = stages
-            }
-          }
-          Thread.sleep(20)
-        }
-      }, "graft-peakheap-sampler")
-      t.setDaemon(true)
-      t.start()
     }
   }
 
   def reset(): Unit = lock.synchronized {
-    peakBytes = 0L; atPeak = Nil
     postGcPeakBytes = 0L; atPostGcPeak = Nil
     oldGenPeakBytes = 0L
     resetUptimeMs = ManagementFactory.getRuntimeMXBean.getUptime
@@ -145,14 +119,10 @@ object PeakHeap {
     * (still an over-estimate of live: mixed collections reclaim old
     * regions incrementally). */
   def oldGenPeakGb: Double = lock.synchronized(oldGenPeakBytes / 1e9)
-  def peakGb: Double = lock.synchronized(peakBytes / 1e9)
   /** Max heap surviving any GC during the window — the live-footprint
     * (OOM-margin) metric. 0.0 when no GC ran in the window (footprint
     * never even forced a collection). */
   def postGcPeakGb: Double = lock.synchronized(postGcPeakBytes / 1e9)
-  /** The stages live at the moment of the peak sample ("" when the
-    * peak fell between stages — driver-side work). */
-  def peakStage: String = lock.synchronized(atPeak.mkString(" | "))
   /** The stages live at the worst post-GC snapshot. */
   def postGcPeakStage: String =
     lock.synchronized(atPostGcPeak.mkString(" | "))

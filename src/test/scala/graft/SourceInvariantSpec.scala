@@ -13,9 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * staging name, only `graft.streaming.StreamStart` names a stream's
   * checkpoint and its checkpoint manager, the index streams leave
   * manifest floors, deletes and debris to `graft.streaming.Retention`,
-  * and the harness mains take their session and between-query release
-  * from `graft.tools.Runner`, bar the two probes that build their own
-  * (`Prof`, `GenScale`). */
+  * the harness mains take their session and between-query release
+  * from `graft.tools.Runner`, bar the fixture generator `GenScale`,
+  * which builds its own, and main code reads three env names: the two
+  * deployment settings, in `Runner` only, and the dedup grain pin. */
 class SourceInvariantSpec extends AnyFunSuite {
 
   /** (file name, text) of every main source. */
@@ -72,11 +73,25 @@ class SourceInvariantSpec extends AnyFunSuite {
         if families.contains(f) && text.contains(needle) => f }.isEmpty, needle)
   }
 
-  test("only Runner releases between queries; only Runner, Prof and GenScale build a session") {
+  test("only Runner releases between queries; Runner and GenScale build sessions") {
     assert(sources.exists(_._1 == "Runner.scala"))
     for (needle <- Seq("getPersistentRDDs", "cacheManager.clearCache", "dropTempView"))
       assert(offenders(needle, "Runner.scala").isEmpty, needle)
     assert(offenders("SparkSession.builder",
-      "Runner.scala", "Prof.scala", "GenScale.scala").isEmpty)
+      "Runner.scala", "GenScale.scala").isEmpty)
+  }
+
+  test("main code reads three env names, the deployment two only in Runner") {
+    val anyRead = """sys\.env|getenv""".r
+    val read = """(?:sys\.env|System\.getenv)(?:\.(?:get|getOrElse|contains))?\(\s*"(\w+)"""".r
+    // every read names its variable literally, so the list below is whole
+    for ((f, text) <- sources)
+      assert(anyRead.findAllIn(text).size == read.findAllIn(text).size, f)
+    val reads = sources.flatMap { case (f, text) =>
+      read.findAllMatchIn(text).map(m => m.group(1) -> f) }
+    assert(reads.map(_._1).toSet ==
+      Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR", "GRAFT_GRAIN_FORCE"))
+    assert(reads.collect { case (n, f) if n.startsWith("SPARK_GRAFT_") => f }
+      .toSet == Set("Runner.scala"))
   }
 }

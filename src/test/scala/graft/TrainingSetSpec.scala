@@ -465,7 +465,7 @@ class TrainingSetSpec extends AnyFunSuite {
     // << 0.5): the shipped q232 scheme must NOT flag it (tau does the
     // work), the q245 containment machinery must, at exactly 1.0
     val lsh = graft.operators.DedupQueries
-      .lshDecontamParts(train, evalD, bands = 8, rowsPerBand = 1)._2
+      .lshDecontamParts(train, evalD)._2
       .collect()
     assert(lsh.isEmpty, "Jaccard verify cannot pass an embedded leak")
     val cont = graft.operators.DedupQueries

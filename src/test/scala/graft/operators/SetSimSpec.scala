@@ -133,8 +133,7 @@ class SetSimSpec extends AnyFunSuite {
       val con = DedupQueries.containmentDecontamParts(train, evalDocs)._2
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .toSet
-      val lsh = DedupQueries.lshDecontamParts(train, evalDocs,
-        bands = 8, rowsPerBand = 1)._2
+      val lsh = DedupQueries.lshDecontamParts(train, evalDocs)._2
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .toSet
       (con, lsh)

@@ -63,7 +63,7 @@ class TemporalGraphSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val abtKey = "spark.sql.autoBroadcastJoinThreshold"
     val oldAbt = spark.conf.get(abtKey)
-    spark.conf.set("graft.bfs.broadcastRowLimit", "0")
+    spark.conf.set(GatedBroadcast.ConfKey, "0")
     spark.conf.set(abtKey, "-1")
     try {
       // with the hint gated off AND auto-broadcast disabled, every
@@ -73,7 +73,7 @@ class TemporalGraphSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got == expected && got.nonEmpty)
     } finally {
-      spark.conf.unset("graft.bfs.broadcastRowLimit")
+      spark.conf.unset(GatedBroadcast.ConfKey)
       spark.conf.set(abtKey, oldAbt)
     }
   }
